@@ -141,10 +141,12 @@ object MvRewrite {
       }
 
     /** O(registered MVs) candidate probe by the scan's first root path
-      * — GraftTable reads list explicit files, so every root lives
-      * directly under the table directory. No commit-log IO here. */
+      * — GraftTable reads plan through a `LogFileIndex`, whose root paths
+      * are the snapshot's qualified file URIs, so every root lives under
+      * the table directory. `toUri` keeps a path with a space parseable
+      * by `norm`. No commit-log IO here. */
     private def candidate(fs: HadoopFsRelation): Option[MvEntry] =
-      fs.location.rootPaths.headOption.map(p => norm(p.toString)).flatMap {
+      fs.location.rootPaths.headOption.map(p => norm(p.toUri.toString)).flatMap {
         root =>
           registry.values.find { e =>
             val p = norm(e.source.path)
@@ -231,9 +233,10 @@ object MvRewrite {
             // stale view → rewrite silently disabled, never wrong rows
             if e.view.properties.get("graft.mv.appliedVersion")
               .exists(_.toLong == cur)
-            // file-set-exact: a time-travel read, a partial-file read,
-            // or a foreign table that merely lives under the source dir
-            // all mismatch and stay untouched
+            // file-set-exact over the index's qualified file URIs: a
+            // time-travel read, a partial-file read, or a foreign table
+            // that merely lives under the source dir all mismatch and
+            // stay untouched
             if fs.location.inputFiles.map(norm).toSet == snapshotAt(e, cur)
             out <- rewritten(agg, e)
           } yield out).getOrElse(agg)

@@ -45,9 +45,11 @@ final case class Commit(
   *   <path>/_changes/v42/part-*.parquet       // optional change feed
   * }}}
   *
-  * Scale design: the log stores *file lists*, so a snapshot read is
-  * `spark.read.parquet(files: _*)` — pruning/pushdown work unchanged, and
-  * DML rewrites only the files that contain matched rows (see MergeOps).
+  * Scale design: the log stores *file lists*, so a snapshot read plans
+  * from the log alone — a [[LogFileIndex]] over the live files, with no
+  * storage listing and no Spark job — while parquet pruning/pushdown work
+  * unchanged, and DML rewrites only the files that contain matched rows
+  * (see MergeOps).
   * Commits are atomic single-file renames; concurrent writers race on the
   * version filename and the loser retries (`Concurrency.retry`), matching
   * the reference's retry-merge helper (`HF/deltahelpers.py:132-172`).
@@ -176,25 +178,38 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * commit dirs (CONFLICTING_DIRECTORY_STRUCTURES) and would resolve the
     * columns to null under a raw `spark.read.parquet(files)`. Every
     * internal reader (DML rewrites, CDF re-reads, streams) goes through
-    * here; recursiveFileLookup disables inference on the `__part_k=v`
-    * segments. */
+    * here, and plans from the file list alone: a [[LogFileIndex]] over
+    * `files` with an empty partition schema, so Spark neither lists the
+    * paths again nor infers partitions from the `__part_k=v` segments. */
   private[graft] def readFiles(files: Seq[String], readSchema: StructType = null): DataFrame =
-    readFilesWithPos(files, readSchema).drop(DvFileCol, DvPosCol)
+    readSnapshot(files, readSchema, Long.MaxValue, keepPos = false)
 
   /** As readFiles, but keeps the (__dv_file, __dv_pos) provenance columns
     * — the delete path records them into deletion vectors. Live DVs (at
-    * the latest version) are already anti-joined away, so callers never
-    * see deleted rows. */
+    * `dvVersion`, default the latest) are already anti-joined away, so
+    * callers never see deleted rows. */
   private[graft] def readFilesWithPos(files: Seq[String],
-      readSchema: StructType = null, dvVersion: Long = Long.MaxValue): DataFrame = {
+      readSchema: StructType = null, dvVersion: Long = Long.MaxValue): DataFrame =
+    readSnapshot(files, readSchema, dvVersion, keepPos = true)
+
+  /** Provenance columns are scanned only when the caller keeps them or
+    * live DVs need them for the anti-join — otherwise a plain read would
+    * carry `_metadata.file_path`/`row_index` into the scan and drop them
+    * after. */
+  private def readSnapshot(files: Seq[String], readSchema: StructType,
+      dvVersion: Long, keepPos: Boolean): DataFrame = {
     val s = Option(readSchema).getOrElse(schemaAt())
     if (files.isEmpty) {
-      val withPos = s.add(DvFileCol, StringType).add(DvPosCol, LongType)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withPos)
+      val out = if (keepPos) StructType(s.fields ++ DvSchema.fields) else s
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out)
     }
-    def withPos(df: DataFrame): DataFrame = df
-      .withColumn(DvFileCol, col("_metadata.file_path"))
-      .withColumn(DvPosCol, col("_metadata.row_index"))
+    val dv = dvAt(dvVersion)
+    val posCols = if (keepPos || dv.nonEmpty) Seq(DvFileCol, DvPosCol) else Nil
+    def withPos(df: DataFrame): DataFrame =
+      if (posCols.isEmpty) df
+      else df
+        .withColumn(DvFileCol, col("_metadata.file_path"))
+        .withColumn(DvPosCol, col("_metadata.row_index"))
     // Legacy-layout detection: files written before the __part_ scheme use
     // bare Hive `k=v` segments and do NOT store the partition column in
     // the parquet data — they need per-write-root partition inference
@@ -224,26 +239,26 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       if (parts.isEmpty) (Nil, files) else files.partition(legacyKeyIdx(_) >= 0)
     val modernDf: Option[DataFrame] =
       if (modern.isEmpty) None
-      else Some(withPos(
-        spark.read.schema(s).option("recursiveFileLookup", "true").parquet(modern: _*)))
+      else Some(withPos(LogFileIndex.read(spark, modern, s)))
     val legacyDfs: Seq[DataFrame] = legacy.groupBy { abs =>
       // same normalization as legacyKeyIdx — the index is positional
       val p = Paths.get(abs).toAbsolutePath.normalize
       p.getRoot.resolve(p.subpath(0, legacyKeyIdx(abs))).toString
     }.toSeq.map { case (root, fs) =>
       withPos(spark.read.schema(s).option("basePath", root).parquet(fs: _*))
-        .select((s.fieldNames.toSeq :+ DvFileCol :+ DvPosCol).map(col): _*)
+        .select((s.fieldNames.toSeq ++ posCols).map(col): _*)
     }
     val df = (modernDf.toSeq ++ legacyDfs).reduce(_ unionByName _)
-    val dv = dvAt(dvVersion)
     if (dv.isEmpty) df
-    else df.join(spark.read.parquet(dv: _*), Seq(DvFileCol, DvPosCol), "left_anti")
+    else {
+      val live = df.join(LogFileIndex.read(spark, dv, DvSchema), posCols, "left_anti")
+      if (keepPos) live else live.drop(posCols: _*)
+    }
   }
 
   /** Snapshot read (optionally `VERSION AS OF`). */
   def read(versionAsOf: Long = Long.MaxValue): DataFrame =
-    readFilesWithPos(filesAt(versionAsOf), schemaAt(versionAsOf), versionAsOf)
-      .drop(DvFileCol, DvPosCol)
+    readSnapshot(filesAt(versionAsOf), schemaAt(versionAsOf), versionAsOf, keepPos = false)
 
   /** DESCRIBE HISTORY equivalent (`DP/Step 1:235-239`). */
   def history: DataFrame = {
@@ -769,6 +784,10 @@ object GraftTable {
   /** Column names for deletion-vector provenance (file URI + row index). */
   private[graft] val DvFileCol = "__dv_file"
   private[graft] val DvPosCol = "__dv_pos"
+
+  /** Schema of a deletion-vector sidecar file. */
+  private[graft] val DvSchema: StructType =
+    new StructType().add(DvFileCol, StringType).add(DvPosCol, LongType)
 
   /** Loan-pattern directory listing/walk — the returned streams hold an
     * open directory FD until closed, which leaks under the idiomatic

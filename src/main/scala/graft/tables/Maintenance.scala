@@ -69,7 +69,7 @@ object Maintenance {
     // both sides to plain absolute paths before comparing
     val rewrittenDf = rewritten
       .map(p => Paths.get(p).toAbsolutePath.normalize.toString).toDF("__rm")
-    val dvRows = spark.read.parquet(dvFiles: _*)
+    val dvRows = LogFileIndex.read(spark, dvFiles, GraftTable.DvSchema)
     val surviving = dvRows.join(broadcast(rewrittenDf),
       regexp_replace(col(GraftTable.DvFileCol), "^file:/+", "/") === col("__rm"),
       "left_anti")

@@ -28,7 +28,10 @@ import graft.tables.GraftTable
   * index + within batch, cost ∝ batch + matched postings, never corpus
   * text), drop/quarantine the batch's dups, then `append(t, survivors)`
   * — index maintenance is an append of the new docs' postings, never a
-  * rebuild.
+  * rebuild. Each append adds up to `numBands` files, but probe planning
+  * does not grow with them: the probe's read plans from the commit log's
+  * file list ([[graft.tables.LogFileIndex]]), with no listing job over
+  * the index's files.
   */
 object DedupIndex {
 

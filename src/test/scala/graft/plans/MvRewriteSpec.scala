@@ -171,4 +171,12 @@ class MvRewriteSpec extends SparkTestBase
     assert(!planOf(unrelated).contains("mv4-view"),
       "a different scan (raw testdata) must not rewrite")
   }
+
+  test("a source under a path with a space rewrites: the scan's URIs decode to its files") {
+    val (src, _) = fixture("mv sp")
+    val q = src.read().groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
+    val p = planOf(q)
+    assert(p.contains("mv sp-view") && !p.contains("mv sp-src"), s"must scan the view:\n$p")
+    assert(q.agg(sum("n")).head().getLong(0) == src.read().count())
+  }
 }
