@@ -21,9 +21,11 @@ trait QueryBatch {
   * between queries, Verify at startup) can wipe exactly this tree.
   * Previously each batch had its own copy of the literal — moving the
   * root meant editing them all, and a missed copy silently escaped the
-  * cleanup. */
+  * cleanup. The root resolves against the working directory, so each
+  * checkout writes (and wipes) only its own `target/qtmp`. */
 object Scratch {
-  val Root = "/root/repo/target/qtmp"
+  val Root: String =
+    java.nio.file.Paths.get("target", "qtmp").toAbsolutePath.toString
 
   /** Fresh per-call dir path (not created; writers create as needed). */
   def dir(tag: String): String = {

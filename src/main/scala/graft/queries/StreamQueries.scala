@@ -514,10 +514,10 @@ object StreamQueries extends QueryBatch {
     * the probe against the maintained index must kill every survivor
     * (each now collides with its own indexed copy at jaccard 1).
     *
-    * Production-loop maintenance: per-batch appends accrete one file set
-    * per micro-batch; periodic `Maintenance.optimize` of the index table
-    * compacts them band-partition-aware (output files never straddle
-    * band dirs) with probe results unchanged — pinned by
+    * Production-loop maintenance: per-batch appends accrete the batch's
+    * posting files (one for a one-split batch); periodic
+    * `Maintenance.optimize` of the index table compacts them with probe
+    * results unchanged — pinned by
     * DedupIndexSpec's "ingest-loop compaction" case rather than run
     * in-gate, where it would only re-measure the optimizer. */
   private val q218 = GQ(

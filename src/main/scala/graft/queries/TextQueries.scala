@@ -386,7 +386,7 @@ object TextQueries extends QueryBatch {
   )
 
   /** Persisted near-dup index (`DedupIndex`): corpus shingle postings as
-    * a band-partitioned GraftTable with the shingle size in
+    * an unpartitioned GraftTable with the shingle size in
     * TBLPROPERTIES, REOPENED from storage and probed by the same mutated
     * ingest batch — the production form of q209, where corpus text is
     * shingled once at build time and never re-read per batch. Must equal

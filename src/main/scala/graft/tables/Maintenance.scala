@@ -150,8 +150,8 @@ object Maintenance {
     * selects the Z-curve layout for 2-3 numeric columns (on by default;
     * Bench's pruning experiment uses false as the comparison baseline).
     *
-    * `partitionCols` (Hive-layout partition columns, e.g. the dedup
-    * index's `__band`) lead the clustering key when present: the write
+    * `partitionCols` (Hive-layout partition columns, e.g. the ANN
+    * index's `cell`) lead the clustering key when present: the write
     * splits the directory tree by those columns, so output tasks must
     * hold CONTIGUOUS partition-column runs or every task writes a file
     * into every partition dir — a tasks × partitions tiny-file explosion

@@ -13,50 +13,42 @@ import graft.tables.GraftTable
   * appended per ingest"), in the same build-once/query-many pattern as
   * the vector indexes ([[graft.vector.AnnIndex]], [[graft.vector.PqIndex]]).
   *
-  * Layout: rows are partitioned by a `__band = shingle mod numBands`
-  * column, so the index writes as `numBands` independent directory
-  * partitions — co-located for band-wise joins and parallel appends
-  * (xxhash64 shingles are uniform, so bands are balanced by
-  * construction; value-based file skipping can't help a probe here for
-  * the same reason, and the probe instead bounds cost by the one-sided
-  * prefix filter). The shingle size `n` rides TBLPROPERTIES: a probe
-  * MUST shingle its batch identically or Jaccard values are garbage, so
-  * [[dedupBatch]] recovers n from the table rather than trusting the
-  * caller to repeat it.
+  * Layout: one unpartitioned posting table. No reader needs a finer
+  * layout: the probe joins on `shingle`, and xxhash64 shingles are
+  * uniform, so value-based file skipping cannot help it (the probe bounds
+  * its cost by the one-sided prefix filter instead). The shingle size `n`
+  * rides TBLPROPERTIES: a probe MUST shingle its batch identically or
+  * Jaccard values are garbage, so [[dedupBatch]] recovers n from the
+  * table rather than trusting the caller to repeat it.
   *
   * Ingest loop at scale: `pairs = dedupBatch(t, batch)` (exact pairs vs
   * index + within batch, cost ∝ batch + matched postings, never corpus
   * text), drop/quarantine the batch's dups, then `append(t, survivors)`
   * — index maintenance is an append of the new docs' postings, never a
-  * rebuild. Each append adds up to `numBands` files, but probe planning
-  * does not grow with them: the probe's read plans from the commit log's
+  * rebuild. An append writes the batch's postings at the batch's own
+  * parallelism (one file for a one-split batch), and probe planning does
+  * not grow with the files: the probe's read plans from the commit log's
   * file list ([[graft.tables.LogFileIndex]]), with no listing job over
-  * the index's files.
+  * the index's files. Periodic `Maintenance.optimize` compacts them.
+  *
+  * Indexes written with the earlier `__band`-partitioned layout keep
+  * working unchanged: an append null-fills their `__band` column through
+  * the table's schema evolution, and every reader selects
+  * `(doc_id, shingle)` only.
   */
 object DedupIndex {
 
   private val NProp = "graft.dedup.n"
-  private val BandsProp = "graft.dedup.bands"
 
-  private def grams(docs: DataFrame, n: Int, numBands: Int,
-      idCol: String, textCol: String): DataFrame =
-    DedupOps.shingleTable(docs, n, idCol, textCol)
-      .withColumn("__band", pmod(col("shingle"), lit(numBands.toLong)).cast("int"))
-      // cluster each band into one writer BEFORE the partitioned write:
-      // without this, every input split writes a file into every band
-      // directory (splits × bands tiny files), and a one-split input
-      // serializes the whole shingle+write on one core. One shuffle of
-      // 12-byte rows buys exactly numBands well-sized files and
-      // numBands-way write parallelism.
-      .repartition(numBands, col("__band"))
-
-  /** Shingle the corpus once and persist its postings. */
-  def build(docs: DataFrame, path: String, n: Int, numBands: Int = 32,
+  /** Shingle the corpus once and persist its postings. One shuffle on
+    * `shingle` spreads the shingling and the write over the session's
+    * shuffle parallelism, even for a corpus read as a single split. */
+  def build(docs: DataFrame, path: String, n: Int,
       idCol: String = "doc_id", textCol: String = "text"): GraftTable = {
-    val df = grams(docs, n, numBands, idCol, textCol)
+    val df = DedupOps.shingleTable(docs, n, idCol, textCol)
+      .repartition(col("shingle"))
     val t = GraftTable.create(docs.sparkSession, path, df.schema,
-      Map("graft.partitionBy" -> "__band",
-        NProp -> n.toString, BandsProp -> numBands.toString))
+      Map(NProp -> n.toString))
     t.append(df, "DEDUP INDEX BUILD")
     t
   }
@@ -79,12 +71,12 @@ object DedupIndex {
     * metadata check. */
   def append(t: GraftTable, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // persist the banded grams: they are consumed TWICE (the supersede
-    // merge's source ids, then the posting append) and re-shingling the
-    // batch per consumer doubled the per-ingest maintenance cost
-    // (guide §5: reuse beats recompute; bounded — one batch's postings)
-    val df = grams(docs, intProp(t, NProp), intProp(t, BandsProp),
-      idCol, textCol).persist()
+    // persist the grams: they are consumed TWICE (the supersede merge's
+    // source ids, then the posting append) and re-shingling the batch per
+    // consumer doubled the per-ingest maintenance cost (guide §5: reuse
+    // beats recompute; bounded — one batch's postings)
+    val df = DedupOps.shingleTable(docs, intProp(t, NProp), idCol, textCol)
+      .persist()
     try {
       graft.tables.MergeOps.mergeInto(t, df.select("doc_id").distinct(),
         "target.doc_id = source.doc_id",

@@ -254,10 +254,18 @@ object DedupOps {
     // corpus-gram table per probe — the structurally wrong move at
     // 100 TB; guide §3.1). The later groupBy exchanges only the
     // touched docs' grams.
-    val gramsTouched = corpusGrams
+    val gramsTouchedRaw = corpusGrams
       .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
       .unionByName(batchGrams)
       .join(broadcast(touched), Seq("doc_id"), "left_semi")
+    // verifyPairs builds its per-doc sets on BOTH sides of the pair, and
+    // each side would re-scan the index; cut the touched docs' postings
+    // once (∝ candidates, the same bound as the candidate cut) so the
+    // probe reads the index twice (candidate join + this cut), not three
+    // times.
+    val gramsTouched =
+      if (materializeCandidates) graft.perf.Lineage.cut(gramsTouchedRaw)
+      else gramsTouchedRaw
     verifyPairs(candidates, gramsTouched, threshold)
   }
 

@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One SparkSession per suite; scratch dirs under target/. */
+/** One SparkSession per suite; scratch dirs under the working
+  * directory's target/testtmp (sbt forks tests in the project base). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,7 +19,7 @@ trait SparkTestBase extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
 
   def scratch(tag: String): String = {
-    val p = Paths.get("/root/repo/target/testtmp",
+    val p = Paths.get("target", "testtmp").toAbsolutePath.resolve(
       tag + "-" + java.util.UUID.randomUUID().toString.take(8))
     Files.createDirectories(p.getParent)
     p.toString

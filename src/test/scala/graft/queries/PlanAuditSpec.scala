@@ -145,10 +145,11 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("dedup-index probe prunes the posting scan to (doc_id, shingle)") {
-    // the probe reads the index table twice (candidate join + verify
-    // semi-join); if projection pruning regressed, each read would drag
-    // the band and __part_ copies — and on a real index, any future wide
-    // columns — through every shuffle of the pipeline. Composed from the
+    // the probe reads the index table twice (candidate join + the verify
+    // cut of the touched docs' postings); if projection pruning
+    // regressed, each read would drag a partitioned index's __part_
+    // copies — and on a real index, any future wide columns — through
+    // every shuffle of the pipeline. Composed from the
     // pre-cut pipeline: dedupBatch itself returns an eager lineage cut
     // whose plan is just an RDD scan.
     import graft.text.{DedupIndex, DedupOps}

@@ -1,5 +1,8 @@
 package graft.text
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkTestBase, Tables}
@@ -7,12 +10,49 @@ import graft.tables.GraftTable
 
 /** Persisted dedup index semantics: reopen-from-storage equivalence to
   * the in-session incremental pipeline, append maintenance (a dedup
-  * after append sees earlier batches), banded layout, and the
-  * n-from-properties contract. */
+  * after append sees earlier batches), one posting file per one-split
+  * append, two index scans per probe, indexes in the earlier
+  * band-partitioned layout, and the n-from-properties contract. */
 class DedupIndexSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** Records a probe may read per batch posting beyond its index scans:
+    * the verify cut holds the touched docs' postings (the batch's and
+    * their near-copies' in the index), plus the candidate cut. */
+  private val BatchReadsPerRow = 4
+
   private def d = Tables.t(spark, sf, "documents").select("doc_id", "text")
+
+  /** Input records (file scans and cached-block reads) of the tasks of
+    * the Spark jobs started on this thread while `body` runs. Listener
+    * events arrive in order, so a marker job run after `body` flushes
+    * every task end `body` caused. */
+  private def recordsReadDuring(body: => Unit): Long = {
+    val group = s"dedup-reads-${java.util.UUID.randomUUID()}"
+    val stageGroup = new ConcurrentHashMap[Int, String]()
+    val read = new ConcurrentHashMap[String, java.lang.Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => e.stageIds.foreach(stageGroup.put(_, g)))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (g <- Option(stageGroup.get(e.stageId)); m <- Option(e.taskMetrics))
+          read.merge(g, m.inputMetrics.recordsRead, (a, b) => a + b)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!read.containsKey(group + "-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(read.containsKey(group + "-end"), "listener never saw the marker job")
+      read.getOrDefault(group, 0L)
+    } finally sc.removeSparkListener(listener)
+  }
 
   private def batchOf(mod: Int, idOffset: Long, tail: String) =
     d.filter(col("doc_id") % mod === 0)
@@ -68,52 +108,97 @@ class DedupIndexSpec extends SparkTestBase {
     assert(pairs == Set((1L, 9L, 1.0), (2L, 9L, 1.0)), s"got $pairs")
   }
 
-  test("the table partitions by shingle band") {
-    val path = scratch("dedupidx3")
-    val t = DedupIndex.build(d.limit(200), path, n = 5, numBands = 8)
-    val bands = t.read().select("__band").distinct()
-      .as[Int].collect().toSet
-    assert(bands.subsetOf((0 until 8).toSet) && bands.size > 1,
-      s"expected multiple balanced bands in 0..7, got $bands")
-    // band partitioning must reach the file layout: pruning to one band
-    // keeps a strict subset of files
-    val (kept, _) = t.pruneFiles(s"__band = ${bands.head}")
-    assert(kept.nonEmpty && kept.size < t.filesAt().size)
-  }
-
   test("ingest-loop compaction bounds file count with probes still green") {
-    // the q218 production loop accretes one file set per micro-batch
-    // append; periodic OPTIMIZE of the index table must compact them
-    // band-partition-aware (output files must not straddle band dirs —
-    // a band-oblivious coalesce writes tasks × bands tiny files) and
-    // leave probe results identical
+    // the q218 production loop accretes posting files with every
+    // micro-batch append; periodic OPTIMIZE of the index table must
+    // compact them and leave probe results identical
     val path = scratch("dedupidx6")
     val corpus = d.filter(col("doc_id") < 100)
-    val numBands = 4
-    val t = DedupIndex.build(corpus, path, n = 5, numBands = numBands)
+    val t = DedupIndex.build(corpus, path, n = 5)
+    val built = t.filesAt().size
     (0 until 5).foreach { i =>
       DedupIndex.append(t, batchOf(7, 500000 + i * 10000, s" batch$i tail"))
     }
     val accreted = t.filesAt().size
-    assert(accreted > numBands * 2,
+    assert(accreted >= built + 5,
       s"appends should accrete files before compaction, got $accreted")
     val probe = batchOf(7, 800000, " batch0 tail")
     val before = DedupIndex.dedupBatch(t, probe, 0.5)
       .as[(Long, Long, Double)].collect().toSet
     graft.tables.Maintenance.optimize(t)
     val after = t.filesAt().size
-    // compacted: at most one file per band dir (+1 slack for a
-    // boundary-straddling range-partition task)
-    assert(after <= numBands + 1,
-      s"compaction must bound files to ~numBands, got $after (from $accreted)")
-    // every written file lives in exactly one band dir
-    val perBandDirs = t.filesAt().groupBy(f =>
-      "__part___band=\\d+".r.findFirstIn(f).getOrElse("?"))
-    assert(!perBandDirs.contains("?"), s"unpartitioned file in $perBandDirs")
+    // a few-KB index is one target-size file
+    assert(after == 1, s"compaction must bound files, got $after (from $accreted)")
     val reprobe = DedupIndex.dedupBatch(GraftTable.load(spark, path), probe, 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(reprobe == before, "compaction must not change probe results")
     assert(reprobe.nonEmpty)
+  }
+
+  test("an append of a one-partition batch adds exactly one posting file") {
+    val t = DedupIndex.build(d.limit(200), scratch("dedupidx7"), n = 5)
+    assert(t.schemaAt().fieldNames.toSeq == Seq("doc_id", "shingle"))
+    assert(t.partitionColumns.isEmpty && !t.properties.contains("graft.dedup.bands"),
+      s"no layout properties expected, got ${t.properties}")
+    val before = t.filesAt().size
+    DedupIndex.append(t, batchOf(15, 500000, " tail a").coalesce(1))
+    assert(t.filesAt().size == before + 1,
+      s"one batch split must append one file, got ${t.filesAt().size - before}")
+  }
+
+  test("a probe scans the index twice: candidate join and one verify cut") {
+    val t = DedupIndex.build(d, scratch("dedupidx8"), n = 5)
+    val indexRows = t.read().count()
+    // an in-memory batch: its rows are read from no file
+    val batch = batchOf(50, 500000, " tail r").collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text")
+    val batchRows = DedupOps.shingleTable(batch, 5).count()
+    var pairs = 0L
+    val read = recordsReadDuring {
+      pairs = DedupIndex.dedupBatch(t, batch, 0.5).count()
+    }
+    assert(pairs > 0, "planted near-copies must be found")
+    assert(read <= 2 * indexRows + BatchReadsPerRow * batchRows,
+      s"read $read records for $indexRows index and $batchRows batch postings")
+  }
+
+  test("an index in the band-partitioned layout still appends, supersedes and probes") {
+    // the layout of indexes built before the posting table went
+    // unpartitioned, written by hand: `__band` column, its directory
+    // partitioning and the bands property
+    val path = scratch("dedupidx9")
+    val legacyProps = Map("graft.partitionBy" -> "__band",
+      "graft.dedup.n" -> "5", "graft.dedup.bands" -> "4")
+    val bandGrams = DedupOps.shingleTable(d, 5)
+      .withColumn("__band", pmod(col("shingle"), lit(4L)).cast("int"))
+    val t = GraftTable.create(spark, path, bandGrams.schema, legacyProps)
+    t.append(bandGrams.repartition(4, col("__band")), "DEDUP INDEX BUILD")
+    val first = batchOf(30, 500000, " tail y")
+    val (reingested, otherText) = d.orderBy("doc_id").limit(2)
+      .as[(Long, String)].collect() match { case Array(a, b) => (a._1, b._2) }
+    val before = t.filesAt().toSet
+    DedupIndex.append(t, first.coalesce(1))
+    val appended = t.filesAt().filterNot(before)
+    assert(appended.size == 1 && appended.head.contains("__part___band=__HIVE_DEFAULT_PARTITION__"),
+      s"expected one file in the null-band dir, got $appended")
+    // supersede: doc `reingested` now carries another doc's text
+    DedupIndex.append(t, Seq((reingested, otherText)).toDF("doc_id", "text"))
+    assert(legacyProps.toSet.subsetOf(t.properties.toSet), s"${t.properties}")
+    val probe = first.select((col("doc_id") + 200000).as("doc_id"),
+        concat(col("text"), lit(" z")).as("text"))
+      .unionByName(Seq((990000L, otherText)).toDF("doc_id", "text"))
+    val viaLegacy = DedupIndex.dedupBatch(GraftTable.load(spark, path), probe, 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    val corpusNow = d.filter(col("doc_id") =!= reingested).unionByName(first)
+      .unionByName(Seq((reingested, otherText)).toDF("doc_id", "text"))
+    val inSession = DedupOps.incrementalJaccardPairs(
+        DedupOps.shingleTable(corpusNow, 5), probe, n = 5, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(viaLegacy == inSession)
+    assert(viaLegacy.contains((reingested, 990000L, 1.0)),
+      s"the superseded doc must pair at 1.0 with a copy of its new text: $viaLegacy")
+    assert(viaLegacy.exists { case (d1, d2, _) => d1 >= 500000 && d1 < 700000 && d2 >= 700000 },
+      "appended postings must be probe-visible")
   }
 
   test("a non-index table is rejected with a clear error") {
