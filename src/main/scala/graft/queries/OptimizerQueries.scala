@@ -202,10 +202,8 @@ object OptimizerQueries extends QueryBatch {
       require(kept.size < total, s"IS NULL must prune: ${kept.size}/$total")
       // exactness: kept ≡ the files whose footer null count is > 0
       val stats = t.statsAt()
-      val base = java.nio.file.Paths.get(t.path)
       val withNulls = t.filesAt().filter { abs =>
-        val rel = base.relativize(java.nio.file.Paths.get(abs)).toString
-        stats.get(rel).flatMap(_.get("__nulls_o_end"))
+        stats.get(t.relPath(abs)).flatMap(_.get("__nulls_o_end"))
           .exists(_._1.toLong > 0)
       }.toSet
       require(kept.toSet == withNulls,
@@ -240,8 +238,6 @@ object OptimizerQueries extends QueryBatch {
       val t = GraftTable.create(s, p, o.schema)
       t.append(o.filter(col("o_orderkey") <= cut).repartition(6)) // fragmented hot slice
       t.append(o.filter(col("o_orderkey") > cut).coalesce(1))     // compact cold slice
-      val rel = { val b = java.nio.file.Paths.get(t.path)
-        (f: String) => b.relativize(java.nio.file.Paths.get(f)).toString }
       val lowBefore = t.pruneFiles(s"o_orderkey <= $cut")._1.toSet
       val highBefore = t.pruneFiles(s"o_orderkey > $cut")._1.toSet
       require(lowBefore.intersect(highBefore).isEmpty, "slices must be stats-disjoint")
@@ -251,7 +247,7 @@ object OptimizerQueries extends QueryBatch {
       val c = t.commits.last
       require(c.operation == "OPTIMIZE" &&
         c.operationParameters("predicate") == s"o_orderkey <= $cut")
-      require(c.removedFiles.toSet == lowBefore.map(rel),
+      require(c.removedFiles.toSet == lowBefore.map(t.relPath),
         "OPTIMIZE WHERE must rewrite exactly the in-scope files")
       require(highBefore.subsetOf(t.filesAt().toSet),
         "out-of-scope files must be untouched")

@@ -97,26 +97,23 @@ object FileStats {
     * yields both, so writers can record output-row metrics without an
     * extra count() pass over the data.
     *
-    * Below `graft.statsHarvest.distributedThreshold` files (default
-    * 4096) the footers are read on the driver (16-thread pool — the
-    * per-commit O(new files) cost Delta pays too). ABOVE it, the reads
-    * run as a Spark job (`mapPartitions` over the file list), so an
-    * OPTIMIZE of a 100 TB table writing 10⁵ files doesn't serialize
-    * minutes of footer IO on the driver; the returned map is the same
-    * either way (one bounded metadata row per file). */
-  def harvestWithRows(spark: SparkSession, files: Seq[String]): Map[String, (Long, Stats)] = {
+    * Below [[DistributedHarvestFiles]] files the footers are read on the
+    * driver (16-thread pool — the per-commit O(new files) cost Delta pays
+    * too). ABOVE it, the reads run as a Spark job (`mapPartitions` over
+    * the file list), so an OPTIMIZE of a 100 TB table writing 10⁵ files
+    * doesn't serialize minutes of footer IO on the driver; the returned
+    * map is the same either way (one bounded metadata row per file). */
+  def harvestWithRows(spark: SparkSession, files: Seq[String]): Map[String, (Long, Stats)] =
+    harvestWithRows(spark, files, DistributedHarvestFiles)
+
+  /** File count from which `harvestWithRows` reads footers in a Spark job. */
+  private[graft] val DistributedHarvestFiles = 4096
+
+  /** As `harvestWithRows`, with the driver/job cut-over at `distThreshold`. */
+  private[graft] def harvestWithRows(spark: SparkSession, files: Seq[String],
+      distThreshold: Int): Map[String, (Long, Stats)] = {
     val conf = spark.sessionState.newHadoopConf()
     def one(f: String): (Long, Stats) = readFooter(conf, f)
-    // malformed conf degrades to the default with a warning: stats
-    // harvesting is advisory and must never fail a commit, including on
-    // a typo'd threshold (review finding)
-    val distThresholdRaw =
-      spark.conf.get("graft.statsHarvest.distributedThreshold", "4096")
-    val distThreshold = distThresholdRaw.toIntOption.getOrElse {
-      System.err.println("[filestats] ignoring malformed " +
-        s"graft.statsHarvest.distributedThreshold='$distThresholdRaw', using 4096")
-      4096
-    }
     // footer reads are independent IO — harvest concurrently (an OPTIMIZE
     // that wrote hundreds of files would otherwise pay a serial driver
     // pass; Delta parallelizes its commit-stats collection the same way)

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 
 import scala.collection.JavaConverters._
+import scala.collection.immutable.VectorMap
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -31,6 +32,43 @@ final case class Commit(
     // add/remove delta semantics as data files
     addedDvFiles: Seq[String] = Nil,
     removedDvFiles: Seq[String] = Nil)
+
+/** A table's live state at one version: data files (table-relative path
+  * → footer stats, in the order they became live) and deletion-vector
+  * files. `next` is the one fold of a commit into a live set. Stats cover
+  * live files only; a file committed without them (e.g. re-added by an
+  * older RESTORE) maps to an empty map, which pruning keeps. */
+private[tables] final class Snapshot private (
+    val version: Long,
+    val files: VectorMap[String, FileStats.Stats],
+    val dvFiles: VectorMap[String, Unit],
+    removals: Int) {
+
+  /** Removes first, then adds: a file removed and re-added moves to the
+    * end, a live file re-added keeps its place. */
+  def next(c: Commit): Snapshot = {
+    val fs = (files -- c.removedFiles) ++
+      c.addedFiles.map(f => f -> c.fileStats.getOrElse(f, files.getOrElse(f, Map.empty)))
+    val dvs = (dvFiles -- c.removedDvFiles) ++ c.addedDvFiles.map(_ -> (()))
+    val dead = removals + c.removedFiles.size + c.removedDvFiles.size
+    // VectorMap keeps a tombstone per removed key: rebuild once they
+    // outnumber live keys (`from` returns a VectorMap argument as-is)
+    if (dead <= fs.size + dvs.size + 64) new Snapshot(c.version, fs, dvs, dead)
+    else new Snapshot(c.version, VectorMap.from(fs.iterator), VectorMap.from(dvs.iterator), 0)
+  }
+}
+
+private[tables] object Snapshot {
+  val empty = new Snapshot(-1L, VectorMap.empty, VectorMap.empty, 0)
+
+  /** Count of from-scratch replays (tests: the tip is extended, not re-folded). */
+  private[tables] val replays = new java.util.concurrent.atomic.AtomicLong()
+
+  def replay(commits: Seq[Commit]): Snapshot = {
+    replays.incrementAndGet()
+    commits.foldLeft(empty)(_ next _)
+  }
+}
 
 /** Versioned Parquet table ("tacklelog"): a data directory plus a JSON
   * commit log, giving the Delta-style semantics the reference leans on —
@@ -62,24 +100,28 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   // ---- log access --------------------------------------------------------
 
-  /** Parsed commit log. The log is append-only, so parses are cached
-    * session-wide (keyed by table path, shared across GraftTable
-    * instances) and extended incrementally: a call re-lists the directory
-    * (cheap) but reads/parses only commit files it has not seen. Cold
-    * start bootstraps from the newest checkpoint file (written every
-    * `checkpointInterval` commits) plus the tail — O(1) file reads per
-    * operation after warm-up instead of O(versions), O(tail) on a fresh
-    * JVM instead of O(versions). */
-  def commits: Seq[Commit] = {
-    if (!Files.isDirectory(logDir)) return Nil
+  /** Parsed commit log. The log is append-only, so the parsed commits and
+    * the tip [[Snapshot]] folded from them are cached session-wide (keyed
+    * by table path, shared across GraftTable instances) and extended
+    * incrementally: a call re-lists the directory (cheap), reads/parses
+    * only commit files it has not seen and advances the tip by those
+    * commits alone. A cold (or diverged) view bootstraps from the newest
+    * checkpoint file (written every `checkpointInterval` commits) plus
+    * the tail and replays them once — O(1) file reads per operation
+    * after warm-up, O(tail) on a fresh JVM. */
+  def commits: Seq[Commit] = logState.commits
+
+  private def logState: LogState = {
+    if (!Files.isDirectory(logDir)) return LogState(Vector.empty, Vector.empty, Snapshot.empty)
     val entries = listDir(logDir).map(_.getFileName.toString)
     val names = entries.filter(_.matches("v\\d+\\.json")).sorted.toVector
     val cached = logCache.get(path)
-    if (cached != null && cached._1 == names) return cached._2
-    val parsed: Vector[Commit] =
-      if (cached != null && names.startsWith(cached._1))
-        cached._2 ++ names.drop(cached._1.size).map(readCommitFile)
-      else {
+    if (cached != null && cached.names == names) return cached
+    val state =
+      if (cached != null && names.startsWith(cached.names)) {
+        val tail = names.drop(cached.names.size).map(readCommitFile)
+        LogState(names, cached.commits ++ tail, tail.foldLeft(cached.tip)(_ next _))
+      } else {
         // fresh (or diverged) view: start from the newest checkpoint ≤ tip
         val ckpts = entries.filter(_.matches("checkpoint-v\\d+\\.json")).sorted
         val base: Vector[Commit] = ckpts.lastOption.map { c =>
@@ -87,11 +129,33 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           parseCommitList(new String(Files.readAllBytes(logDir.resolve(c)), "UTF-8")).toVector
         }.getOrElse(Vector.empty)
         val have = base.map(c => f"v${c.version}%020d.json").toSet
-        base ++ names.filterNot(have).map(readCommitFile)
+        val parsed = base ++ names.filterNot(have).map(readCommitFile)
+        LogState(names, parsed, Snapshot.replay(parsed))
       }
-    logCache.put(path, (names, parsed))
-    parsed
+    logCache.put(path, state)
+    state
   }
+
+  /** Live state at the tip, kept in the log cache and advanced commit by
+    * commit — never re-folded while the cache is warm. */
+  private[tables] def snapshot: Snapshot = logState.tip
+
+  /** Live state at `version`: the tip, or (time travel) one replay of
+    * the log up to `version`. */
+  private[tables] def snapshotAt(version: Long): Snapshot = {
+    val st = logState
+    if (version >= st.tip.version) st.tip
+    else Snapshot.replay(st.commits.takeWhile(_.version <= version))
+  }
+
+  /** Absolute path of a table-relative file, as `filesAt` returns it. */
+  private def absPath(rel: String): String = Paths.get(path, rel).toString
+
+  /** Table-relative path of a file under this table, as the log stores
+    * it (both sides absolute and normalized). */
+  private[graft] def relPath(file: String): String =
+    Paths.get(path).toAbsolutePath.normalize
+      .relativize(Paths.get(file).toAbsolutePath.normalize).toString
 
   private def readCommitFile(name: String): Commit = {
     logFileReads.incrementAndGet()
@@ -127,24 +191,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   def readAsOfTimestamp(tsMs: Long): DataFrame = read(versionAtTimestamp(tsMs))
 
   /** Live data files (absolute paths) at a version (default: latest). */
-  def filesAt(version: Long = Long.MaxValue): Seq[String] = {
-    val live = scala.collection.mutable.LinkedHashSet[String]()
-    commits.takeWhile(_.version <= version).foreach { c =>
-      c.removedFiles.foreach(live -= _)
-      c.addedFiles.foreach(live += _)
-    }
-    live.toSeq.map(f => Paths.get(path, f).toString)
-  }
+  def filesAt(version: Long = Long.MaxValue): Seq[String] =
+    snapshotAt(version).files.keysIterator.map(absPath).toVector
 
   /** Live deletion-vector files (absolute paths) at a version. */
-  def dvAt(version: Long = Long.MaxValue): Seq[String] = {
-    val live = scala.collection.mutable.LinkedHashSet[String]()
-    commits.takeWhile(_.version <= version).foreach { c =>
-      c.removedDvFiles.foreach(live -= _)
-      c.addedDvFiles.foreach(live += _)
-    }
-    live.toSeq.map(f => Paths.get(path, f).toString)
-  }
+  def dvAt(version: Long = Long.MaxValue): Seq[String] =
+    snapshotAt(version).dvFiles.keysIterator.map(absPath).toVector
 
   /** Merge-on-read deletes enabled (`graft.deletionVectors` property):
     * DELETE writes a (file, row position) sidecar instead of rewriting
@@ -296,7 +348,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** Footer stats plus total row count (one footer read per file). */
   private[tables] def harvestStatsAndRows(
       relFiles: Seq[String]): (Map[String, Map[String, (String, String)]], Long) = {
-    val abs = relFiles.map(f => Paths.get(path, f).toString)
+    val abs = relFiles.map(absPath)
     val h = FileStats.harvestWithRows(spark, abs)
     val stats = relFiles.zip(abs)
       .map { case (rel, a) => rel -> h.get(a).map(_._2).getOrElse(Map.empty) }
@@ -305,22 +357,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   }
 
   /** Per-file stats of the live files at a version (rel path → col →
-    * (min,max)). The tip-version map is cached per table path: folding
-    * every commit's stats on each `readWhere` is fine at 10³ files but
-    * measurable at 10⁶, and the fold only changes when a commit lands
-    * (cache key = current version, so any write invalidates naturally).
-    * Historical versions are rare reads and compute fresh. */
-  def statsAt(version: Long = Long.MaxValue): Map[String, Map[String, (String, String)]] = {
-    val tip = currentVersion
-    val v = math.min(version, tip)
-    val cached = GraftTable.statsCache.get(path)
-    if (cached != null && cached._1 == v) return cached._2
-    GraftTable.statsMaterializations.incrementAndGet()
-    val m = commits.takeWhile(_.version <= v)
-      .foldLeft(Map.empty[String, Map[String, (String, String)]])(_ ++ _.fileStats)
-    if (v == tip) GraftTable.statsCache.put(path, (v, m))
-    m
-  }
+    * (min,max), empty when none were recorded): the snapshot's file map,
+    * so at the tip a `readWhere` never re-folds the log. */
+  def statsAt(version: Long = Long.MaxValue): Map[String, FileStats.Stats] =
+    snapshotAt(version).files
 
   /** Stats-pruned file list for a conjunctive predicate: only files whose
     * min/max ranges can match. Falls back to all files on unknown shapes. */
@@ -334,12 +374,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** As `pruneFiles`, over an already-built predicate expression. */
   private[graft] def pruneFilesByExpr(
       pred: org.apache.spark.sql.catalyst.expressions.Expression): (Seq[String], Int) = {
-    val all = filesAt()
-    val stats = statsAt()
+    val live = snapshot.files
     val schema = schemaAt()
-    val base = Paths.get(path)
-    val kept = all.filter { abs =>
-      val rel = base.relativize(Paths.get(abs)).toString
+    val kept = live.iterator.filter { case (rel, stats) =>
       // __part_k=v path segments are exact per-file stats (partition
       // pruning unified with footer-stats skipping)
       val partStats: Map[String, (String, String)] = rel.split("/").toSeq
@@ -347,10 +384,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           val Array(k, v) = seg.split("=", 2)
           k.stripPrefix("__part_") -> (v, v)
         }.toMap
-      val st = stats.getOrElse(rel, Map.empty) ++ partStats
+      val st = stats ++ partStats
       if (st.isEmpty) true else FileStats.mightMatch(st, pred, schema)
-    }
-    (kept, all.size)
+    }.map(e => absPath(e._1)).toVector
+    (kept, live.size)
   }
 
   /** Snapshot read with stats-based file skipping: `readWhere("l_orderkey
@@ -383,7 +420,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     (if (parts.nonEmpty) w.partitionBy(parts.map("__part_" + _): _*) else w).parquet(dest.toString)
     walkDir(dest)
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .map(p => Paths.get(path).relativize(p).toString).sorted
+      .map(p => relPath(p.toString)).sorted
   }
 
   /** Write a deletion-vector sidecar — rows of (__dv_file, __dv_pos) —
@@ -394,9 +431,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     df.write.mode(SaveMode.Overwrite).parquet(dest.toString)
     val rels = walkDir(dest)
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .map(p => Paths.get(path).relativize(p).toString).sorted
-    val rows = FileStats.harvestWithRows(spark,
-      rels.map(f => Paths.get(path, f).toString)).values.map(_._1).sum
+      .map(p => relPath(p.toString)).sorted
+    val rows = FileStats.harvestWithRows(spark, rels.map(absPath)).values.map(_._1).sum
     (rels, rows)
   }
 
@@ -423,8 +459,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       removedDv: Seq[String] = Nil,
       schemaUnion: Boolean = false): Commit = {
     Files.createDirectories(logDir)
-    val cs = commits
-    val prev = cs.lastOption
+    val st = logState
+    val prev = st.commits.lastOption
     // Write-write conflict detection (Delta's ConcurrentDeleteDelete
     // semantics): the version is assigned from the tip read here, so a
     // rewrite computed against an older snapshot would not collide on the
@@ -433,18 +469,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // publishing would duplicate them. Throw so Concurrency.retry
     // recomputes against the fresh snapshot. Pure appends (removed empty)
     // never conflict, matching Delta's append concurrency.
-    if (removed.nonEmpty || removedDv.nonEmpty) {
-      val live = scala.collection.mutable.Set[String]()
-      val liveDv = scala.collection.mutable.Set[String]()
-      cs.foreach { c0 =>
-        c0.removedFiles.foreach(live -= _); c0.addedFiles.foreach(live += _)
-        c0.removedDvFiles.foreach(liveDv -= _); c0.addedDvFiles.foreach(liveDv += _)
-      }
-      val gone = removed.filterNot(live) ++ removedDv.filterNot(liveDv)
-      if (gone.nonEmpty) throw new ConcurrentCommitException(
-        s"concurrent modification: ${gone.size} file(s) this $operation rewrites " +
-          s"were already removed by another writer (e.g. ${gone.head})", null)
-    }
+    val gone = removed.filterNot(st.tip.files.contains) ++
+      removedDv.filterNot(st.tip.dvFiles.contains)
+    if (gone.nonEmpty) throw new ConcurrentCommitException(
+      s"concurrent modification: ${gone.size} file(s) this $operation rewrites " +
+        s"were already removed by another writer (e.g. ${gone.head})", null)
     // Data operations (append/merge/delete/update/optimize) pass
     // schemaUnion=true: the version is assigned from the tip read HERE,
     // so a writer whose snapshot predates a concurrent schema evolution
@@ -490,11 +519,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       case NonFatal(e) =>
         throw new ConcurrentCommitException(s"version ${c.version} already committed", e)
     } finally Files.deleteIfExists(tmp)
-    // extend the session cache in place (no re-list/re-parse on next read)
+    // extend the session cache in place (no re-list/re-parse/re-fold)
     val cachedNow = logCache.get(path)
-    if (cachedNow != null && prev.map(_.version).getOrElse(-1L) ==
-        cachedNow._2.lastOption.map(_.version).getOrElse(-1L))
-      logCache.put(path, (cachedNow._1 :+ target.getFileName.toString, cachedNow._2 :+ c))
+    if (cachedNow != null && cachedNow.tip.version == st.tip.version)
+      logCache.put(path, LogState(cachedNow.names :+ target.getFileName.toString,
+        cachedNow.commits :+ c, cachedNow.tip.next(c)))
     // periodic checkpoint: one file holding the full parsed log so a cold
     // start reads checkpoint + tail instead of every v*.json
     if (c.version > 0 && c.version % checkpointInterval == 0) {
@@ -521,7 +550,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       metrics = extraMetrics + ("numOutputRows" -> nRows),
       fileStats = stats, schemaUnion = true)
     if (cdfEnabled && files.nonEmpty) writeChanges(
-      readFiles(files.map(f => Paths.get(path, f).toString), data.schema)
+      readFiles(files.map(absPath), data.schema)
         .withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version", lit(c.version)), c.version)
     c
@@ -529,8 +558,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   def overwrite(df: DataFrame, operation: String = "OVERWRITE",
       extraProps: Map[String, String] = Map.empty): Commit = {
-    def rel(p: String) = Paths.get(path).relativize(Paths.get(p)).toString
-    val removed = filesAt().map(rel)
+    val removed = snapshot.files.keys.toSeq
     val withId = assignIdentity(df)
     val files = writeData(withId._1)
     // stale DV sidecars must go with the data files they index, or they
@@ -539,7 +567,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     commit(operation, files, removed, withId._1.schema, identity = withId._2,
       props = if (extraProps.isEmpty) null else properties ++ extraProps,
       fileStats = harvestStats(files),
-      removedDv = dvAt().map(rel))
+      removedDv = snapshot.dvFiles.keys.toSeq)
   }
 
   /** Overwrite CONDITIONED ON A SNAPSHOT: removes exactly
@@ -556,36 +584,37 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   def overwriteSnapshot(df: DataFrame, snapshotFiles: Seq[String],
       operation: String = "OVERWRITE",
       extraProps: Map[String, String] = Map.empty): Commit = {
-    def rel(p: String) = Paths.get(path).relativize(Paths.get(p)).toString
-    val removed = snapshotFiles.map(rel)
     val withId = assignIdentity(df)
     val files = writeData(withId._1)
-    commit(operation, files, removed, withId._1.schema, identity = withId._2,
+    commit(operation, files, snapshotFiles.map(relPath), withId._1.schema,
+      identity = withId._2,
       props = if (extraProps.isEmpty) null else properties ++ extraProps,
       fileStats = harvestStats(files),
-      removedDv = dvAt().map(rel))
+      removedDv = snapshot.dvFiles.keys.toSeq)
   }
 
   /** TRUNCATE: drop every live file, keep schema (`DP/Step 1:231`). */
   def truncate(): Commit = {
-    def rel(p: String) = Paths.get(path).relativize(Paths.get(p)).toString
-    commit("TRUNCATE", Nil, filesAt().map(rel), schemaAt(),
-      removedDv = dvAt().map(rel))
+    val live = snapshot
+    commit("TRUNCATE", Nil, live.files.keys.toSeq, schemaAt(),
+      removedDv = live.dvFiles.keys.toSeq)
   }
 
   /** RESTORE TO TIMESTAMP AS OF: repoint to the snapshot current at `tsMs`. */
   def restoreToTimestamp(tsMs: Long): Commit = restoreTo(versionAtTimestamp(tsMs))
 
-  /** RESTORE TABLE ... VERSION AS OF v (`HF/transactions.py:420-449`). */
+  /** RESTORE TABLE ... VERSION AS OF v (`HF/transactions.py:420-449`).
+    * Re-added files carry their stats from the restored snapshot, so
+    * pruning after a RESTORE keeps what it kept at `version`. */
   def restoreTo(version: Long): Commit = {
-    def rel(p: String) = Paths.get(path).relativize(Paths.get(p)).toString
-    val want = filesAt(version).map(rel)
-    val cur = filesAt().map(rel)
-    val wantDv = dvAt(version).map(rel)
-    val curDv = dvAt().map(rel)
-    commit("RESTORE", want.diff(cur), cur.diff(want), schemaAt(version),
-      Map("restoredVersion" -> version.toString),
-      addedDv = wantDv.diff(curDv), removedDv = curDv.diff(wantDv))
+    val want = snapshotAt(version)
+    val cur = snapshot
+    val added = want.files.keys.filterNot(cur.files.contains).toSeq
+    commit("RESTORE", added, cur.files.keys.filterNot(want.files.contains).toSeq,
+      schemaAt(version), Map("restoredVersion" -> version.toString),
+      fileStats = added.map(f => f -> want.files(f)).filter(_._2.nonEmpty).toMap,
+      addedDv = want.dvFiles.keys.filterNot(cur.dvFiles.contains).toSeq,
+      removedDv = cur.dvFiles.keys.filterNot(want.dvFiles.contains).toSeq)
   }
 
   /** Number of versions committed within the last `hours` (age→version
@@ -608,9 +637,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * explicit FORCE for it. */
   def vacuum(retainVersions: Int): Seq[String] = {
     val keepFrom = math.max(0L, currentVersion - retainVersions)
-    val referenced = (keepFrom to currentVersion)
-      .flatMap(v => filesAt(v) ++ dvAt(v))
-      .map(f => Paths.get(f).toAbsolutePath.normalize.toString).toSet
+    // every retained version's live set, from one fold: what is live at
+    // keepFrom plus every file a later commit added
+    val kept = snapshotAt(keepFrom)
+    val referenced = (kept.files.keys ++ kept.dvFiles.keys ++
+        commits.filter(_.version > keepFrom).flatMap(c => c.addedFiles ++ c.addedDvFiles))
+      .map(f => Paths.get(path, f).toAbsolutePath.normalize.toString).toSet
     val dvDir = Paths.get(path, "dv")
     val roots = Seq(dataDir, dvDir).filter(Files.isDirectory(_))
     if (roots.isEmpty) return Nil
@@ -733,46 +765,30 @@ object GraftTable {
 
   private val M = new ObjectMapper()
 
-  /** Access-ordered LRU map bounded at `maxEntries` tables — the
-    * metadata caches below must not grow with the number of DISTINCT
-    * tables a long-lived session ever touches (a streaming service
-    * churning scratch tables would otherwise leak). 512 live tables of
-    * cached metadata is far beyond any single session's working set;
-    * eviction just means a cold reload through the checkpoint path. */
-  private def lruMap[V](maxEntries: Int): java.util.Map[String, V] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
-          size() > maxEntries
-      })
 
-  /** Session-wide parsed-log cache: table path → (sorted commit-file
-    * names, parsed commits). Shared across GraftTable instances so
-    * repeated `load()`s of the same table stay O(1). */
-  private val logCache = lruMap[(Vector[String], Vector[Commit])](512)
+  /** One table's cached log: the sorted commit-file names, the parsed
+    * commits and the tip [[Snapshot]] folded from them. */
+  private final case class LogState(names: Vector[String], commits: Vector[Commit], tip: Snapshot)
 
-  private[tables] def clearLogCache(path: String): Unit = {
-    logCache.remove(path)
-    statsCache.remove(path)
-  }
+  /** Session-wide log cache: table path → [[LogState]]. Shared across
+    * GraftTable instances, so repeated `load()`s of the same table stay
+    * O(1) and every instance reads and extends the same tip snapshot.
+    * An access-ordered LRU bounded at 512 tables, so it does not grow
+    * with the DISTINCT tables a long-lived session touches (a streaming
+    * service churning scratch tables would otherwise leak); eviction
+    * just means a cold reload through the checkpoint path. */
+  private val logCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, LogState](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, LogState]): Boolean =
+        size() > 512
+    })
 
-  /** Drop every cached parsed log / stats map (benchmark-harness reset:
-    * scratch tables are deleted between queries; their cache entries would
+  private[tables] def clearLogCache(path: String): Unit = logCache.remove(path)
+
+  /** Drop every cached log and snapshot (benchmark-harness reset: scratch
+    * tables are deleted between queries; their cache entries would
     * otherwise accumulate for the whole run). */
-  def clearAllCaches(): Unit = {
-    logCache.clear()
-    statsCache.clear()
-  }
-
-  /** Live-version stats map per table path: (version, rel path → col →
-    * (min,max)). See [[GraftTable.statsAt]]. */
-  private val statsCache =
-    lruMap[(Long, Map[String, Map[String, (String, String)]])](512)
-
-  /** Count of full stats-map folds — observable in tests asserting the
-    * map is materialized once across repeated `readWhere` calls. */
-  private[tables] val statsMaterializations =
-    new java.util.concurrent.atomic.AtomicLong()
+  def clearAllCaches(): Unit = logCache.clear()
 
   /** Count of physical log-file reads (commit files + checkpoints) —
     * observable in tests asserting O(1) reads after warm-up. */
@@ -802,10 +818,10 @@ object GraftTable {
     try s.iterator().asScala.toList finally s.close()
   }
 
-  /** Evict cached parsed logs / stats for every table at or under `root`.
-    * Without this a table deleted and recreated at the same path can be
-    * served another table's cached stats (same tip version, different
-    * files) — and long-lived non-bench sessions would grow the caches
+  /** Evict the cached logs of every table at or under `root`. Without
+    * this a table deleted and recreated at the same path can be served
+    * another table's cached snapshot (same tip version, different
+    * files) — and long-lived non-bench sessions would grow the cache
     * unboundedly as scratch tables churn. */
   private def evictCachesUnder(root: Path): Unit = {
     val r = root.toAbsolutePath.normalize.toString
@@ -815,19 +831,15 @@ object GraftTable {
       a == r || a.startsWith(prefix)
     }
     // synchronizedMap contract: hold the map's monitor while iterating
-    def evict[V](m: java.util.Map[String, V]): Unit = {
-      val keys = m.synchronized { m.keySet.asScala.toList }
-      keys.filter(hit).foreach(m.remove)
-    }
-    evict(logCache)
-    evict(statsCache)
+    val keys = logCache.synchronized { logCache.keySet.asScala.toList }
+    keys.filter(hit).foreach(logCache.remove)
   }
 
   /** Best-effort recursive delete (no-op on a missing path; per-path IO
     * errors skipped) — shared by the bench harness and scratch-table
     * cleanup so the walk-sort-delete loop lives once. Also evicts the
-    * parsed-log/stats cache entries of every table under the tree, so a
-    * recreate at the same path can never be served stale state. */
+    * log-cache entries of every table under the tree, so a recreate at
+    * the same path can never be served stale state. */
   def deleteTree(p: Path): Unit =
     if (Files.isDirectory(p) || Files.isRegularFile(p)) {
       evictCachesUnder(p)

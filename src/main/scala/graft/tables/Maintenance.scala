@@ -63,8 +63,6 @@ object Maintenance {
     import org.apache.spark.sql.functions.{broadcast, regexp_replace}
     val spark = t.spark
     import spark.implicits._
-    def rel(f: String) = Paths.get(t.path).toAbsolutePath
-      .relativize(Paths.get(f).toAbsolutePath).toString
     // __dv_file holds _metadata.file_path URIs (file:/...); normalize
     // both sides to plain absolute paths before comparing
     val rewrittenDf = rewritten
@@ -73,8 +71,8 @@ object Maintenance {
     val surviving = dvRows.join(broadcast(rewrittenDf),
       regexp_replace(col(GraftTable.DvFileCol), "^file:/+", "/") === col("__rm"),
       "left_anti")
-    if (surviving.isEmpty) (Nil, dvFiles.map(rel))
-    else (t.writeDv(surviving)._1, dvFiles.map(rel))
+    if (surviving.isEmpty) (Nil, dvFiles.map(t.relPath))
+    else (t.writeDv(surviving)._1, dvFiles.map(t.relPath))
   }
 
   /** Equi-depth bucket ids (0..255) per column — the shared first stage
@@ -221,13 +219,10 @@ object Maintenance {
       t.partitionColumns, curveEff)
 
     val added = t.writeData(clustered)
-    def rel(f: String) = Paths.get(t.path).toAbsolutePath
-      .relativize(Paths.get(f).toAbsolutePath).toString
-    val removed = files.map(rel)
     // the rewrite materialized any deletion vectors (read() applies them)
-    t.commit("OPTIMIZE", added, removed, t.schemaAt(),
+    t.commit("OPTIMIZE", added, files.map(t.relPath), t.schemaAt(),
       Map("zOrderBy" -> zorderByEff.mkString(","), "curve" -> curveEff),
-      removedDv = t.dvAt().map(rel),
+      removedDv = t.dvAt().map(t.relPath),
       metrics = Map(
         "numFilesRemoved" -> files.size.toLong,
         "numFilesAdded" -> added.size.toLong,
@@ -271,10 +266,8 @@ object Maintenance {
     val clustered = clusterInto(df, zorderByEff, nFiles,
       partitionCols = t.partitionColumns, curve = curveEff)
     val added = t.writeData(clustered)
-    def rel(f: String) = Paths.get(t.path).toAbsolutePath
-      .relativize(Paths.get(f).toAbsolutePath).toString
     val (addedDv, removedDv) = compactDvs(t, matching)
-    t.commit("OPTIMIZE", added, matching.map(rel), t.schemaAt(), params,
+    t.commit("OPTIMIZE", added, matching.map(t.relPath), t.schemaAt(), params,
       metrics = Map(
         "numFilesRemoved" -> matching.size.toLong,
         "numFilesAdded" -> added.size.toLong,
@@ -308,10 +301,8 @@ object Maintenance {
     val clustered = clusterInto(df, zorderByEff, nFiles,
       partitionCols = t.partitionColumns, curve = curveEff)
     val added = t.writeData(clustered)
-    def rel(f: String) = Paths.get(t.path).toAbsolutePath
-      .relativize(Paths.get(f).toAbsolutePath).toString
     val (addedDv, removedDv) = compactDvs(t, small)
-    t.commit("OPTIMIZE", added, small.map(rel), t.schemaAt(),
+    t.commit("OPTIMIZE", added, small.map(t.relPath), t.schemaAt(),
       Map("zOrderBy" -> zorderByEff.mkString(","), "incremental" -> "true",
         "curve" -> curveEff),
       metrics = Map(

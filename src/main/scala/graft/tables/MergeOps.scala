@@ -272,9 +272,7 @@ object MergeOps {
       val result = joined.filter(keep).select(cols.map(valueFor): _*)
 
       val added = if (touched.isEmpty && notMatched.isEmpty) Nil else t.writeData(result)
-      val rel = touched.map(f => Paths.get(t.path).toAbsolutePath
-        .relativize(Paths.get(f).toAbsolutePath).toString)
-      val c = t.commit("MERGE", added, rel, schema,
+      val c = t.commit("MERGE", added, touched.map(t.relPath), schema,
         Map("predicate" -> condition),
         props = if (extraProps.isEmpty) null else t.properties ++ extraProps,
         metrics = Map(
@@ -320,9 +318,7 @@ object MergeOps {
       return t.commit("DELETE", Nil, Nil, schema, Map("predicate" -> predicate), schemaUnion = true)
     val kept = t.readFiles(touched, schema).filter(not(expr(predicate)))
     val added = t.writeData(kept)
-    val rel = touched.map(f => Paths.get(t.path).toAbsolutePath
-      .relativize(Paths.get(f).toAbsolutePath).toString)
-    val c = t.commit("DELETE", added, rel, schema, Map("predicate" -> predicate),
+    val c = t.commit("DELETE", added, touched.map(t.relPath), schema, Map("predicate" -> predicate),
       fileStats = t.harvestStats(added), schemaUnion = true)
     if (t.cdfEnabled) t.writeChanges(
       t.readFiles(touched, schema).filter(expr(predicate))
@@ -384,9 +380,7 @@ object MergeOps {
           .getOrElse(col(c))
       }: _*)
     val added = t.writeData(rewritten)
-    val rel = touched.map(f => Paths.get(t.path).toAbsolutePath
-      .relativize(Paths.get(f).toAbsolutePath).toString)
-    val c = t.commit("UPDATE", added, rel, schema, Map("predicate" -> predicate),
+    val c = t.commit("UPDATE", added, touched.map(t.relPath), schema, Map("predicate" -> predicate),
       fileStats = t.harvestStats(added), schemaUnion = true)
     if (t.cdfEnabled) t.writeChanges(
       t.readFiles(touched, schema).filter(expr(predicate))

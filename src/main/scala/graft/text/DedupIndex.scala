@@ -81,8 +81,7 @@ object DedupIndex {
       graft.tables.MergeOps.mergeInto(t, df.select("doc_id").distinct(),
         "target.doc_id = source.doc_id",
         matched = Seq(graft.tables.MergeOps.WhenMatched(None,
-          graft.tables.MergeOps.DeleteAction)),
-        extraProps = Map("graft.dedup.supersede" -> "true"))
+          graft.tables.MergeOps.DeleteAction)))
       t.append(df, "DEDUP INDEX APPEND")
     } finally df.unpersist(blocking = false)
   }

@@ -7,7 +7,7 @@ import graft.tables.FileStats
 /** Footer-harvest scaling measurement (dev tool, VERDICT r17 #3): an
   * OPTIMIZE of a 100 TB table can commit ~10⁵ files, and the driver
   * thread-pool harvest serializes that IO; above
-  * `graft.statsHarvest.distributedThreshold` the harvest runs as a
+  * `FileStats.DistributedHarvestFiles` files the harvest runs as a
   * Spark job instead. This tool writes N small parquet files, times
   * BOTH paths on the SAME file list at several N, and prints ms/file —
   * the distributed path must stay flat per file as N grows past 10⁴
@@ -52,8 +52,7 @@ object ProfHarvest {
         (r, (System.nanoTime() - t0) / 1e9)
       }
       // driver pool path (threshold pushed above n)
-      spark.conf.set("graft.statsHarvest.distributedThreshold", (n + 1).toString)
-      val (viaDriver, dSec) = time(FileStats.harvestWithRows(spark, files))
+      val (viaDriver, dSec) = time(FileStats.harvestWithRows(spark, files, n + 1))
       // distributed path, twice (first run pays job-setup warm-up)
       FileStats.harvestDistributed(spark, files.take(64))
       val (viaJob, jSec) = time(FileStats.harvestDistributed(spark, files))

@@ -37,20 +37,36 @@ class FileStatsSpec extends SparkTestBase {
       li.filter(col("l_quantity") <= 3).count())
   }
 
-  test("repeated readWhere materializes the stats map once (100×-scale guard)") {
+  test("repeated readWhere and a write never replay the log (100×-scale guard)") {
     val li = Tables.t(spark, sf, "lineitem")
     val t = GraftTable.createFrom(spark, scratch("statscache"), li)
-    t.pruneFiles("l_orderkey = 1") // warm the tip-version cache
-    val before = GraftTable.statsMaterializations.get()
+    t.pruneFiles("l_orderkey = 1") // warm the log cache
+    val before = Snapshot.replays.get()
     (1 to 5).foreach(i => t.readWhere(s"l_orderkey = $i").count())
-    assert(GraftTable.statsMaterializations.get() === before,
-      "warm readWhere calls must reuse the cached stats map, not re-fold the log")
-    // a write bumps the version and must invalidate the cache exactly once
+    // a write extends the cached tip snapshot by its own files
     t.append(li.limit(10))
     t.pruneFiles("l_orderkey = 1")
     t.pruneFiles("l_orderkey = 2")
-    assert(GraftTable.statsMaterializations.get() === before + 1,
-      "one re-fold after a commit, then cached again")
+    assert(Snapshot.replays.get() === before,
+      "warm reads and a commit must extend the tip snapshot, not re-fold the log")
+  }
+
+  test("pruneFiles after restoreTo(v) keeps the files it kept at v") {
+    val li = Tables.t(spark, sf, "lineitem")
+    val t = GraftTable.createFrom(spark, scratch("restoreprune"), li)
+    t.setProperties(Map("graft.targetFileSize" -> (16 * 1024).toString))
+    Maintenance.optimize(t, zorderBy = Seq("l_orderkey"))
+    val v = t.currentVersion
+    val (keptAtV, allAtV) = t.pruneFiles("l_orderkey = 42")
+    assert(keptAtV.size < allAtV)
+    // rewrite every file away, then bring version v's files back
+    Maintenance.optimize(t, zorderBy = Seq("l_quantity"))
+    assert(t.filesAt().toSet.intersect(keptAtV.toSet).isEmpty)
+    t.restoreTo(v)
+    assert(t.pruneFiles("l_orderkey = 42") === ((keptAtV, allAtV)),
+      "restored files must carry their stats back into the snapshot")
+    assert(t.readWhere("l_orderkey = 42").count() ===
+      li.filter(col("l_orderkey") === 42).count())
   }
 
   test("unknown predicate shapes never prune (conservative)") {
@@ -154,6 +170,27 @@ class FileStatsSpec extends SparkTestBase {
       "the mapPartitions harvest must be byte-identical to the driver pool's")
     // and the stats carry null counts for the nullable column
     assert(viaDriver.values.exists(_._2.contains("__nulls_l_nullable")))
+  }
+
+  test("harvestWithRows returns the same map from its driver pool and its Spark job") {
+    val li = Tables.t(spark, sf, "lineitem")
+      .withColumn("l_nullable",
+        when(col("l_orderkey") % 7 === 0, col("l_quantity")))
+    val t = GraftTable.createFrom(spark, scratch("harvcut"), li.repartition(6))
+    val files = t.filesAt()
+    assert(files.size >= 4 && files.size < FileStats.DistributedHarvestFiles)
+    val sc = spark.sparkContext
+    def jobsOf(body: => Map[String, (Long, FileStats.Stats)]) = {
+      val g = s"harvest-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(g, "harvest")
+      val out = try body finally sc.clearJobGroup()
+      (out, sc.statusTracker.getJobIdsForGroup(g).length)
+    }
+    val (viaPool, poolJobs) = jobsOf(FileStats.harvestWithRows(spark, files))
+    val (viaJob, jobJobs) = jobsOf(FileStats.harvestWithRows(spark, files, distThreshold = 4))
+    assert(poolJobs === 0 && jobJobs > 0, s"pool ran $poolJobs jobs, distributed $jobJobs")
+    assert(viaJob == viaPool)
+    assert(viaPool.values.exists(_._2.contains("__nulls_l_nullable")))
   }
 
   test("IN-list and OR predicates prune to the union of their members' files") {

@@ -11,8 +11,9 @@ import graft.tables.GraftTable
 /** Persisted dedup index semantics: reopen-from-storage equivalence to
   * the in-session incremental pipeline, append maintenance (a dedup
   * after append sees earlier batches), one posting file per one-split
-  * append, two index scans per probe, indexes in the earlier
-  * band-partitioned layout, and the n-from-properties contract. */
+  * append that leaves the index's properties as built, two index scans
+  * per probe, indexes in the earlier band-partitioned layout, and the
+  * n-from-properties contract. */
 class DedupIndexSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -141,9 +142,11 @@ class DedupIndexSpec extends SparkTestBase {
     assert(t.partitionColumns.isEmpty && !t.properties.contains("graft.dedup.bands"),
       s"no layout properties expected, got ${t.properties}")
     val before = t.filesAt().size
+    val built = t.properties
     DedupIndex.append(t, batchOf(15, 500000, " tail a").coalesce(1))
     assert(t.filesAt().size == before + 1,
       s"one batch split must append one file, got ${t.filesAt().size - before}")
+    assert(t.properties == built, "append must leave the index's properties as build wrote them")
   }
 
   test("a probe scans the index twice: candidate join and one verify cut") {
