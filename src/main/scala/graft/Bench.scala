@@ -78,28 +78,7 @@ object Bench {
       }
       over
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Bound the in-memory status store: the bench drives ~10^4 jobs
-      // through one JVM and the default retention (1000 SQL executions,
-      // unbounded-ish job/stage history) grows the driver heap all run,
-      // taxing late queries with GC they didn't cause.
-      .config("spark.sql.ui.retainedExecutions", "25")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // NOTE: spark.cleaner.periodicGC.interval is left at its default
-      // (30 min, i.e. never inside this run) on purpose — a short timer
-      // would fire full GCs asynchronously INSIDE timed queries. The
-      // per-query resetRunState below forces GC on its own cadence,
-      // strictly between queries, so the ContextCleaner still reclaims
-      // shuffle state without polluting any timing.
-      .getOrCreate()
+    val spark = graft.tools.Harness.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_ONLY=q149_...,q209_... restricts the run for targeted

@@ -13,10 +13,15 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    localBuilder(cores).getOrCreate()
+
+  /** The builder behind [[local]], for callers that add settings which
+    * must be fixed before the context starts (status-store bounds, an
+    * explicit partition count). */
+  def localBuilder(cores: Int): SparkSession.Builder =
     configure(SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString))
-      .getOrCreate()
 
   /** Apply engine defaults to any builder (cluster or local). */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b

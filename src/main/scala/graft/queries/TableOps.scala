@@ -9,9 +9,9 @@ import graft.Tables
 import graft.tables._
 import graft.tables.MergeOps._
 
-/** The q62 workload's shared pieces — one definition driven both by the
-  * gate body below and phase-by-phase by `tools.ProfScd`, so the profiler
-  * can never measure a stale copy of the query. */
+/** The q62 workload's pieces (schema and input batches), kept apart from
+  * the gate body below; `tools.Prof` profiles the gate itself, so it can
+  * never measure a stale copy of the query. */
 object Scd2AcDemo {
   import org.apache.spark.sql.types._
 

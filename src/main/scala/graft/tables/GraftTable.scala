@@ -234,7 +234,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * `files` with an empty partition schema, so Spark neither lists the
     * paths again nor infers partitions from the `__part_k=v` segments. */
   private[graft] def readFiles(files: Seq[String], readSchema: StructType = null): DataFrame =
-    readSnapshot(files, readSchema, Long.MaxValue, keepPos = false)
+    readSnapshot(files, readSchema, dvAt(), keepPos = false)
 
   /** As readFiles, but keeps the (__dv_file, __dv_pos) provenance columns
     * — the delete path records them into deletion vectors. Live DVs (at
@@ -242,20 +242,20 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * callers never see deleted rows. */
   private[graft] def readFilesWithPos(files: Seq[String],
       readSchema: StructType = null, dvVersion: Long = Long.MaxValue): DataFrame =
-    readSnapshot(files, readSchema, dvVersion, keepPos = true)
+    readSnapshot(files, readSchema, dvAt(dvVersion), keepPos = true)
 
   /** Provenance columns are scanned only when the caller keeps them or
     * live DVs need them for the anti-join — otherwise a plain read would
     * carry `_metadata.file_path`/`row_index` into the scan and drop them
     * after. */
   private def readSnapshot(files: Seq[String], readSchema: StructType,
-      dvVersion: Long, keepPos: Boolean): DataFrame = {
+      liveDvs: => Seq[String], keepPos: Boolean): DataFrame = {
     val s = Option(readSchema).getOrElse(schemaAt())
     if (files.isEmpty) {
       val out = if (keepPos) StructType(s.fields ++ DvSchema.fields) else s
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out)
     }
-    val dv = dvAt(dvVersion)
+    val dv = liveDvs
     val posCols = if (keepPos || dv.nonEmpty) Seq(DvFileCol, DvPosCol) else Nil
     def withPos(df: DataFrame): DataFrame =
       if (posCols.isEmpty) df
@@ -309,8 +309,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   }
 
   /** Snapshot read (optionally `VERSION AS OF`). */
-  def read(versionAsOf: Long = Long.MaxValue): DataFrame =
-    readSnapshot(filesAt(versionAsOf), schemaAt(versionAsOf), versionAsOf, keepPos = false)
+  def read(versionAsOf: Long = Long.MaxValue): DataFrame = {
+    val snap = snapshotAt(versionAsOf)
+    readSnapshot(snap.files.keysIterator.map(absPath).toVector, schemaAt(versionAsOf),
+      snap.dvFiles.keysIterator.map(absPath).toVector, keepPos = false)
+  }
 
   /** DESCRIBE HISTORY equivalent (`DP/Step 1:235-239`). */
   def history: DataFrame = {
@@ -817,6 +820,12 @@ object GraftTable {
     val s = Files.walk(p)
     try s.iterator().asScala.toList finally s.close()
   }
+
+  /** Distinct local paths of a one-column frame of `_metadata.file_path`
+    * URIs — the files a DML or MERGE touched. */
+  private[tables] def localFiles(uris: DataFrame): Seq[String] =
+    uris.distinct().collect()
+      .map(r => Paths.get(new java.net.URI(r.getString(0))).toString).toSeq
 
   /** Evict the cached logs of every table at or under `root`. Without
     * this a table deleted and recreated at the same path can be served

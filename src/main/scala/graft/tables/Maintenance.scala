@@ -118,7 +118,7 @@ object Maintenance {
     * always one Manhattan step apart, so a box query's bucket rectangle
     * maps to FEWER disjoint curve ranges than under the z-curve (whose
     * seam jumps split the rectangle across distant file ranges —
-    * measured in ProfHilbert / BASELINE.md). 3-D uses Skilling's
+    * measured in BASELINE.md). 3-D uses Skilling's
     * transform ([[graft.functions.HilbertKernel.xyz2d]]). */
   private def hilbertValue(df: org.apache.spark.sql.DataFrame,
       cols: Seq[String]): org.apache.spark.sql.Column = {
@@ -202,7 +202,7 @@ object Maintenance {
     * key, so a bare OPTIMIZE re-clusters incrementally ingested data.
     * `curve = "hilbert"` (2 columns) lays files along the Hilbert curve
     * instead of the z-curve — better box-query locality, measured in
-    * ProfHilbert. A `graft.clusterCurve` table property supplies the
+    * BASELINE.md. A `graft.clusterCurve` table property supplies the
     * curve when the caller doesn't (the liquid-clustering shape: the
     * TABLE declares its layout once, every bare OPTIMIZE — including
     * the SQL-routed one — re-applies it). */
@@ -294,7 +294,8 @@ object Maintenance {
       .filter(f => Files.size(Paths.get(f)) < (target * smallFileFraction).toLong)
     if (small.size < 2)
       return t.commit("OPTIMIZE", Nil, Nil, t.schemaAt(),
-        Map("zOrderBy" -> zorderByEff.mkString(","), "incremental" -> "true"))
+        Map("zOrderBy" -> zorderByEff.mkString(","), "incremental" -> "true"),
+        schemaUnion = true)
     val totalBytes = small.map(f => Files.size(Paths.get(f))).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
     val df = t.readFiles(small)

@@ -150,10 +150,9 @@ object MergeOps {
         val target = t.readFilesWithPos(candidateFiles, schema)
           .drop(GraftTable.DvPosCol)
           .withColumnRenamed(GraftTable.DvFileCol, "__file")
-        target.alias("target")
+        GraftTable.localFiles(target.alias("target")
           .join(source.alias("source"), expr(condition), "left_semi")
-          .select("__file").distinct().collect()
-          .map(r => Paths.get(new java.net.URI(r.getString(0))).toString).toSeq
+          .select("__file"))
       }
     }
 
@@ -310,10 +309,7 @@ object MergeOps {
     if (t.dvEnabled) return deleteWithDv(t, predicate, allFiles, schema)
     val df = t.readFilesWithPos(allFiles, schema).drop(GraftTable.DvPosCol)
       .withColumnRenamed(GraftTable.DvFileCol, "__file")
-    val touched = df
-      .filter(expr(predicate))
-      .select("__file").distinct().collect()
-      .map(r => Paths.get(new java.net.URI(r.getString(0))).toString).toSeq
+    val touched = GraftTable.localFiles(df.filter(expr(predicate)).select("__file"))
     if (touched.isEmpty)
       return t.commit("DELETE", Nil, Nil, schema, Map("predicate" -> predicate), schemaUnion = true)
     val kept = t.readFiles(touched, schema).filter(not(expr(predicate)))
@@ -366,10 +362,7 @@ object MergeOps {
       Map("predicate" -> predicate), schemaUnion = true)
     val df = t.readFilesWithPos(allFiles, schema).drop(GraftTable.DvPosCol)
       .withColumnRenamed(GraftTable.DvFileCol, "__file")
-    val touched = df
-      .filter(expr(predicate))
-      .select("__file").distinct().collect()
-      .map(r => Paths.get(new java.net.URI(r.getString(0))).toString).toSeq
+    val touched = GraftTable.localFiles(df.filter(expr(predicate)).select("__file"))
     if (touched.isEmpty)
       return t.commit("UPDATE", Nil, Nil, schema, Map("predicate" -> predicate), schemaUnion = true)
     val rewritten = t.readFiles(touched, schema)

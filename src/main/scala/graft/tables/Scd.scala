@@ -128,10 +128,8 @@ object Scd {
 
     // the merge's touched-file set, read off the staged blocks —
     // no discovery scan of the target needed
-    val touched = stagedCut.filter(col("__cur_files").isNotNull)
-      .select(explode(col("__cur_files")).as("__f")).distinct().collect()
-      .map(r => java.nio.file.Paths.get(new java.net.URI(r.getString(0))).toString)
-      .toSeq
+    val touched = GraftTable.localFiles(stagedCut.filter(col("__cur_files").isNotNull)
+      .select(explode(col("__cur_files")).as("__f")))
 
     val cond = keys.map(k => s"target.$k = source.__mk_$k").mkString(" AND ") +
       s" AND target.$currentCol = true"

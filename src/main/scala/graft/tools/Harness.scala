@@ -9,6 +9,22 @@ import org.apache.spark.sql.SparkSession
   * comparable. */
 object Harness {
 
+  /** The harness session: [[graft.GraftSession]] with a bounded in-memory
+    * status store. A harness drives ~10^4 jobs through one JVM, and the
+    * default retention (1000 SQL executions, unbounded-ish job/stage
+    * history) grows the driver heap all run, taxing late queries with GC
+    * they didn't cause. `spark.cleaner.periodicGC.interval` stays at its
+    * default (30 min, never inside a run) on purpose: a short timer would
+    * fire full GCs inside timed queries; [[resetRunState]] forces GC
+    * strictly between them instead. */
+  def session(cores: Int): SparkSession =
+    graft.GraftSession.localBuilder(cores)
+      .config("spark.sql.ui.retainedExecutions", "25")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "1000")
+      .getOrCreate()
+
   /** Per-measurement state reset: every query must see the session the
     * previous one started with — stray streams stopped (incl. derived
     * sessions' streams, invisible to this session's manager),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.tables.FileStats
 
 /** Footer-harvest scaling measurement (dev tool, VERDICT r17 #3): an
@@ -21,12 +19,7 @@ object ProfHarvest {
   def main(args: Array[String]): Unit = {
     val counts = args.headOption.map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1024, 4096, 12288))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-profharvest")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -225,12 +225,10 @@ object ScaleGen {
     // optional 4th arg "heaps": growing-vocabulary documents (see
     // [[documents]]) for the q74 saturation counter-experiment
     val heaps = args.drop(3).headOption.contains("heaps")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scalegen")
+    // 32 shuffle partitions whatever the core count: the generated files
+    // do not depend on the box
+    val spark = graft.GraftSession.localBuilder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -140,6 +140,23 @@ class CommitLogCacheSpec extends SparkTestBase {
     assert(t2.commitAt(60).operation === "SET TBLPROPERTIES")
   }
 
+  test("a historical read(v) replays the log once; a tip read not at all") {
+    val region = Tables.t(spark, sf, "region")
+    val t = GraftTable.createFrom(spark, scratch("readv"), region)
+    t.setProperties(Map("graft.deletionVectors" -> "true"))
+    MergeOps.delete(t, "r_regionkey = 1") // a DV commit
+    t.append(region)
+    val expected = Map(1L -> 5L, 2L -> 5L, 3L -> 4L, 4L -> 9L)
+    assert(t.currentVersion === 4L)
+    expected.foreach { case (v, rows) =>
+      val before = Snapshot.replays.get()
+      val df = t.read(v)
+      val replays = Snapshot.replays.get() - before
+      assert(replays === (if (v == t.currentVersion) 0L else 1L), s"read($v)")
+      assert(df.count() === rows, s"read($v)")
+    }
+  }
+
   test("a concurrent writer's new commits are picked up incrementally") {
     val region = Tables.t(spark, sf, "region")
     val t = GraftTable.createFrom(spark, scratch("logcache2"), region)

@@ -46,7 +46,7 @@ class ConcurrencySpec extends SparkTestBase {
     val seed = (1L to 100L).map(i => (i, 0L)).toDF("id", "v")
     GraftTable.createFrom(spark, path, seed)
 
-    val pool = Executors.newFixedThreadPool(4)
+    val pool = Executors.newFixedThreadPool(5)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val merges = (1 to 4).map { i =>
       Future {
@@ -64,13 +64,30 @@ class ConcurrencySpec extends SparkTestBase {
         }
       }
     }
+    // a fifth writer runs incremental OPTIMIZEs until the merges land; a
+    // zero small-file fraction makes each a no-op commit of the schema it
+    // read, which must widen to the tip's, never narrow `w` away
+    val optimizes = Future {
+      val t = GraftTable.load(spark, path)
+      var n = 0
+      while (!merges.forall(_.isCompleted) && n < 40) {
+        Concurrency.retry(maxTries = 10) {
+          Maintenance.optimizeIncremental(t, smallFileFraction = 0.0)
+        }
+        n += 1
+      }
+      n
+    }
     Await.result(Future.sequence(merges), 5.minutes)
+    val nOptimize = Await.result(optimizes, 5.minutes)
     pool.shutdown()
 
     val t = GraftTable.load(spark, path)
-    // createFrom commits twice (CREATE + seed append), then 4 merges
-    assert(t.commits.map(_.version) === (0L to 5L),
+    // createFrom commits twice (CREATE + seed append), then 4 merges and
+    // the OPTIMIZEs
+    assert(t.commits.map(_.version) === (0L to 5L + nOptimize),
       "versions must be contiguous, no gaps")
+    assert(t.commits.count(_.operation == "MERGE") === 4)
     assert(t.schemaAt().fieldNames.toSeq === Seq("id", "v", "w"),
       "evolved column must survive later non-evolving commits")
     assert(t.read().count() === 100L)
