@@ -300,8 +300,11 @@ object Relational extends QueryBatch {
     * `rev >= 10th-highest-distinct-rev` ⇔ `dense_rank(rev desc) <= 10`
     * by definition of dense_rank, so the output is identical; with
     * fewer than 10 distinct revenues the threshold is the minimum and
-    * every row keeps, same as before. The aggregate subtree appears
-    * twice but shares one exchange (ReusedExchange). */
+    * every row keeps, same as before. A null revenue sorts last under
+    * DESC, so the window ranks it ≤ 10 exactly when the 10 highest
+    * distinct values include the null; the join keeps null rows then.
+    * The aggregate subtree appears twice but shares one exchange
+    * (ReusedExchange). */
   private val q21 = GQ(
     "q21_dense_rank_topk",
     (s, dir) => {
@@ -310,8 +313,8 @@ object Relational extends QueryBatch {
         .agg(sum("o_totalprice").as("rev"))
       val th = rev.select(col("rev")).distinct()
         .orderBy(col("rev").desc).limit(10)
-        .agg(min("rev").as("__th"))
-      rev.join(broadcast(th), col("rev") >= col("__th"))
+        .agg(min("rev").as("__th"), (count(lit(1)) > count("rev")).as("__null"))
+      rev.join(broadcast(th), col("rev") >= col("__th") || (col("rev").isNull && col("__null")))
         .withColumn("rnk", dense_rank().over(Window.orderBy(col("rev").desc)))
         .select(col("o_custkey"), round(col("rev"), 2).as("revenue"), col("rnk"))
         .orderBy("rnk", "o_custkey")

@@ -460,7 +460,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       fileStats: Map[String, Map[String, (String, String)]] = Map.empty,
       addedDv: Seq[String] = Nil,
       removedDv: Seq[String] = Nil,
-      schemaUnion: Boolean = false): Commit = {
+      schemaUnion: Boolean = true): Commit = {
     Files.createDirectories(logDir)
     val st = logState
     val prev = st.commits.lastOption
@@ -477,14 +477,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     if (gone.nonEmpty) throw new ConcurrentCommitException(
       s"concurrent modification: ${gone.size} file(s) this $operation rewrites " +
         s"were already removed by another writer (e.g. ${gone.head})", null)
-    // Data operations (append/merge/delete/update/optimize) pass
-    // schemaUnion=true: the version is assigned from the tip read HERE,
-    // so a writer whose snapshot predates a concurrent schema evolution
-    // would otherwise publish its stale captured schema and silently
-    // narrow the table (schema regression under racing writers — caught
-    // by ConcurrencySpec). Widening is monotone, so union with the
-    // current tip's schema is race-safe without a conflict/retry;
-    // intentionally exact ops (CREATE/REPLACE/RESTORE) keep union=false.
+    // schemaUnion (the default, for every data operation): the version
+    // is assigned from the tip read HERE, so a writer whose snapshot
+    // predates a concurrent schema evolution would otherwise publish its
+    // stale captured schema and silently narrow the table (schema
+    // regression under racing writers — caught by ConcurrencySpec).
+    // Widening is monotone, so union with the current tip's schema is
+    // race-safe without a conflict/retry; the intentionally exact ops
+    // (CREATE, REPLACE/overwrite, RESTORE) pass schemaUnion = false.
     val effSchema =
       if (!schemaUnion || prev.isEmpty) schema
       else {
@@ -542,21 +542,79 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   def append(df: DataFrame, operation: String = "WRITE",
       params: Map[String, String] = Map.empty,
       extraProps: Map[String, String] = Map.empty,
-      extraMetrics: Map[String, Long] = Map.empty): Commit = {
+      extraMetrics: Map[String, Long] = Map.empty): Commit =
+    appendImpl(df, operation, params, extraProps, extraMetrics, replaceKey = None)
+
+  /** [[append]] that also deletes, IN THE SAME COMMIT, every live row
+    * sharing a `key` value with an appended row: a delete plus an insert
+    * as one version of remove and add actions, as Delta commits a MERGE.
+    * The new files are written first and their footer stats bound the
+    * appended keys; live files whose stats rule those ranges out are
+    * never read, so an append of fresh keys (keys that cluster by
+    * arrival) is the write job and nothing else. Otherwise the matched
+    * rows leave through a deletion-vector sidecar on DV tables, else by
+    * rewriting the files that hold them. */
+  private[graft] def appendReplacing(df: DataFrame, key: String,
+      operation: String): Commit =
+    appendImpl(df, operation, Map.empty, Map.empty, Map.empty, Some(key))
+
+  private def appendImpl(df: DataFrame, operation: String,
+      params: Map[String, String], extraProps: Map[String, String],
+      extraMetrics: Map[String, Long], replaceKey: Option[String]): Commit = {
     val withId = assignIdentity(df)
     val data = evolveSchema(withId._1)
     val files = writeData(data)
     val (stats, nRows) = harvestStatsAndRows(files)
-    val c = commit(operation, files, Nil, data.schema, params,
+    // the appended keys, and the live rows they replace with their
+    // (file, position)
+    val replaced = replaceKey.flatMap { k =>
+      val candidates = if (nRows == 0) Nil else overlapping(k, files, stats)
+      if (candidates.isEmpty) None else {
+        val keys = readFiles(files.map(absPath), data.schema).select(k)
+        Some((k, keys, readFilesWithPos(candidates, data.schema).join(keys, Seq(k), "left_semi")))
+      }
+    }
+    val (rewritten, removed, dvs) = replaced match {
+      case None => (Nil, Nil, Nil)
+      case Some((_, _, hit)) if dvEnabled =>
+        val (dv, n) = writeDv(hit.select(DvFileCol, DvPosCol))
+        if (n == 0) dv.foreach(f => Files.deleteIfExists(Paths.get(path, f)))
+        (Nil, Nil, if (n == 0) Nil else dv)
+      case Some((k, keys, hit)) =>
+        val touched = localFiles(hit.select(DvFileCol))
+        val kept = if (touched.isEmpty) Nil
+          else writeData(readFiles(touched, data.schema).join(keys, Seq(k), "left_anti"))
+        (kept, touched.map(relPath), Nil)
+    }
+    val c = commit(operation, files ++ rewritten, removed, data.schema, params,
       props = if (extraProps.isEmpty) null else properties ++ extraProps,
       identity = if (withId._2 >= 0) withId._2 + nRows else -1L,
       metrics = extraMetrics + ("numOutputRows" -> nRows),
-      fileStats = stats, schemaUnion = true)
-    if (cdfEnabled && files.nonEmpty) writeChanges(
-      readFiles(files.map(absPath), data.schema)
+      fileStats = stats ++ harvestStats(rewritten), addedDv = dvs)
+    if (cdfEnabled && files.nonEmpty) {
+      val inserts = readFiles(files.map(absPath), data.schema)
         .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(c.version)), c.version)
+      val changes = replaced.fold(inserts)(r => inserts.unionByName(
+        r._3.drop(DvFileCol, DvPosCol).withColumn("_change_type", lit("delete"))))
+      writeChanges(changes.withColumn("_commit_version", lit(c.version)), c.version)
+    }
     c
+  }
+
+  /** Live files whose `key` range can overlap one of the freshly written
+    * `files`' key ranges; every live file when one of them recorded no
+    * range for `key`. Stats hold rendered values, and FileStats compares
+    * a rendered literal against them by the column's type. */
+  private def overlapping(key: String, files: Seq[String],
+      stats: Map[String, FileStats.Stats]): Seq[String] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{And, GreaterThanOrEqual, LessThanOrEqual, Literal, Or}
+    val ranges = files.map(f => stats.get(f).flatMap(_.get(key)))
+    if (ranges.contains(None)) return filesAt()
+    val k = UnresolvedAttribute(key)
+    pruneFilesByExpr(ranges.flatten.map { case (lo, hi) =>
+      And(GreaterThanOrEqual(k, Literal(lo)), LessThanOrEqual(k, Literal(hi)))
+    }.reduce[org.apache.spark.sql.catalyst.expressions.Expression](Or(_, _)))._1
   }
 
   def overwrite(df: DataFrame, operation: String = "OVERWRITE",
@@ -570,7 +628,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     commit(operation, files, removed, withId._1.schema, identity = withId._2,
       props = if (extraProps.isEmpty) null else properties ++ extraProps,
       fileStats = harvestStats(files),
-      removedDv = snapshot.dvFiles.keys.toSeq)
+      removedDv = snapshot.dvFiles.keys.toSeq, schemaUnion = false)
   }
 
   /** Overwrite CONDITIONED ON A SNAPSHOT: removes exactly
@@ -593,7 +651,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       identity = withId._2,
       props = if (extraProps.isEmpty) null else properties ++ extraProps,
       fileStats = harvestStats(files),
-      removedDv = snapshot.dvFiles.keys.toSeq)
+      removedDv = snapshot.dvFiles.keys.toSeq, schemaUnion = false)
   }
 
   /** TRUNCATE: drop every live file, keep schema (`DP/Step 1:231`). */
@@ -617,7 +675,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       schemaAt(version), Map("restoredVersion" -> version.toString),
       fileStats = added.map(f => f -> want.files(f)).filter(_._2.nonEmpty).toMap,
       addedDv = want.dvFiles.keys.filterNot(cur.dvFiles.contains).toSeq,
-      removedDv = cur.dvFiles.keys.filterNot(want.dvFiles.contains).toSeq)
+      removedDv = cur.dvFiles.keys.filterNot(want.dvFiles.contains).toSeq,
+      schemaUnion = false)
   }
 
   /** Number of versions committed within the last `hours` (age→version
@@ -867,7 +926,7 @@ object GraftTable {
       properties: Map[String, String] = Map.empty): GraftTable = {
     val t = new GraftTable(spark, path)
     Files.createDirectories(Paths.get(path))
-    t.commit("CREATE TABLE", Nil, Nil, schema, props = properties)
+    t.commit("CREATE TABLE", Nil, Nil, schema, props = properties, schemaUnion = false)
     t
   }
 

@@ -210,7 +210,7 @@ object Maintenance {
       interleave: Boolean = true, curve: String = "z"): Commit = {
     val (zorderByEff, curveEff, target) = resolveLayout(t, zorderBy, curve)
     val files = t.filesAt()
-    if (files.isEmpty) return t.commit("OPTIMIZE", Nil, Nil, t.schemaAt(), schemaUnion = true)
+    if (files.isEmpty) return t.commit("OPTIMIZE", Nil, Nil, t.schemaAt())
     val totalBytes = files.map(f => Files.size(Paths.get(f))).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
 
@@ -227,7 +227,7 @@ object Maintenance {
         "numFilesRemoved" -> files.size.toLong,
         "numFilesAdded" -> added.size.toLong,
         "bytesCompacted" -> totalBytes),
-      fileStats = t.harvestStats(added), schemaUnion = true)
+      fileStats = t.harvestStats(added))
   }
 
   /** Predicate-scoped OPTIMIZE — `OPTIMIZE t WHERE p [ZORDER BY (...)]`:
@@ -258,8 +258,7 @@ object Maintenance {
       }
     val (matching, _) = t.pruneFilesByExpr(pred)
     if (matching.size < 2) // nothing to compact in scope — record the no-op
-      return t.commit("OPTIMIZE", Nil, Nil, t.schemaAt(), params,
-        schemaUnion = true)
+      return t.commit("OPTIMIZE", Nil, Nil, t.schemaAt(), params)
     val totalBytes = matching.map(f => Files.size(Paths.get(f))).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
     val df = t.readFiles(matching)
@@ -273,7 +272,7 @@ object Maintenance {
         "numFilesAdded" -> added.size.toLong,
         "bytesCompacted" -> totalBytes),
       fileStats = t.harvestStats(added),
-      addedDv = addedDv, removedDv = removedDv, schemaUnion = true)
+      addedDv = addedDv, removedDv = removedDv)
   }
 
   /** Incremental OPTIMIZE: compact only files below
@@ -294,8 +293,7 @@ object Maintenance {
       .filter(f => Files.size(Paths.get(f)) < (target * smallFileFraction).toLong)
     if (small.size < 2)
       return t.commit("OPTIMIZE", Nil, Nil, t.schemaAt(),
-        Map("zOrderBy" -> zorderByEff.mkString(","), "incremental" -> "true"),
-        schemaUnion = true)
+        Map("zOrderBy" -> zorderByEff.mkString(","), "incremental" -> "true"))
     val totalBytes = small.map(f => Files.size(Paths.get(f))).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
     val df = t.readFiles(small)
@@ -311,6 +309,6 @@ object Maintenance {
         "numFilesAdded" -> added.size.toLong,
         "bytesCompacted" -> totalBytes),
       fileStats = t.harvestStats(added),
-      addedDv = addedDv, removedDv = removedDv, schemaUnion = true)
+      addedDv = addedDv, removedDv = removedDv)
   }
 }

@@ -198,7 +198,7 @@ object MergeOps {
       if (notMatched.isEmpty)
         return t.commit("MERGE", Nil, Nil, schema, Map("predicate" -> condition),
           props = if (extraProps.isEmpty) null else t.properties ++ extraProps,
-          metrics = mergeMetrics, schemaUnion = true)
+          metrics = mergeMetrics)
       val anyInsert = iFlags.foldLeft(lit(false))(_ || _)
       val rows = notYet.filter(anyInsert).select(cols.map(insValue): _*)
       return t.append(rows, "MERGE", Map("predicate" -> condition), extraProps,
@@ -279,7 +279,7 @@ object MergeOps {
           "numTargetFilesAdded" -> added.size.toLong,
           "numCandidateFiles" -> candidateFiles.size.toLong,
           "numTargetFilesTotal" -> allFiles.size.toLong),
-        fileStats = t.harvestStats(added), schemaUnion = true)
+        fileStats = t.harvestStats(added))
 
       if (t.cdfEnabled) {
         val del = joined.filter(deleted)
@@ -305,17 +305,17 @@ object MergeOps {
     val schema = t.schemaAt()
     val allFiles = t.pruneFiles(predicate)._1 // stats-prune the discovery scan
     if (allFiles.isEmpty) return t.commit("DELETE", Nil, Nil, schema,
-      Map("predicate" -> predicate), schemaUnion = true)
+      Map("predicate" -> predicate))
     if (t.dvEnabled) return deleteWithDv(t, predicate, allFiles, schema)
     val df = t.readFilesWithPos(allFiles, schema).drop(GraftTable.DvPosCol)
       .withColumnRenamed(GraftTable.DvFileCol, "__file")
     val touched = GraftTable.localFiles(df.filter(expr(predicate)).select("__file"))
     if (touched.isEmpty)
-      return t.commit("DELETE", Nil, Nil, schema, Map("predicate" -> predicate), schemaUnion = true)
+      return t.commit("DELETE", Nil, Nil, schema, Map("predicate" -> predicate))
     val kept = t.readFiles(touched, schema).filter(not(expr(predicate)))
     val added = t.writeData(kept)
     val c = t.commit("DELETE", added, touched.map(t.relPath), schema, Map("predicate" -> predicate),
-      fileStats = t.harvestStats(added), schemaUnion = true)
+      fileStats = t.harvestStats(added))
     if (t.cdfEnabled) t.writeChanges(
       t.readFiles(touched, schema).filter(expr(predicate))
         .withColumn("_change_type", lit("delete"))
@@ -339,12 +339,12 @@ object MergeOps {
     val (dvRels, nDeleted) = t.writeDv(dels)
     if (nDeleted == 0) {
       dvRels.foreach(f => java.nio.file.Files.deleteIfExists(Paths.get(t.path, f)))
-      return t.commit("DELETE", Nil, Nil, schema, Map("predicate" -> predicate), schemaUnion = true)
+      return t.commit("DELETE", Nil, Nil, schema, Map("predicate" -> predicate))
     }
     val c = t.commit("DELETE", Nil, Nil, schema,
       Map("predicate" -> predicate, "deletionVector" -> "true"),
       metrics = Map("numDeletedRows" -> nDeleted),
-      addedDv = dvRels, schemaUnion = true)
+      addedDv = dvRels)
     if (t.cdfEnabled) t.writeChanges(
       t.readFilesWithPos(candidateFiles, schema, dvVersion = c.version - 1)
         .filter(expr(predicate))
@@ -359,12 +359,12 @@ object MergeOps {
     val schema = t.schemaAt()
     val allFiles = t.pruneFiles(predicate)._1 // stats-prune the discovery scan
     if (allFiles.isEmpty) return t.commit("UPDATE", Nil, Nil, schema,
-      Map("predicate" -> predicate), schemaUnion = true)
+      Map("predicate" -> predicate))
     val df = t.readFilesWithPos(allFiles, schema).drop(GraftTable.DvPosCol)
       .withColumnRenamed(GraftTable.DvFileCol, "__file")
     val touched = GraftTable.localFiles(df.filter(expr(predicate)).select("__file"))
     if (touched.isEmpty)
-      return t.commit("UPDATE", Nil, Nil, schema, Map("predicate" -> predicate), schemaUnion = true)
+      return t.commit("UPDATE", Nil, Nil, schema, Map("predicate" -> predicate))
     val rewritten = t.readFiles(touched, schema)
       .select(schema.fieldNames.toSeq.map { c =>
         assignments.get(c)
@@ -374,7 +374,7 @@ object MergeOps {
       }: _*)
     val added = t.writeData(rewritten)
     val c = t.commit("UPDATE", added, touched.map(t.relPath), schema, Map("predicate" -> predicate),
-      fileStats = t.harvestStats(added), schemaUnion = true)
+      fileStats = t.harvestStats(added))
     if (t.cdfEnabled) t.writeChanges(
       t.readFiles(touched, schema).filter(expr(predicate))
         .select(schema.fieldNames.toSeq.map { cn =>

@@ -23,13 +23,15 @@ import graft.tables.GraftTable
   *
   * Ingest loop at scale: `pairs = dedupBatch(t, batch)` (exact pairs vs
   * index + within batch, cost ∝ batch + matched postings, never corpus
-  * text), drop/quarantine the batch's dups, then `append(t, survivors)`
-  * — index maintenance is an append of the new docs' postings, never a
-  * rebuild. An append writes the batch's postings at the batch's own
-  * parallelism (one file for a one-split batch), and probe planning does
-  * not grow with the files: the probe's read plans from the commit log's
-  * file list ([[graft.tables.LogFileIndex]]), with no listing job over
-  * the index's files. Periodic `Maintenance.optimize` compacts them.
+  * text; two Spark actions), drop/quarantine the batch's dups, then
+  * `append(t, survivors)` — index maintenance is one commit adding the
+  * new docs' postings, never a rebuild, and for fresh ids no Spark job
+  * beyond the posting write. An append writes the batch's postings at
+  * the batch's own parallelism (one file for a one-split batch), and
+  * probe planning does not grow with the files: the probe's read plans
+  * from the commit log's file list ([[graft.tables.LogFileIndex]]), with
+  * no listing job over the index's files. Periodic
+  * `Maintenance.optimize` compacts them.
   *
   * Indexes written with the earlier `__band`-partitioned layout keep
   * working unchanged: an append null-fills their `__band` column through
@@ -59,32 +61,25 @@ object DedupIndex {
         s"${t.path} is not a dedup index table: property $key missing " +
           "(build one with DedupIndex.build)")).toInt
 
-  /** Ingest a new batch's postings — per-ingest index maintenance.
+  /** Ingest a new batch's postings — per-ingest index maintenance, as
+    * one index version and, for fresh ids, no Spark job beyond the
+    * posting write.
     *
     * Id collisions SUPERSEDE, matching [[dedupBatch]]'s probe semantics:
-    * a re-ingested doc's OLD postings are merge-deleted before the new
-    * ones append, so per-doc shingle sets never merge two versions —
-    * merged sets would silently deflate every later Jaccard the doc
-    * participates in. The delete's file discovery stats-prunes on doc_id,
-    * so ingests of fresh ids (the common case — appends cluster id
-    * ranges by arrival) touch no existing files and pay only the
-    * metadata check. */
+    * a re-ingested doc's OLD postings are deleted in the same commit that
+    * adds the new ones ([[GraftTable.appendReplacing]]), so per-doc
+    * shingle sets never merge two versions — merged sets would silently
+    * deflate every later Jaccard the doc participates in — and the
+    * version before the append still reads the old postings. The new
+    * postings' footer stats give their doc_id ranges, and only live
+    * files overlapping them are read, so ingests of fresh ids (the common
+    * case — appends cluster id ranges by arrival) read no existing file.
+    * A doc with no shingle (fewer than n words) adds and supersedes
+    * nothing. */
   def append(t: GraftTable, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    // persist the grams: they are consumed TWICE (the supersede merge's
-    // source ids, then the posting append) and re-shingling the batch per
-    // consumer doubled the per-ingest maintenance cost (guide §5: reuse
-    // beats recompute; bounded — one batch's postings)
-    val df = DedupOps.shingleTable(docs, intProp(t, NProp), idCol, textCol)
-      .persist()
-    try {
-      graft.tables.MergeOps.mergeInto(t, df.select("doc_id").distinct(),
-        "target.doc_id = source.doc_id",
-        matched = Seq(graft.tables.MergeOps.WhenMatched(None,
-          graft.tables.MergeOps.DeleteAction)))
-      t.append(df, "DEDUP INDEX APPEND")
-    } finally df.unpersist(blocking = false)
-  }
+      idCol: String = "doc_id", textCol: String = "text"): Unit =
+    t.appendReplacing(DedupOps.shingleTable(docs, intProp(t, NProp), idCol, textCol),
+      "doc_id", "DEDUP INDEX APPEND")
 
   /** Exact near-dup pairs (Jaccard ≥ threshold) between a new batch and
     * the indexed corpus (plus within the batch), reading only postings

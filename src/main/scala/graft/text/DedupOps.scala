@@ -180,6 +180,8 @@ object DedupOps {
     * values stay exact for whichever version the pair references. The
     * exactness argument is unaffected — the superseding doc is in the
     * batch, so its prefix probes the index like any other batch doc.
+    * A batch doc with no shingle (fewer than n words) neither probes nor
+    * supersedes. Batch ids are unique: one row is one document.
     *
     * @return exact-Jaccard pairs (d1 < d2, ≥ threshold) where at least
     *         one side is a batch document
@@ -187,86 +189,85 @@ object DedupOps {
   def incrementalJaccardPairs(corpusGrams: DataFrame, batch: DataFrame,
       n: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val batchGrams = shingleTable(batch, n, idCol, textCol).persist()
+    val batchSets = shingleSets(batch, n, idCol, textCol).persist()
     try graft.perf.Lineage.cut(
-      incrementalPipeline(corpusGrams, batchGrams, threshold))
-    finally batchGrams.unpersist()
+      incrementalPipeline(corpusGrams, batchSets, threshold))
+    finally batchSets.unpersist()
   }
+
+  /** One row per document: `sh`, the hashed shingles `shingleTable`
+    * explodes for it, as an array, and `sz`, their count — a per-doc
+    * shingle set built inside the document's own row, with no group-by. */
+  private[graft] def shingleSets(docs: DataFrame, n: Int,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    docs.select(col(idCol).as("doc_id"), TextOps.words(col(textCol)).as("__w"))
+      .select(col("doc_id"),
+        transform(TextOps.shinglesFromWords(col("__w"), n), s => xxhash64(s)).as("sh"))
+      .withColumn("sz", size(col("sh")).cast("long"))
 
   /** The un-materialized probe pipeline behind [[incrementalJaccardPairs]]
     * — exposed pre-cut so the plan-audit spec can inspect the joins and
     * scans that the eager lineage cut otherwise collapses to an RDD scan.
-    * `batchGrams` is the batch's shingle table (callers persist it: the
-    * plan references it four times). */
+    * `batchSets` is the batch's [[shingleSets]] (callers persist it: the
+    * plan references it five times).
+    *
+    * Two actions: the candidate cut and the verify. A batch doc's prefix
+    * is its shingles in hash order, sliced inside its own row — a global
+    * order, so the one-sided probe and the two-sided batch self-join stay
+    * exact (see above) with no window and no exchange over the batch.
+    * Each candidate is oriented (batch doc `b`, other doc `o`); the verify
+    * reads the index once — the touched docs' postings, minus superseded
+    * ids, grouped to arrays once — and takes every batch doc's array
+    * from its row. */
   private[graft] def incrementalPipeline(corpusGrams: DataFrame,
-      batchGrams: DataFrame, threshold: Double,
+      batchSets: DataFrame, threshold: Double,
       materializeCandidates: Boolean = true): DataFrame = {
-    val wDf = Window.partitionBy("shingle")
-    val wRn = Window.partitionBy("doc_id").orderBy(col("df"), col("shingle"))
-    val wSz = Window.partitionBy("doc_id")
-    val bPrefixRaw = batchGrams
-      .withColumn("df", count(lit(1)).over(wDf))
-      .withColumn("rn", row_number().over(wRn))
-      .withColumn("sz", count(lit(1)).over(wSz))
-      .filter(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
-      .select("doc_id", "shingle")
-    // the prefix is referenced THREE times in the candidate job (index
-    // probe + both sides of the batch self-join); its two window
-    // exchanges would re-run per reference (plans cache nothing) —
-    // persist for the candidate job's duration (guide §2.4: one
-    // exchange, shared). The plan-audit path (materializeCandidates =
-    // false) keeps the declarative form.
-    val bPrefix =
-      if (materializeCandidates) bPrefixRaw.persist() else bPrefixRaw
-    val vsCorpus = bPrefix.alias("p")
-      .join(corpusGrams.alias("c"), col("p.shingle") === col("c.shingle"))
-      .select(least(col("p.doc_id"), col("c.doc_id")).as("d1"),
-        greatest(col("p.doc_id"), col("c.doc_id")).as("d2"))
-      .filter(col("d1") =!= col("d2"))
-    val vsBatch = bPrefix.alias("a")
-      .join(bPrefix.alias("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-    // the candidate pair set is consumed three times below (touched-id
-    // projection twice, verify join once); left lazy, every consumer
-    // re-runs the whole prefix + index-join subtree — measured ~3× the
-    // probe cost at gate scale. Cut it once (result-materialization
-    // idiom: candidates ∝ matches, bounded); the plan audit passes
-    // materializeCandidates=false to inspect the full declarative plan.
-    val candidatesRaw = vsCorpus.unionByName(vsBatch).distinct()
+    val batch = batchSets.filter(col("sz") > 0).select("doc_id", "sh", "sz")
+    val prefixLen = greatest(lit(0),
+      col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast("int")
+    val prefix = batch.select(col("doc_id"),
+      explode(slice(sort_array(col("sh")), lit(1), prefixLen)).as("shingle"))
+    // one probe join for both candidate kinds: the prefix against the
+    // index postings (one-sided) and against the batch's own prefix rows
+    // (two-sided, lower id first)
+    val postings = corpusGrams.select(col("doc_id"), col("shingle"), lit(false).as("batch"))
+      .unionByName(prefix.withColumn("batch", lit(true)))
+    val candidatesRaw = prefix.alias("p")
+      .join(postings.alias("c"), col("p.shingle") === col("c.shingle") &&
+        col("p.doc_id") =!= col("c.doc_id") &&
+        (!col("c.batch") || col("p.doc_id") < col("c.doc_id")))
+      .select(col("p.doc_id").as("b"), col("c.doc_id").as("o"))
+      .distinct()
+    // the candidates are consumed twice (touched ids, verify join): cut
+    // them once (∝ matches, bounded); the plan audit passes
+    // materializeCandidates=false to inspect the declarative plan
     val candidates =
-      if (materializeCandidates) {
-        val c = graft.perf.Lineage.cut(candidatesRaw)
-        bPrefix.unpersist(blocking = false) // cut materialized; done
-        c
-      } else candidatesRaw
-    val touched = candidates.select(col("d1").as("doc_id"))
-      .unionByName(candidates.select(col("d2").as("doc_id"))).distinct()
-    // batch supersedes the index on id collision: anti-join keeps a
-    // re-ingested id's OLD grams out of the union, so per-doc sets
-    // never merge two versions (the anti-join is against batch ids —
-    // metadata-scale next to the index)
-    val batchIds = batchGrams.select("doc_id").distinct()
-    // touched ∝ candidates ∝ matches (the same boundedness the cut above
-    // already assumes) and batchIds is metadata-scale — BROADCAST both,
-    // so the semi/anti never shuffle the INDEX postings by doc_id (the
-    // r18 plan showed a SortMergeJoin LeftSemi exchanging the full
-    // corpus-gram table per probe — the structurally wrong move at
-    // 100 TB; guide §3.1). The later groupBy exchanges only the
-    // touched docs' grams.
-    val gramsTouchedRaw = corpusGrams
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-      .unionByName(batchGrams)
-      .join(broadcast(touched), Seq("doc_id"), "left_semi")
-    // verifyPairs builds its per-doc sets on BOTH sides of the pair, and
-    // each side would re-scan the index; cut the touched docs' postings
-    // once (∝ candidates, the same bound as the candidate cut) so the
-    // probe reads the index twice (candidate join + this cut), not three
-    // times.
-    val gramsTouched =
-      if (materializeCandidates) graft.perf.Lineage.cut(gramsTouchedRaw)
-      else gramsTouchedRaw
-    verifyPairs(candidates, gramsTouched, threshold)
+      if (materializeCandidates) graft.perf.Lineage.cut(candidatesRaw)
+      else candidatesRaw
+    // the batch supersedes the index on id collision: its ids' OLD
+    // postings leave the verify's index side, so per-doc sets never
+    // merge two versions and a batch `o` takes its array from its row
+    val live = corpusGrams.join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
+    val others = live
+      .join(candidates.select(col("o").as("doc_id")), Seq("doc_id"), "left_semi")
+      .groupBy("doc_id")
+      .agg(collect_list("shingle").as("sh"), count(lit(1)).as("sz"))
+      .withColumn("batch", lit(false))
+      .unionByName(batch.withColumn("batch", lit(true)))
+    // verifyPairs' arithmetic, so values equal jaccardPairs' bit for bit
+    candidates
+      .join(batch.toDF("b", "shb", "szb"), "b")
+      .join(others.toDF("o", "sho", "szo", "ob"), "o")
+      // a pair of batch docs also reaches the probe through a re-ingested
+      // id's old postings, in either orientation: keep (lower, higher),
+      // which the prefix self-join always yields
+      .filter(!col("ob") || col("b") < col("o"))
+      .withColumn("inter", size(array_intersect(col("shb"), col("sho"))).cast("long"))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("szb") + col("szo") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select(least(col("b"), col("o")).as("d1"), greatest(col("b"), col("o")).as("d2"),
+        round(col("jaccard") + lit(1e-9), 4).as("jaccard"))
   }
 
   /** Substring-level duplicated-span statistics (the published heavier

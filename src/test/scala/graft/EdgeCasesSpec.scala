@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -194,5 +195,23 @@ class EdgeCasesSpec extends SparkTestBase {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     assert(TableProfiler.discover(root).isEmpty)
     assert(TableProfiler.profile(spark, Nil).isEmpty)
+  }
+  test("q21 dense-rank top-10 keeps a null revenue exactly when the window form ranks it ≤ 10") {
+    def gateVsWindow(orders: Seq[(Long, Option[Double])]): (Seq[Row], Seq[Row]) = {
+      val dir = scratch("q21nulls")
+      orders.toDF("o_custkey", "o_totalprice").write.parquet(s"$dir/orders.parquet")
+      Tables.t(spark, dir, "orders").createOrReplaceTempView("orders")
+      (SparkEntry.queries("q21_dense_rank_topk")(spark, dir).collect().toSeq,
+        spark.sql(SparkEntry.oracleSql("q21_dense_rank_topk")).collect().toSeq)
+    }
+    // three distinct revenues and a null one: the null ranks 4th
+    val (few, fewWant) = gateVsWindow(
+      Seq((1L, Some(5.0)), (2L, Some(7.0)), (3L, Some(7.0)), (4L, Some(9.0)), (5L, None)))
+    assert(few == fewWant, s"gate $few, window form $fewWant")
+    assert(few.exists(_.isNullAt(1)), s"the null revenue must keep: $few")
+    // eleven distinct revenues: the null ranks 12th and drops
+    val (many, manyWant) = gateVsWindow((1L to 11L).map(i => (i, Option(i * 10.0))) :+ ((12L, None)))
+    assert(many == manyWant, s"gate $many, window form $manyWant")
+    assert(many.size == 10 && !many.exists(_.isNullAt(1)))
   }
 }

@@ -123,6 +123,51 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  /** An indexed corpus and an ingest batch over a six-word vocabulary,
+    * 1–9 words a doc (n = 3, so some docs have no shingle). Batch ids
+    * come from a range that half overlaps the corpus ids (re-ingests, some
+    * of them too short to shingle), a third of the batch copies corpus
+    * texts (pairs at Jaccard 1), and some batches are empty. */
+  private val ingestGen: Gen[(List[(Long, String)], List[(Long, String)])] = {
+    val text = Gen.choose(1, 9).flatMap(k => Gen.listOfN(k,
+      Gen.oneOf("alpha", "beta", "gamma", "delta", "eps", "zeta")).map(_.mkString(" ")))
+    for {
+      corpus <- Gen.choose(4, 12).flatMap(Gen.listOfN(_, text))
+      ids <- Gen.frequency((1, Gen.const(Nil)),
+        (5, Gen.someOf(0L until 2L * corpus.size).map(_.toList)))
+      texts <- Gen.listOfN(ids.size, Gen.frequency((2, text), (1, Gen.oneOf(corpus))))
+    } yield (corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }, ids.zip(texts))
+  }
+
+  test("DedupIndex: a probe equals jaccardPairs over corpus ∪ batch on its batch-side pairs") {
+    import spark.implicits._
+    val n = 3
+    def shingles(text: String) = text.split(" ").length >= n
+    val cases = samples(ingestGen, 8)
+    // the generator must reach every corner the contract names
+    assert(cases.exists(_._2.isEmpty), "no empty batch")
+    assert(cases.exists { case (c, b) => b.exists(x => shingles(x._2) && c.exists(_._1 == x._1)) },
+      "no re-ingested id")
+    assert(cases.exists { case (c, b) => b.exists(x => !shingles(x._2) && c.exists(_._1 == x._1)) },
+      "no re-ingest too short to shingle")
+    cases.zipWithIndex.foreach { case ((corpus, batch), i) =>
+      val t = graft.text.DedupIndex.build(corpus.toDF("doc_id", "text"), scratch(s"propdiff$i"), n)
+      // a batch doc supersedes its id iff it has a shingle; the reference
+      // corpus is what the index holds once the batch is appended
+      val superseding = batch.filter(b => shingles(b._2)).map(_._1).toSet
+      val union = (corpus.filterNot(c => superseding(c._1)) ++ batch).toDF("doc_id", "text")
+      Seq(0.3, 0.5, 0.8, 1.0).foreach { th =>
+        val got = graft.text.DedupIndex.dedupBatch(t, batch.toDF("doc_id", "text"), th)
+          .as[(Long, Long, Double)].collect().toSeq
+        val want = graft.text.DedupOps.jaccardPairs(union, n, th)
+          .as[(Long, Long, Double)].collect()
+          .filter { case (d1, d2, _) => superseding(d1) || superseding(d2) }.toSet
+        assert(got.size == got.toSet.size, s"duplicate pairs at t=$th: $got")
+        assert(got.toSet == want, s"t=$th corpus=$corpus batch=$batch")
+      }
+    }
+  }
+
   /** Random float vectors with strictly positive coordinates (no zero
     * norms — the query contract) in 8 dims. */
   private val vecsGen: Gen[List[(Long, Seq[Float])]] = for {

@@ -146,12 +146,13 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("dedup-index probe prunes the posting scan to (doc_id, shingle)") {
     // the probe reads the index table twice (candidate join + the verify
-    // cut of the touched docs' postings); if projection pruning
+    // read of the touched docs' postings); if projection pruning
     // regressed, each read would drag a partitioned index's __part_
     // copies — and on a real index, any future wide columns — through
-    // every shuffle of the pipeline. Composed from the
-    // pre-cut pipeline: dedupBatch itself returns an eager lineage cut
-    // whose plan is just an RDD scan.
+    // every shuffle of the pipeline. The batch prefix is sliced inside
+    // each doc's row, so no Window (and no exchange of the batch for one)
+    // may come back. Composed from the pre-cut pipeline: dedupBatch
+    // itself returns an eager lineage cut whose plan is just an RDD scan.
     import graft.text.{DedupIndex, DedupOps}
     val docs = Tables.t(spark, sf, "documents").select("doc_id", "text")
     val t = DedupIndex.build(docs, scratch("dedupplan"), n = 5)
@@ -160,8 +161,8 @@ class PlanAuditSpec extends SparkTestBase {
         concat(col("text"), lit(" t")).as("text"))
     val df = DedupOps.incrementalPipeline(
       t.read().select("doc_id", "shingle"),
-      DedupOps.shingleTable(batch, 5), 0.5, materializeCandidates = false)
-    val p = df.queryExecution.executedPlan.toString
+      DedupOps.shingleSets(batch, 5), 0.5, materializeCandidates = false)
+    val p = finalPlan(df)
     val schemas = "ReadSchema: struct<[^>]*>".r.findAllIn(p).toSeq
       .filter(_.contains("shingle"))
     assert(schemas.nonEmpty, s"expected posting scans in the plan:\n$p")
@@ -169,6 +170,7 @@ class PlanAuditSpec extends SparkTestBase {
       s"posting scans must prune to (doc_id, shingle):\n$schemas")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"no cartesian/unconditioned join in the probe path:\n$p")
+    assert(!p.contains("Window"), s"the batch prefix must not window:\n$p")
   }
 
   test("curation pipeline plans as one flow with exactly two shuffles") {

@@ -2,7 +2,8 @@ package graft.text
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.{SparkTestBase, Tables}
@@ -11,27 +12,33 @@ import graft.tables.GraftTable
 /** Persisted dedup index semantics: reopen-from-storage equivalence to
   * the in-session incremental pipeline, append maintenance (a dedup
   * after append sees earlier batches), one posting file per one-split
-  * append that leaves the index's properties as built, two index scans
-  * per probe, indexes in the earlier band-partitioned layout, and the
-  * n-from-properties contract. */
+  * append that leaves the index's properties as built, one index version
+  * per append with the superseded postings still readable one version
+  * back, two index scans and two SQL executions per probe, one for a
+  * fresh-id append, indexes in the earlier band-partitioned layout, and
+  * the n-from-properties contract. */
 class DedupIndexSpec extends SparkTestBase {
   import spark.implicits._
 
   /** Records a probe may read per batch posting beyond its index scans:
-    * the verify cut holds the touched docs' postings (the batch's and
-    * their near-copies' in the index), plus the candidate cut. */
+    * the batch's cached shingle rows and the candidate cut. */
   private val BatchReadsPerRow = 4
 
   private def d = Tables.t(spark, sf, "documents").select("doc_id", "text")
 
+  /** What the Spark work started on this thread while `body` ran did. */
+  private final case class Observed(recordsRead: Long, sqlExecutions: Int)
+
   /** Input records (file scans and cached-block reads) of the tasks of
-    * the Spark jobs started on this thread while `body` runs. Listener
-    * events arrive in order, so a marker job run after `body` flushes
-    * every task end `body` caused. */
-  private def recordsReadDuring(body: => Unit): Long = {
-    val group = s"dedup-reads-${java.util.UUID.randomUUID()}"
+    * the Spark jobs, and the SQL executions (nested ones included),
+    * started on this thread while `body` runs. Listener events arrive in
+    * order, so a marker job run after `body` flushes every event `body`
+    * caused. */
+  private def observe(body: => Unit): Observed = {
+    val group = s"dedup-obs-${java.util.UUID.randomUUID()}"
     val stageGroup = new ConcurrentHashMap[Int, String]()
     val read = new ConcurrentHashMap[String, java.lang.Long]()
+    val execs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
@@ -39,6 +46,11 @@ class DedupIndexSpec extends SparkTestBase {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         for (g <- Option(stageGroup.get(e.stageId)); m <- Option(e.taskMetrics))
           read.merge(g, m.inputMetrics.recordsRead, (a, b) => a + b)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          execs.incrementAndGet()
+        case _ =>
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -51,7 +63,7 @@ class DedupIndexSpec extends SparkTestBase {
       while (!read.containsKey(group + "-end") && System.currentTimeMillis() < deadline)
         Thread.sleep(10)
       assert(read.containsKey(group + "-end"), "listener never saw the marker job")
-      read.getOrDefault(group, 0L)
+      Observed(read.getOrDefault(group, 0L), execs.get)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -157,12 +169,70 @@ class DedupIndexSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text")
     val batchRows = DedupOps.shingleTable(batch, 5).count()
     var pairs = 0L
-    val read = recordsReadDuring {
+    val read = observe {
       pairs = DedupIndex.dedupBatch(t, batch, 0.5).count()
-    }
+    }.recordsRead
     assert(pairs > 0, "planted near-copies must be found")
     assert(read <= 2 * indexRows + BatchReadsPerRow * batchRows,
       s"read $read records for $indexRows index and $batchRows batch postings")
+  }
+
+  test("every append commits exactly one index version, fresh or superseding") {
+    val t = DedupIndex.build(d.limit(200), scratch("dedupidx10"), n = 5)
+    val v0 = t.currentVersion
+    DedupIndex.append(t, batchOf(15, 500000, " tail f").coalesce(1))
+    assert(t.currentVersion == v0 + 1, s"fresh ids: ${t.commits.drop(v0.toInt + 1).map(_.operation)}")
+    val fresh = t.commitAt(v0 + 1)
+    assert(fresh.addedFiles.size == 1 && fresh.removedFiles.isEmpty)
+    // re-ingest one built id with another doc's text
+    val Array((id, _), (_, text)) = d.orderBy("doc_id").limit(2).as[(Long, String)].collect()
+    DedupIndex.append(t, Seq((id, text)).toDF("doc_id", "text"))
+    assert(t.currentVersion == v0 + 2, s"colliding id: ${t.commits.drop(v0.toInt + 1).map(_.operation)}")
+    val sup = t.commitAt(v0 + 2)
+    assert(sup.operation == "DEDUP INDEX APPEND" && sup.removedFiles.nonEmpty,
+      s"the superseded postings must leave in the same commit: $sup")
+    val now = t.read().filter(col("doc_id") === id).select("shingle").as[Long].collect().toSet
+    assert(now == DedupOps.shingleTable(Seq((id, text)).toDF("doc_id", "text"), 5)
+      .select("shingle").as[Long].collect().toSet)
+  }
+
+  test("a superseding append on a DV, change-feed index is one version with its deletes in the feed") {
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six")).toDF("doc_id", "text")
+    val t = DedupIndex.build(corpus, scratch("dedupidx13"), n = 3)
+    t.setProperties(Map("graft.deletionVectors" -> "true", "graft.enableChangeDataFeed" -> "true"))
+    val v0 = t.currentVersion
+    DedupIndex.append(t, Seq((1L, "one two three four five six")).toDF("doc_id", "text"))
+    val c = t.commitAt(v0 + 1)
+    assert(t.currentVersion == v0 + 1 && c.addedDvFiles.nonEmpty && c.removedFiles.isEmpty, s"$c")
+    assert(t.read().filter(col("doc_id") === 1L).count() == 4 && t.read().count() == 8)
+    val feed = t.changes(v0 + 1).groupBy("_change_type").count().as[(String, Long)].collect().toMap
+    assert(feed == Map("insert" -> 4L, "delete" -> 4L), s"$feed")
+  }
+
+  test("the version before a superseding append still reads the old postings") {
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six")).toDF("doc_id", "text")
+    val t = DedupIndex.build(corpus, scratch("dedupidx11"), n = 3)
+    def grams(v: Long) = t.read(v).filter(col("doc_id") === 1L)
+      .select("shingle").as[Long].collect().toSet
+    val old = grams(t.currentVersion)
+    DedupIndex.append(t, Seq((1L, "one two three four five six")).toDF("doc_id", "text"))
+    val v = t.currentVersion
+    assert(grams(v - 1) == old && old.size == 4, s"time travel lost the old postings: ${grams(v - 1)}")
+    assert(grams(v) == t.read(v).filter(col("doc_id") === 2L).select("shingle").as[Long].collect().toSet)
+    assert(t.read(v).count() == 8 && t.read(v - 1).count() == 8)
+  }
+
+  test("a probe is two SQL executions and a fresh-id append is one") {
+    val t = DedupIndex.build(d, scratch("dedupidx12"), n = 5)
+    val batch = batchOf(50, 500000, " tail s").collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1))).toDF("doc_id", "text")
+    DedupIndex.dedupBatch(t, batch, 0.5).count() // warm: first-use planning jobs
+    val probe = observe { DedupIndex.dedupBatch(t, batch, 0.5) }.sqlExecutions
+    assert(probe >= 1 && probe <= 2, s"a probe must be at most two actions, ran $probe SQL executions")
+    val append = observe { DedupIndex.append(t, batch) }.sqlExecutions
+    assert(append == 1, s"a fresh-id append must be the posting write alone, ran $append")
   }
 
   test("an index in the band-partitioned layout still appends, supersedes and probes") {
