@@ -2,12 +2,14 @@ package graft.tables
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
+import java.util.regex.Pattern
 
 import scala.collection.JavaConverters._
 import scala.collection.immutable.VectorMap
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, LongType, StringType, TimestampType, IntegerType}
@@ -33,41 +35,66 @@ final case class Commit(
     addedDvFiles: Seq[String] = Nil,
     removedDvFiles: Seq[String] = Nil)
 
-/** A table's live state at one version: data files (table-relative path
-  * → footer stats, in the order they became live) and deletion-vector
-  * files. `next` is the one fold of a commit into a live set. Stats cover
-  * live files only; a file committed without them (e.g. re-added by an
-  * older RESTORE) maps to an empty map, which pruning keeps. */
+/** A table's state at one version: live data files (table-relative path
+  * → footer stats, in the order they became live), live deletion-vector
+  * files, and the version's timestamp, schema, properties and identity
+  * watermark. `next` is the one fold of a commit into a state; a
+  * checkpoint is one rendered Snapshot. Stats cover live files only; a
+  * file committed without them (e.g. re-added by an older RESTORE) maps
+  * to an empty map, which pruning keeps. */
 private[tables] final class Snapshot private (
     val version: Long,
+    val timestampMs: Long,
+    val schemaJson: String,
+    val properties: Map[String, String],
+    val identityHighWatermark: Long,
     val files: VectorMap[String, FileStats.Stats],
     val dvFiles: VectorMap[String, Unit],
-    removals: Int) {
+    removals: Int,
+    private var parsedSchema: StructType) {
+
+  /** The schema, parsed once and carried along the fold while the JSON
+    * stays the same. */
+  def schema: StructType = {
+    if (parsedSchema == null) parsedSchema = GraftTable.DataType.fromJson(schemaJson)
+    parsedSchema
+  }
 
   /** Removes first, then adds: a file removed and re-added moves to the
-    * end, a live file re-added keeps its place. */
+    * end, a live file re-added keeps its place. A commit that touches no
+    * file keeps both maps. */
   def next(c: Commit): Snapshot = {
+    def at(fs: VectorMap[String, FileStats.Stats], dvs: VectorMap[String, Unit], dead: Int) =
+      new Snapshot(c.version, c.timestampMs, c.schemaJson, c.properties, c.identityHighWatermark,
+        fs, dvs, dead, if (c.schemaJson == schemaJson) parsedSchema else null)
+    if (c.addedFiles.isEmpty && c.removedFiles.isEmpty &&
+        c.addedDvFiles.isEmpty && c.removedDvFiles.isEmpty) return at(files, dvFiles, removals)
     val fs = (files -- c.removedFiles) ++
       c.addedFiles.map(f => f -> c.fileStats.getOrElse(f, files.getOrElse(f, Map.empty)))
     val dvs = (dvFiles -- c.removedDvFiles) ++ c.addedDvFiles.map(_ -> (()))
     val dead = removals + c.removedFiles.size + c.removedDvFiles.size
     // VectorMap keeps a tombstone per removed key: rebuild once they
     // outnumber live keys (`from` returns a VectorMap argument as-is)
-    if (dead <= fs.size + dvs.size + 64) new Snapshot(c.version, fs, dvs, dead)
-    else new Snapshot(c.version, VectorMap.from(fs.iterator), VectorMap.from(dvs.iterator), 0)
+    if (dead <= fs.size + dvs.size + 64) at(fs, dvs, dead)
+    else at(VectorMap.from(fs.iterator), VectorMap.from(dvs.iterator), 0)
   }
 }
 
 private[tables] object Snapshot {
-  val empty = new Snapshot(-1L, VectorMap.empty, VectorMap.empty, 0)
+  val empty = new Snapshot(-1L, 0L, null, Map.empty, 0L, VectorMap.empty, VectorMap.empty, 0, null)
 
-  /** Count of from-scratch replays (tests: the tip is extended, not re-folded). */
+  /** A state as a checkpoint records it. */
+  def apply(version: Long, timestampMs: Long, schemaJson: String,
+      properties: Map[String, String], identityHighWatermark: Long,
+      files: Seq[(String, FileStats.Stats)], dvFiles: Seq[String]): Snapshot =
+    new Snapshot(version, timestampMs, schemaJson, properties, identityHighWatermark,
+      VectorMap.from(files), VectorMap.from(dvFiles.map(_ -> (()))), 0, null)
+
+  /** Count of snapshots built below the tip (tests: tip questions build
+    * none, a historical read builds one). */
   private[tables] val replays = new java.util.concurrent.atomic.AtomicLong()
 
-  def replay(commits: Seq[Commit]): Snapshot = {
-    replays.incrementAndGet()
-    commits.foldLeft(empty)(_ next _)
-  }
+  def replay(commits: Seq[Commit]): Snapshot = commits.foldLeft(empty)(_ next _)
 }
 
 /** Versioned Parquet table ("tacklelog"): a data directory plus a JSON
@@ -78,10 +105,16 @@ private[tables] object Snapshot {
   *
   * Layout:
   * {{{
-  *   <path>/_log/v00000000000000000042.json   // one commit per version
-  *   <path>/data/<commit-uuid>/part-*.parquet // immutable data files
-  *   <path>/_changes/v42/part-*.parquet       // optional change feed
+  *   <path>/_log/v00000000000000000042.json          // one commit per version
+  *   <path>/_log/checkpoint-v00000000000000000040.json // state at v40
+  *   <path>/data/<commit-uuid>/part-*.parquet        // immutable data files
+  *   <path>/_changes/v42/part-*.parquet              // optional change feed
   * }}}
+  * A checkpoint, written every `checkpointInterval` commits, is the
+  * table's state at its version (live files with their stats, live DV
+  * files, schema, properties, identity watermark), so its size follows
+  * the live data, not the history. Logs written before hold checkpoints
+  * of the whole commit history (a JSON array); they stay readable.
   *
   * Scale design: the log stores *file lists*, so a snapshot read plans
   * from the log alone — a [[LogFileIndex]] over the live files, with no
@@ -100,53 +133,78 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   // ---- log access --------------------------------------------------------
 
-  /** Parsed commit log. The log is append-only, so the parsed commits and
-    * the tip [[Snapshot]] folded from them are cached session-wide (keyed
-    * by table path, shared across GraftTable instances) and extended
-    * incrementally: a call re-lists the directory (cheap), reads/parses
-    * only commit files it has not seen and advances the tip by those
-    * commits alone. A cold (or diverged) view bootstraps from the newest
-    * checkpoint file (written every `checkpointInterval` commits) plus
-    * the tail and replays them once — O(1) file reads per operation
-    * after warm-up, O(tail) on a fresh JVM. */
-  def commits: Seq[Commit] = logState.commits
+  /** Every commit, oldest first. Read from the commit files when first
+    * asked, then kept in the log cache and extended commit by commit, so
+    * history-heavy callers pay once and a session that never asks holds
+    * no per-commit state. */
+  def commits: Seq[Commit] = {
+    val st = logState
+    st.history.getOrElse {
+      val h = (0L to st.tip.version).map(readCommit).toVector
+      logCache.replace(path, st, new LogState(st.tip, Some(h)))
+      h
+    }
+  }
 
+  /** The session's view of the log: the tip [[Snapshot]], cached
+    * session-wide (keyed by table path, shared across GraftTable
+    * instances). Versions are published by hard link, so they are
+    * contiguous: a warm call stats `v{tip}` (a log that shrank behind the
+    * session's back is reloaded) and reads forward while `v{tip+1}`
+    * exists, folding only those commits — it never lists `_log`. A cold
+    * (or diverged) view lists `_log` once, reads the newest checkpoint
+    * (the state at its version, written every `checkpointInterval`
+    * commits) and folds the commits after it. */
   private def logState: LogState = {
-    if (!Files.isDirectory(logDir)) return LogState(Vector.empty, Vector.empty, Snapshot.empty)
-    val entries = listDir(logDir).map(_.getFileName.toString)
-    val names = entries.filter(_.matches("v\\d+\\.json")).sorted.toVector
     val cached = logCache.get(path)
-    if (cached != null && cached.names == names) return cached
-    val state =
-      if (cached != null && names.startsWith(cached.names)) {
-        val tail = names.drop(cached.names.size).map(readCommitFile)
-        LogState(names, cached.commits ++ tail, tail.foldLeft(cached.tip)(_ next _))
-      } else {
-        // fresh (or diverged) view: start from the newest checkpoint ≤ tip
-        val ckpts = entries.filter(_.matches("checkpoint-v\\d+\\.json")).sorted
-        val base: Vector[Commit] = ckpts.lastOption.map { c =>
-          logFileReads.incrementAndGet()
-          parseCommitList(new String(Files.readAllBytes(logDir.resolve(c)), "UTF-8")).toVector
-        }.getOrElse(Vector.empty)
-        val have = base.map(c => f"v${c.version}%020d.json").toSet
-        val parsed = base ++ names.filterNot(have).map(readCommitFile)
-        LogState(names, parsed, Snapshot.replay(parsed))
-      }
-    logCache.put(path, state)
-    state
+    if (cached == null || (cached.tip.version >= 0 && !Files.exists(commitFile(cached.tip.version))))
+      return coldLoad()
+    val tail = Iterator.iterate(cached.tip.version + 1)(_ + 1)
+      .takeWhile(v => Files.exists(commitFile(v))).map(readCommit).toVector
+    if (tail.isEmpty) cached
+    else {
+      val st = new LogState(tail.foldLeft(cached.tip)(_ next _), cached.history.map(_ ++ tail))
+      logCache.put(path, st)
+      st
+    }
+  }
+
+  private def coldLoad(): LogState = {
+    val names = logDir.toFile.list() // names only: no Path per entry
+    if (names == null) return new LogState(Snapshot.empty, Some(Vector.empty))
+    logListings.incrementAndGet()
+    def versions(p: Pattern) =
+      names.iterator.map(p.matcher).filter(_.matches).map(_.group(1).toLong)
+    val tip = versions(CommitName).maxOption.getOrElse(-1L)
+    val base = versions(CheckpointName).filter(_ <= tip).maxOption
+      .fold(Snapshot.empty)(readCheckpoint(_, tip))
+    val st = new LogState(foldTo(base, tip), None)
+    logCache.put(path, st)
+    st
   }
 
   /** Live state at the tip, kept in the log cache and advanced commit by
     * commit — never re-folded while the cache is warm. */
   private[tables] def snapshot: Snapshot = logState.tip
 
-  /** Live state at `version`: the tip, or (time travel) one replay of
-    * the log up to `version`. */
+  /** State at `version`: the tip, or (time travel) the newest checkpoint
+    * at or before `version` plus the commits after it. */
   private[tables] def snapshotAt(version: Long): Snapshot = {
-    val st = logState
-    if (version >= st.tip.version) st.tip
-    else Snapshot.replay(st.commits.takeWhile(_.version <= version))
+    val tip = logState.tip
+    if (version >= tip.version) tip
+    else if (version < 0) Snapshot.empty
+    else {
+      Snapshot.replays.incrementAndGet()
+      val base = Iterator.iterate(version - version % checkpointInterval)(_ - checkpointInterval)
+        .takeWhile(_ > 0).find(v => Files.exists(checkpointFile(v)))
+        .fold(Snapshot.empty)(readCheckpoint(_, version))
+      foldTo(base, version)
+    }
   }
+
+  /** `base` advanced by the commit files after it, up to `version`. */
+  private def foldTo(base: Snapshot, version: Long): Snapshot =
+    (base.version + 1 to version).foldLeft(base)((s, v) => s.next(readCommit(v)))
 
   /** Absolute path of a table-relative file, as `filesAt` returns it. */
   private def absPath(rel: String): String = Paths.get(path, rel).toString
@@ -157,12 +215,21 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     Paths.get(path).toAbsolutePath.normalize
       .relativize(Paths.get(file).toAbsolutePath.normalize).toString
 
-  private def readCommitFile(name: String): Commit = {
+  private def commitFile(version: Long): Path = logDir.resolve(f"v$version%020d.json")
+  private def checkpointFile(version: Long): Path =
+    logDir.resolve(f"checkpoint-v$version%020d.json")
+
+  private def readLogFile(p: Path): String = {
     logFileReads.incrementAndGet()
-    parseCommit(new String(Files.readAllBytes(logDir.resolve(name)), "UTF-8"))
+    new String(Files.readAllBytes(p), "UTF-8")
   }
 
-  def currentVersion: Long = commits.lastOption.map(_.version).getOrElse(-1L)
+  private def readCommit(version: Long): Commit = parseCommit(readLogFile(commitFile(version)))
+
+  private def readCheckpoint(version: Long, upTo: Long): Snapshot =
+    parseCheckpoint(readLogFile(checkpointFile(version)), upTo)
+
+  def currentVersion: Long = logState.tip.version
 
   def commitAt(version: Long): Commit =
     commits.find(_.version == version).getOrElse(
@@ -205,16 +272,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     properties.getOrElse("graft.deletionVectors", "false") == "true"
 
   def schemaAt(version: Long = Long.MaxValue): StructType = {
-    val cs = commits.takeWhile(_.version <= version)
-    require(cs.nonEmpty, s"$path has no commits <= $version")
-    DataType.fromJson(cs.last.schemaJson)
+    val s = snapshotAt(version)
+    require(s.version >= 0, s"$path has no commits <= $version")
+    s.schema
   }
 
-  def properties: Map[String, String] =
-    commits.lastOption.map(_.properties).getOrElse(Map.empty)
+  def properties: Map[String, String] = logState.tip.properties
 
-  def identityHighWatermark: Long =
-    commits.lastOption.map(_.identityHighWatermark).getOrElse(0L)
+  def identityHighWatermark: Long = logState.tip.identityHighWatermark
 
   // ---- reads -------------------------------------------------------------
 
@@ -311,7 +376,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** Snapshot read (optionally `VERSION AS OF`). */
   def read(versionAsOf: Long = Long.MaxValue): DataFrame = {
     val snap = snapshotAt(versionAsOf)
-    readSnapshot(snap.files.keysIterator.map(absPath).toVector, schemaAt(versionAsOf),
+    require(snap.version >= 0, s"$path has no commits <= $versionAsOf")
+    readSnapshot(snap.files.keysIterator.map(absPath).toVector, snap.schema,
       snap.dvFiles.keysIterator.map(absPath).toVector, keepPos = false)
   }
 
@@ -331,8 +397,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * on, each tagged `_change_type` / `_commit_version`
     * (`table_changes(t, v)` in the reference, `DP/Advanced CDC:271,395`). */
   def changes(fromVersion: Long = 0L): DataFrame = {
-    val dirs = commits.filter(_.version >= fromVersion)
-      .map(c => Paths.get(path, "_changes", s"v${c.version}"))
+    val dirs = (math.max(0L, fromVersion) to currentVersion)
+      .map(v => Paths.get(path, "_changes", s"v$v"))
       .filter(Files.isDirectory(_))
       .map(_.toString)
     if (dirs.isEmpty) {
@@ -448,7 +514,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   /** Atomically append a commit; throws ConcurrentCommitException if the
     * version was taken by a concurrent writer. */
-  private[tables] def commit(
+  private[graft] def commit(
       operation: String,
       added: Seq[String],
       removed: Seq[String],
@@ -462,8 +528,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       removedDv: Seq[String] = Nil,
       schemaUnion: Boolean = true): Commit = {
     Files.createDirectories(logDir)
-    val st = logState
-    val prev = st.commits.lastOption
+    val tip = logState.tip
     // Write-write conflict detection (Delta's ConcurrentDeleteDelete
     // semantics): the version is assigned from the tip read here, so a
     // rewrite computed against an older snapshot would not collide on the
@@ -472,8 +537,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // publishing would duplicate them. Throw so Concurrency.retry
     // recomputes against the fresh snapshot. Pure appends (removed empty)
     // never conflict, matching Delta's append concurrency.
-    val gone = removed.filterNot(st.tip.files.contains) ++
-      removedDv.filterNot(st.tip.dvFiles.contains)
+    val gone = removed.filterNot(tip.files.contains) ++
+      removedDv.filterNot(tip.dvFiles.contains)
     if (gone.nonEmpty) throw new ConcurrentCommitException(
       s"concurrent modification: ${gone.size} file(s) this $operation rewrites " +
         s"were already removed by another writer (e.g. ${gone.head})", null)
@@ -486,30 +551,28 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // race-safe without a conflict/retry; the intentionally exact ops
     // (CREATE, REPLACE/overwrite, RESTORE) pass schemaUnion = false.
     val effSchema =
-      if (!schemaUnion || prev.isEmpty) schema
+      if (!schemaUnion || tip.version < 0) schema
       else {
-        val tip = DataType.fromJson(prev.get.schemaJson)
-        val tipNames = tip.fieldNames.toSet
-        StructType(tip.fields ++ schema.fields.filterNot(f => tipNames(f.name)))
+        val tipNames = tip.schema.fieldNames.toSet
+        StructType(tip.schema.fields ++ schema.fields.filterNot(f => tipNames(f.name)))
       }
     val c = Commit(
-      version = prev.map(_.version + 1).getOrElse(0L),
+      version = tip.version + 1,
       timestampMs = System.currentTimeMillis(),
       operation = operation,
       operationParameters = params,
       addedFiles = added,
       removedFiles = removed,
       schemaJson = effSchema.json,
-      properties = Option(props).getOrElse(prev.map(_.properties).getOrElse(Map.empty)),
-      identityHighWatermark =
-        if (identity >= 0) identity else prev.map(_.identityHighWatermark).getOrElse(0L),
+      properties = Option(props).getOrElse(tip.properties),
+      identityHighWatermark = if (identity >= 0) identity else tip.identityHighWatermark,
       metrics = metrics,
       fileStats = fileStats,
       addedDvFiles = addedDv,
       removedDvFiles = removedDv)
     val tmp = Files.createTempFile(logDir, ".commit", ".tmp")
     Files.write(tmp, renderCommit(c).getBytes("UTF-8"))
-    val target = logDir.resolve(f"v${c.version}%020d.json")
+    val target = commitFile(c.version)
     // Publish via hard link: link(2) fails with EEXIST *atomically*, so
     // exactly one of N racing writers wins the version. (Files.move
     // without REPLACE_EXISTING is check-then-rename — two racers can both
@@ -522,19 +585,17 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       case NonFatal(e) =>
         throw new ConcurrentCommitException(s"version ${c.version} already committed", e)
     } finally Files.deleteIfExists(tmp)
-    // extend the session cache in place (no re-list/re-parse/re-fold)
+    // advance the session cache in place (no re-read, no re-fold)
+    val state = tip.next(c)
     val cachedNow = logCache.get(path)
-    if (cachedNow != null && cachedNow.tip.version == st.tip.version)
-      logCache.put(path, LogState(cachedNow.names :+ target.getFileName.toString,
-        cachedNow.commits :+ c, cachedNow.tip.next(c)))
-    // periodic checkpoint: one file holding the full parsed log so a cold
-    // start reads checkpoint + tail instead of every v*.json
+    if (cachedNow != null && cachedNow.tip.version == tip.version)
+      logCache.replace(path, cachedNow, new LogState(state, cachedNow.history.map(_ :+ c)))
+    // periodic checkpoint: the state at this version, so a cold load reads
+    // it plus the commits after it
     if (c.version > 0 && c.version % checkpointInterval == 0) {
-      val all = commits
       val ck = Files.createTempFile(logDir, ".ckpt", ".tmp")
-      Files.write(ck, renderCommitList(all).getBytes("UTF-8"))
-      Files.move(ck, logDir.resolve(f"checkpoint-v${c.version}%020d.json"),
-        StandardCopyOption.REPLACE_EXISTING)
+      Files.write(ck, renderState(state).getBytes("UTF-8"))
+      Files.move(ck, checkpointFile(c.version), StandardCopyOption.REPLACE_EXISTING)
     }
     c
   }
@@ -669,10 +730,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * pruning after a RESTORE keeps what it kept at `version`. */
   def restoreTo(version: Long): Commit = {
     val want = snapshotAt(version)
+    require(want.version >= 0, s"$path has no commits <= $version")
     val cur = snapshot
     val added = want.files.keys.filterNot(cur.files.contains).toSeq
     commit("RESTORE", added, cur.files.keys.filterNot(want.files.contains).toSeq,
-      schemaAt(version), Map("restoredVersion" -> version.toString),
+      want.schema, Map("restoredVersion" -> version.toString),
       fileStats = added.map(f => f -> want.files(f)).filter(_._2.nonEmpty).toMap,
       addedDv = want.dvFiles.keys.filterNot(cur.dvFiles.contains).toSeq,
       removedDv = cur.dvFiles.keys.filterNot(want.dvFiles.contains).toSeq,
@@ -780,7 +842,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * missing a column carry null (old files read null for new columns via
     * parquet by-name resolution). */
   private def evolveSchema(df: DataFrame): DataFrame = {
-    if (commits.isEmpty) return df
+    if (currentVersion < 0) return df
     val old = schemaAt()
     if (old.fieldNames.toSeq == df.schema.fieldNames.toSeq) return df
     val oldNames = old.fieldNames.toSet
@@ -828,9 +890,9 @@ object GraftTable {
   private val M = new ObjectMapper()
 
 
-  /** One table's cached log: the sorted commit-file names, the parsed
-    * commits and the tip [[Snapshot]] folded from them. */
-  private final case class LogState(names: Vector[String], commits: Vector[Commit], tip: Snapshot)
+  /** One table's cached log: the tip [[Snapshot]], and every commit once
+    * the history has been asked for. Compared by reference. */
+  private final class LogState(val tip: Snapshot, val history: Option[Vector[Commit]])
 
   /** Session-wide log cache: table path → [[LogState]]. Shared across
     * GraftTable instances, so repeated `load()`s of the same table stay
@@ -856,8 +918,16 @@ object GraftTable {
     * observable in tests asserting O(1) reads after warm-up. */
   private[tables] val logFileReads = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Commits between state checkpoints (cold-start reads ckpt + tail). */
+  /** Count of `_log` directory listings (one per cold load). */
+  private[tables] val logListings = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Commits between state checkpoints (a cold load reads the newest
+    * checkpoint and at most this many commits minus one; so does a
+    * historical snapshot). */
   private val checkpointInterval = 10L
+
+  private val CommitName = Pattern.compile("v(\\d+)\\.json")
+  private val CheckpointName = Pattern.compile("checkpoint-v(\\d+)\\.json")
 
   /** Column names for deletion-vector provenance (file URI + row index). */
   private[graft] val DvFileCol = "__dv_file"
@@ -939,7 +1009,7 @@ object GraftTable {
 
   def load(spark: SparkSession, path: String): GraftTable = {
     val t = new GraftTable(spark, path)
-    require(t.commits.nonEmpty, s"not a graft table: $path")
+    require(t.currentVersion >= 0, s"not a graft table: $path")
     t
   }
 
@@ -953,62 +1023,95 @@ object GraftTable {
     n.put("version", c.version)
     n.put("timestampMs", c.timestampMs)
     n.put("operation", c.operation)
-    val p = n.putObject("operationParameters")
-    c.operationParameters.foreach { case (k, v) => p.put(k, v) }
+    putStrings(n.putObject("operationParameters"), c.operationParameters)
     val a = n.putArray("addedFiles"); c.addedFiles.foreach(a.add)
     val r = n.putArray("removedFiles"); c.removedFiles.foreach(r.add)
     n.put("schemaJson", c.schemaJson)
-    val pr = n.putObject("properties")
-    c.properties.foreach { case (k, v) => pr.put(k, v) }
+    putStrings(n.putObject("properties"), c.properties)
     n.put("identityHighWatermark", c.identityHighWatermark)
     val m = n.putObject("metrics")
     c.metrics.foreach { case (k, v) => m.put(k, v) }
     val fs = n.putObject("fileStats")
-    c.fileStats.foreach { case (file, cols) =>
-      val fo = fs.putObject(file)
-      cols.foreach { case (cname, (mn, mx)) =>
-        val arr = fo.putArray(cname); arr.add(mn); arr.add(mx)
-      }
-    }
+    c.fileStats.foreach { case (file, stats) => putStats(fs.putObject(file), stats) }
     val adv = n.putArray("addedDvFiles"); c.addedDvFiles.foreach(adv.add)
     val rdv = n.putArray("removedDvFiles"); c.removedDvFiles.foreach(rdv.add)
     M.writerWithDefaultPrettyPrinter().writeValueAsString(n)
   }
 
-  private[tables] def renderCommitList(cs: Seq[Commit]): String =
-    cs.map(renderCommit).mkString("[", ",\n", "]")
+  /** A checkpoint: the state at its version, with the live data files in
+    * snapshot order, each with its stats. */
+  private[tables] def renderState(s: Snapshot): String = {
+    val n = M.createObjectNode()
+    n.put("version", s.version)
+    n.put("timestampMs", s.timestampMs)
+    n.put("schemaJson", s.schemaJson)
+    putStrings(n.putObject("properties"), s.properties)
+    n.put("identityHighWatermark", s.identityHighWatermark)
+    val fs = n.putArray("files")
+    s.files.foreach { case (f, stats) =>
+      val o = fs.addObject()
+      o.put("path", f)
+      putStats(o.putObject("stats"), stats)
+    }
+    val dvs = n.putArray("dvFiles"); s.dvFiles.keysIterator.foreach(dvs.add)
+    M.writeValueAsString(n)
+  }
 
-  private[tables] def parseCommitList(json: String): Seq[Commit] =
-    M.readTree(json).elements().asScala.map(parseNode).toSeq
+  /** The state a checkpoint records. A checkpoint written before state
+    * checkpoints is a JSON array of every commit up to (at least) its
+    * version; it is folded up to `upTo`. */
+  private[tables] def parseCheckpoint(json: String, upTo: Long): Snapshot = {
+    val n = M.readTree(json)
+    if (n.isArray)
+      Snapshot.replay(n.elements().asScala.map(parseNode).takeWhile(_.version <= upTo).toSeq)
+    else Snapshot(
+      version = n.get("version").asLong(),
+      timestampMs = n.get("timestampMs").asLong(),
+      schemaJson = n.get("schemaJson").asText(),
+      properties = strMap(n.get("properties")),
+      identityHighWatermark = n.get("identityHighWatermark").asLong(),
+      files = n.get("files").elements().asScala
+        .map(f => f.get("path").asText() -> readStats(f.get("stats"))).toSeq,
+      dvFiles = strings(n.get("dvFiles")))
+  }
 
   private[tables] def parseCommit(json: String): Commit = parseNode(M.readTree(json))
 
-  private def parseNode(n: JsonNode): Commit = {
-    def strMap(f: JsonNode): Map[String, String] =
-      f.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
+  private def putStrings(o: ObjectNode, kv: Map[String, String]): Unit =
+    kv.foreach { case (k, v) => o.put(k, v) }
+
+  private def putStats(o: ObjectNode, stats: FileStats.Stats): Unit =
+    stats.foreach { case (cname, (mn, mx)) =>
+      val arr = o.putArray(cname); arr.add(mn); arr.add(mx)
+    }
+
+  private def strMap(f: JsonNode): Map[String, String] =
+    f.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
+
+  private def strings(f: JsonNode): Seq[String] = f.elements().asScala.map(_.asText()).toSeq
+
+  private def readStats(f: JsonNode): FileStats.Stats =
+    f.fields().asScala.map { ce =>
+      ce.getKey -> (ce.getValue.get(0).asText(), ce.getValue.get(1).asText())
+    }.toMap
+
+  private def parseNode(n: JsonNode): Commit =
     Commit(
       version = n.get("version").asLong(),
       timestampMs = n.get("timestampMs").asLong(),
       operation = n.get("operation").asText(),
       operationParameters = strMap(n.get("operationParameters")),
-      addedFiles = n.get("addedFiles").elements().asScala.map(_.asText()).toSeq,
-      removedFiles = n.get("removedFiles").elements().asScala.map(_.asText()).toSeq,
+      addedFiles = strings(n.get("addedFiles")),
+      removedFiles = strings(n.get("removedFiles")),
       schemaJson = n.get("schemaJson").asText(),
       properties = strMap(n.get("properties")),
       identityHighWatermark = n.get("identityHighWatermark").asLong(),
       metrics = n.get("metrics").fields().asScala
         .map(e => e.getKey -> e.getValue.asLong()).toMap,
-      fileStats = Option(n.get("fileStats")).map(fs =>
-        fs.fields().asScala.map { e =>
-          e.getKey -> e.getValue.fields().asScala.map { ce =>
-            ce.getKey -> (ce.getValue.get(0).asText(), ce.getValue.get(1).asText())
-          }.toMap
-        }.toMap).getOrElse(Map.empty),
-      addedDvFiles = Option(n.get("addedDvFiles"))
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
-      removedDvFiles = Option(n.get("removedDvFiles"))
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil))
-  }
+      fileStats = Option(n.get("fileStats")).map(_.fields().asScala
+        .map(e => e.getKey -> readStats(e.getValue)).toMap).getOrElse(Map.empty),
+      addedDvFiles = Option(n.get("addedDvFiles")).map(strings).getOrElse(Nil),
+      removedDvFiles = Option(n.get("removedDvFiles")).map(strings).getOrElse(Nil))
 }
 
 /** Optimistic-concurrency retry with exponential backoff, mirroring

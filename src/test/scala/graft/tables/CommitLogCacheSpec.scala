@@ -10,10 +10,51 @@ import org.apache.spark.sql.types.{LongType, StructType}
 import graft.{SparkTestBase, Tables}
 
 /** Commit-log caching + checkpointing: after warm-up, table operations do
-  * zero physical log reads; a cold start reads checkpoint + tail instead
-  * of every v*.json. The tip snapshot kept beside the parsed log, extended
-  * commit by commit, equals a full replay at every version. */
+  * zero physical log reads and no `_log` listing; a cold start lists once
+  * and reads checkpoint + tail instead of every v*.json. The tip snapshot,
+  * extended commit by commit, and every checkpoint-plus-tail snapshot
+  * equal a full replay at every version, for state checkpoints and for
+  * the full-history checkpoints older logs hold. */
 class CommitLogCacheSpec extends SparkTestBase {
+
+  /** Versions of the checkpoint files in `t`'s log. */
+  private def checkpoints(t: GraftTable): Seq[Long] =
+    GraftTable.listDir(Paths.get(t.path, "_log")).map(_.getFileName.toString)
+      .filter(_.startsWith("checkpoint-v"))
+      .map(_.stripPrefix("checkpoint-v").stripSuffix(".json").toLong).sorted
+
+  private def checkpointFile(t: GraftTable, c: Long) =
+    Paths.get(t.path, "_log", f"checkpoint-v$c%020d.json")
+
+  private def checkpointJson(t: GraftTable, c: Long): String =
+    new String(Files.readAllBytes(checkpointFile(t, c)), "UTF-8").trim
+
+  /** Rewrite every checkpoint of `t` in the full-history format logs
+    * written before state checkpoints hold: a JSON array of every commit
+    * up to its version. */
+  private def rewriteAsHistoryCheckpoints(t: GraftTable): Unit = {
+    val cs = t.commits
+    checkpoints(t).foreach { c =>
+      Files.write(checkpointFile(t, c),
+        cs.takeWhile(_.version <= c).map(GraftTable.renderCommit)
+          .mkString("[", ",\n", "]").getBytes("UTF-8"))
+    }
+  }
+
+  /** A cold load: exactly one listing and the newest checkpoint plus its
+    * tail read. */
+  private def coldLoad(t: GraftTable, tag: String): GraftTable = {
+    val tip = t.currentVersion
+    val ckpt = checkpoints(t).filter(_ <= tip).max
+    GraftTable.clearLogCache(t.path)
+    val (reads, lists) = (GraftTable.logFileReads.get(), GraftTable.logListings.get())
+    val cold = GraftTable.load(spark, t.path)
+    assert(cold.currentVersion === tip, tag)
+    assert(GraftTable.logListings.get() - lists === 1, s"$tag: a cold load lists _log once")
+    assert(GraftTable.logFileReads.get() - reads === 1 + tip - ckpt,
+      s"$tag: a cold load reads the newest checkpoint plus its tail")
+    cold
+  }
 
   /** Live (data files, DV files) at `v` by the insertion-ordered set fold
     * the snapshot replaced: removes, then adds, per commit. */
@@ -48,6 +89,11 @@ class CommitLogCacheSpec extends SparkTestBase {
 
       def expect(view: GraftTable, v: Long, tag: String): Unit = {
         val (files, dvs) = setFold(view.commits, v)
+        val at = view.commits.takeWhile(_.version <= v).last
+        val snap = view.snapshotAt(v)
+        assert((snap.version, snap.timestampMs, snap.schemaJson, snap.properties,
+            snap.identityHighWatermark) === (at.version, at.timestampMs, at.schemaJson, at.properties,
+            at.identityHighWatermark), s"$tag state@$v")
         assert(view.filesAt(v) === files.map(f => Paths.get(view.path, f).toString), s"$tag files@$v")
         assert(view.dvAt(v) === dvs.map(f => Paths.get(view.path, f).toString), s"$tag dvs@$v")
         val stats = files.map(f => f -> statsOf.getOrElse(f, Map.empty))
@@ -96,17 +142,36 @@ class CommitLogCacheSpec extends SparkTestBase {
       val tip = t.currentVersion
       (0L to tip).foreach(v => expect(t, v, s"seed $seed warm"))
 
+      // every checkpoint the session wrote is the state at its version:
+      // its live files, not the history
+      val ckpts = checkpoints(t)
+      assert(ckpts.nonEmpty)
+      ckpts.foreach { c =>
+        val json = checkpointJson(t, c)
+        assert(!json.startsWith("["), s"seed $seed checkpoint $c is a state")
+        val s = GraftTable.parseCheckpoint(json, c)
+        assert(s.version === c && s.files.toSeq === t.snapshotAt(c).files.toSeq &&
+          s.dvFiles.keys.toSeq === t.snapshotAt(c).dvFiles.keys.toSeq, s"seed $seed checkpoint $c")
+      }
+
       // cold load through the newest checkpoint plus its tail
-      val ckpt = GraftTable.listDir(Paths.get(t.path, "_log")).map(_.getFileName.toString)
-        .filter(_.startsWith("checkpoint-v")).map(_.stripPrefix("checkpoint-v").stripSuffix(".json").toLong)
-      assert(ckpt.nonEmpty)
-      GraftTable.clearLogCache(t.path)
-      val reads = GraftTable.logFileReads.get()
-      val cold = GraftTable.load(spark, t.path)
-      assert(cold.currentVersion === tip)
-      assert(GraftTable.logFileReads.get() - reads === 1 + tip - ckpt.max,
-        "a cold load reads the newest checkpoint plus its tail")
+      val cold = coldLoad(t, s"seed $seed")
       (0L to tip).foreach(v => expect(cold, v, s"seed $seed cold"))
+
+      // a log whose checkpoints hold the full history (the format written
+      // before state checkpoints) loads, time-travels and takes commits;
+      // the next checkpoint it writes is a state
+      rewriteAsHistoryCheckpoints(t)
+      val old = coldLoad(t, s"seed $seed history checkpoints")
+      (0L to tip).foreach(v => expect(old, v, s"seed $seed history checkpoints"))
+      while (old.currentVersion % 10 != 0 || checkpoints(old).max != old.currentVersion) {
+        val fs = Seq(newFile())
+        old.commit("WRITE", fs, Nil, schema, fileStats = statsFor(fs))
+      }
+      val formats = checkpoints(old).map(checkpointJson(old, _).head)
+      assert(formats.last === '{' && formats.init.forall(_ == '['), s"seed $seed formats")
+      val mixed = coldLoad(old, s"seed $seed mixed checkpoints")
+      (0L to mixed.currentVersion).foreach(v => expect(mixed, v, s"seed $seed mixed"))
     }
   }
 
@@ -119,6 +184,7 @@ class CommitLogCacheSpec extends SparkTestBase {
     assert(nVersions === 121L)
 
     val filesWarm = t.filesAt()
+    t.history.count() // history is read from the commit files on first use
     val before = GraftTable.logFileReads.get()
     (1 to 10).foreach { _ =>
       t.filesAt(); t.schemaAt(); t.properties; t.history.count(); t.currentVersion
@@ -138,6 +204,68 @@ class CommitLogCacheSpec extends SparkTestBase {
     // time travel still resolves through the cache
     assert(t2.schemaAt(0).fieldNames.toSeq === region.schema.fieldNames.toSeq)
     assert(t2.commitAt(60).operation === "SET TBLPROPERTIES")
+  }
+
+  test("warm tip questions neither list _log nor read a log file; a cold load lists once") {
+    val region = Tables.t(spark, sf, "region")
+    val t = GraftTable.createFrom(spark, scratch("nolist"), region)
+    (1 to 25).foreach(i => t.setProperties(Map("k" -> i.toString)))
+    val (reads, lists) = (GraftTable.logFileReads.get(), GraftTable.logListings.get())
+    (1 to 12).foreach { i =>
+      t.filesAt(); t.schemaAt(); t.properties; t.currentVersion; t.identityHighWatermark
+      if (i % 2 == 0) t.setProperties(Map("k" -> s"warm$i"))
+      else MergeOps.delete(t, "r_regionkey < 0") // a no-op DELETE commits a version
+    }
+    assert(GraftTable.logListings.get() === lists, "warm tip questions must not list _log")
+    assert(GraftTable.logFileReads.get() === reads, "warm tip questions must not read the log")
+    assert(t.currentVersion === 38L && t.properties("k") === "warm12")
+
+    // a cold load: one listing, the newest checkpoint (v30) and the 8 commits after it
+    GraftTable.clearAllCaches()
+    val (coldReads, coldLists) = (GraftTable.logFileReads.get(), GraftTable.logListings.get())
+    val cold = GraftTable.load(spark, t.path)
+    assert(cold.filesAt() === t.filesAt() && cold.properties("k") === "warm12")
+    assert(GraftTable.logListings.get() - coldLists === 1)
+    assert(GraftTable.logFileReads.get() - coldReads === 1 + 8)
+  }
+
+  test("history after a cold load equals history before it") {
+    val region = Tables.t(spark, sf, "region")
+    val t = GraftTable.createFrom(spark, scratch("history"), region)
+    (1 to 12).foreach(i => t.setProperties(Map("k" -> i.toString)))
+    MergeOps.delete(t, "r_regionkey = 1")
+    t.append(region)
+    t.restoreTo(3L)
+    val before = t.history.collect().toSeq
+    val commitsBefore = t.commits
+    assert(before.size === 17)
+    GraftTable.clearAllCaches()
+    assert(t.history.collect().toSeq === before)
+    assert(GraftTable.load(spark, t.path).commits === commitsBefore)
+  }
+
+  test("a log deleted and recreated shorter outside the session is reloaded, not extended") {
+    val schema = new StructType().add("k", LongType)
+    val t = GraftTable.create(spark, scratch("diverge"), schema)
+    (1 to 24).foreach(i => t.commit("WRITE", Seq(s"data/old$i/part-0.parquet"), Nil, schema))
+    assert(t.currentVersion === 24L && t.filesAt().size === 24)
+    // another process drops the log and writes a shorter one in its place
+    val log = Paths.get(t.path, "_log")
+    GraftTable.listDir(log).foreach(Files.delete)
+    Files.delete(log)
+    Files.createDirectories(log)
+    val fresh = Seq("data/new/part-0.parquet")
+    Seq(Commit(0L, 1L, "CREATE TABLE", Map.empty, Nil, Nil, schema.json, Map.empty, 0L, Map.empty),
+      Commit(1L, 2L, "WRITE", Map.empty, fresh, Nil, schema.json, Map("p" -> "1"), 0L, Map.empty))
+      .foreach(c => Files.write(log.resolve(f"v${c.version}%020d.json"),
+        GraftTable.renderCommit(c).getBytes("UTF-8")))
+    assert(t.currentVersion === 1L)
+    assert(t.filesAt() === fresh.map(f => Paths.get(t.path, f).toString))
+    assert(t.properties === Map("p" -> "1"))
+    assert(t.commits.map(_.operation) === Seq("CREATE TABLE", "WRITE"))
+    // and it takes new commits on the recreated log
+    t.commit("WRITE", Seq("data/new/part-1.parquet"), Nil, schema)
+    assert(t.currentVersion === 2L && t.filesAt().size === 2)
   }
 
   test("a historical read(v) replays the log once; a tip read not at all") {
