@@ -1,8 +1,7 @@
 package graft.tables
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
-import java.util.regex.Pattern
 
 import scala.collection.JavaConverters._
 import scala.collection.immutable.VectorMap
@@ -149,62 +148,70 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** The session's view of the log: the tip [[Snapshot]], cached
     * session-wide (keyed by table path, shared across GraftTable
     * instances). Versions are published by hard link, so they are
-    * contiguous: a warm call stats `v{tip}` (a log that shrank behind the
-    * session's back is reloaded) and reads forward while `v{tip+1}`
-    * exists, folding only those commits — it never lists `_log`. A cold
-    * (or diverged) view lists `_log` once, reads the newest checkpoint
-    * (the state at its version, written every `checkpointInterval`
-    * commits) and folds the commits after it. */
+    * contiguous from 0 and no call lists `_log`: a warm call stats
+    * `v{tip}` (a log that shrank behind the session's back is reloaded)
+    * and reads forward while `v{tip+1}` exists, folding only those
+    * commits. A cold (or diverged) view finds the tip by probing version
+    * numbers and builds the state there as time travel does. */
   private def logState: LogState = {
     val cached = logCache.get(path)
-    if (cached == null || (cached.tip.version >= 0 && !Files.exists(commitFile(cached.tip.version))))
-      return coldLoad()
-    val tail = Iterator.iterate(cached.tip.version + 1)(_ + 1)
-      .takeWhile(v => Files.exists(commitFile(v))).map(readCommit).toVector
-    if (tail.isEmpty) cached
-    else {
-      val st = new LogState(tail.foldLeft(cached.tip)(_ next _), cached.history.map(_ ++ tail))
-      logCache.put(path, st)
-      st
-    }
-  }
-
-  private def coldLoad(): LogState = {
-    val names = logDir.toFile.list() // names only: no Path per entry
-    if (names == null) return new LogState(Snapshot.empty, Some(Vector.empty))
-    logListings.incrementAndGet()
-    def versions(p: Pattern) =
-      names.iterator.map(p.matcher).filter(_.matches).map(_.group(1).toLong)
-    val tip = versions(CommitName).maxOption.getOrElse(-1L)
-    val base = versions(CheckpointName).filter(_ <= tip).maxOption
-      .fold(Snapshot.empty)(readCheckpoint(_, tip))
-    val st = new LogState(foldTo(base, tip), None)
+    val st =
+      if (cached == null || (cached.tip.version >= 0 && !Files.exists(commitFile(cached.tip.version))))
+        new LogState(stateAt(probeTip()), None)
+      else {
+        val tail = Iterator.iterate(cached.tip.version + 1)(_ + 1)
+          .takeWhile(v => Files.exists(commitFile(v))).map(readCommit).toVector
+        if (tail.isEmpty) return cached
+        new LogState(tail.foldLeft(cached.tip)(_ next _), cached.history.map(_ ++ tail))
+      }
     logCache.put(path, st)
     st
+  }
+
+  /** The newest version, -1 for an empty (or missing) log: `v{n}` exists
+    * exactly for n up to the tip, so doubling n until `v{n}` is missing
+    * brackets the tip and a bisection finds it, in O(log tip) stats. */
+  private def probeTip(): Long = {
+    def exists(v: Long) = Files.exists(commitFile(v))
+    // v{lo} exists, v{hi} does not
+    @annotation.tailrec def bisect(lo: Long, hi: Long): Long =
+      if (hi - lo == 1) lo
+      else {
+        val mid = (lo + hi) >>> 1
+        if (exists(mid)) bisect(mid, hi) else bisect(lo, mid)
+      }
+    if (!exists(0)) -1L
+    else {
+      val hi = Iterator.iterate(1L)(_ * 2).find(!exists(_)).get
+      bisect(hi / 2, hi)
+    }
   }
 
   /** Live state at the tip, kept in the log cache and advanced commit by
     * commit — never re-folded while the cache is warm. */
   private[tables] def snapshot: Snapshot = logState.tip
 
-  /** State at `version`: the tip, or (time travel) the newest checkpoint
-    * at or before `version` plus the commits after it. */
+  /** State at `version`: the tip, or (time travel) [[stateAt]]. */
   private[tables] def snapshotAt(version: Long): Snapshot = {
     val tip = logState.tip
     if (version >= tip.version) tip
     else if (version < 0) Snapshot.empty
     else {
       Snapshot.replays.incrementAndGet()
-      val base = Iterator.iterate(version - version % checkpointInterval)(_ - checkpointInterval)
-        .takeWhile(_ > 0).find(v => Files.exists(checkpointFile(v)))
-        .fold(Snapshot.empty)(readCheckpoint(_, version))
-      foldTo(base, version)
+      stateAt(version)
     }
   }
 
-  /** `base` advanced by the commit files after it, up to `version`. */
-  private def foldTo(base: Snapshot, version: Long): Snapshot =
+  /** State at `version` (at most the tip) read from the log: the newest
+    * checkpoint at or below it, found by probing multiples of
+    * `checkpointInterval` downward (one lost to a crash before it was
+    * written is skipped), plus the commit files after it. */
+  private def stateAt(version: Long): Snapshot = {
+    val base = Iterator.iterate(version - version % checkpointInterval)(_ - checkpointInterval)
+      .takeWhile(_ > 0).find(v => Files.exists(checkpointFile(v)))
+      .fold(Snapshot.empty)(readCheckpoint(_, version))
     (base.version + 1 to version).foldLeft(base)((s, v) => s.next(readCommit(v)))
+  }
 
   /** Absolute path of a table-relative file, as `filesAt` returns it. */
   private def absPath(rel: String): String = Paths.get(path, rel).toString
@@ -231,9 +238,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   def currentVersion: Long = logState.tip.version
 
-  def commitAt(version: Long): Commit =
-    commits.find(_.version == version).getOrElse(
-      throw new IllegalArgumentException(s"$path has no version $version"))
+  /** The commit at `version`, read from its file. */
+  def commitAt(version: Long): Commit = {
+    if (version < 0 || version > currentVersion)
+      throw new IllegalArgumentException(s"$path has no version $version")
+    readCommit(version)
+  }
 
   /** Version whose snapshot was current at `tsMs` (Delta's TIMESTAMP AS
     * OF semantics: the latest commit at-or-before the timestamp; a
@@ -570,8 +580,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       fileStats = fileStats,
       addedDvFiles = addedDv,
       removedDvFiles = removedDv)
-    val tmp = Files.createTempFile(logDir, ".commit", ".tmp")
-    Files.write(tmp, renderCommit(c).getBytes("UTF-8"))
+    val tmp = writeNew(".commit", renderCommit(c))
     val target = commitFile(c.version)
     // Publish via hard link: link(2) fails with EEXIST *atomically*, so
     // exactly one of N racing writers wins the version. (Files.move
@@ -593,12 +602,17 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // periodic checkpoint: the state at this version, so a cold load reads
     // it plus the commits after it
     if (c.version > 0 && c.version % checkpointInterval == 0) {
-      val ck = Files.createTempFile(logDir, ".ckpt", ".tmp")
-      Files.write(ck, renderState(state).getBytes("UTF-8"))
-      Files.move(ck, checkpointFile(c.version), StandardCopyOption.REPLACE_EXISTING)
+      Files.move(writeNew(".ckpt", renderState(state)), checkpointFile(c.version),
+        StandardCopyOption.REPLACE_EXISTING)
     }
     c
   }
+
+  /** `text` written to a fresh, uniquely named file in `_log`, opened
+    * once. */
+  private def writeNew(prefix: String, text: String): Path =
+    Files.write(logDir.resolve(s"$prefix${UUID.randomUUID()}.tmp"), text.getBytes("UTF-8"),
+      StandardOpenOption.CREATE_NEW)
 
   def append(df: DataFrame, operation: String = "WRITE",
       params: Map[String, String] = Map.empty,
@@ -918,16 +932,10 @@ object GraftTable {
     * observable in tests asserting O(1) reads after warm-up. */
   private[tables] val logFileReads = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Count of `_log` directory listings (one per cold load). */
-  private[tables] val logListings = new java.util.concurrent.atomic.AtomicLong()
-
   /** Commits between state checkpoints (a cold load reads the newest
     * checkpoint and at most this many commits minus one; so does a
     * historical snapshot). */
   private val checkpointInterval = 10L
-
-  private val CommitName = Pattern.compile("v(\\d+)\\.json")
-  private val CheckpointName = Pattern.compile("checkpoint-v(\\d+)\\.json")
 
   /** Column names for deletion-vector provenance (file URI + row index). */
   private[graft] val DvFileCol = "__dv_file"

@@ -47,7 +47,7 @@ object IncrementalMv {
     val applied = view.properties.get("graft.mv.appliedVersion").map(_.toLong).getOrElse(-1L)
     val cur = source.currentVersion
     if (cur == applied) return Refresh(cur, incremental = true)
-    val since = source.commits.filter(c => c.version > applied && c.version <= cur)
+    val since = if (applied < 0) Nil else (applied + 1 to cur).map(source.commitAt)
     val appendOnly = applied >= 0 && since.forall(c =>
       c.removedFiles.isEmpty && c.addedDvFiles.isEmpty && c.removedDvFiles.isEmpty)
     // A view created before cnt_<col> landed lacks those columns; the

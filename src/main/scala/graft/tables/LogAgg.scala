@@ -70,13 +70,11 @@ object LogAgg {
     t.read().groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Delta commits appended since the last compaction (or creation). */
-  def deltasSinceCompact(t: GraftTable): Int = {
-    val cs = t.commits
-    val lastCompact = cs.filter(_.operation == CompactOp)
-      .map(_.version).maxOption.getOrElse(-1L)
-    cs.count(c => c.operation == DeltaOp && c.version > lastCompact)
-  }
+  /** Delta commits appended since the last compaction (or creation):
+    * the commits read back from the tip, one file each, down to it. */
+  def deltasSinceCompact(t: GraftTable): Int =
+    Iterator.iterate(t.currentVersion)(_ - 1).takeWhile(_ >= 0).map(t.commitAt)
+      .takeWhile(_.operation != CompactOp).count(_.operation == DeltaOp)
 
   /** Fold the whole log to one row per key — the scheduled rewrite that
     * bounds read cost. This is the ONLY operation that rewrites files,

@@ -211,23 +211,10 @@ object Maintenance {
     val (zorderByEff, curveEff, target) = resolveLayout(t, zorderBy, curve)
     val files = t.filesAt()
     if (files.isEmpty) return t.commit("OPTIMIZE", Nil, Nil, t.schemaAt())
-    val totalBytes = files.map(f => Files.size(Paths.get(f))).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
-
-    val df = t.read()
-    val clustered = clusterInto(df, zorderByEff, nFiles, interleave,
-      t.partitionColumns, curveEff)
-
-    val added = t.writeData(clustered)
-    // the rewrite materialized any deletion vectors (read() applies them)
-    t.commit("OPTIMIZE", added, files.map(t.relPath), t.schemaAt(),
-      Map("zOrderBy" -> zorderByEff.mkString(","), "curve" -> curveEff),
-      removedDv = t.dvAt().map(t.relPath),
-      metrics = Map(
-        "numFilesRemoved" -> files.size.toLong,
-        "numFilesAdded" -> added.size.toLong,
-        "bytesCompacted" -> totalBytes),
-      fileStats = t.harvestStats(added))
+    // the rewrite materialized any deletion vectors (the read applies them)
+    rewrite(t, files, zorderByEff, curveEff, target,
+      Map("zOrderBy" -> zorderByEff.mkString(","), "curve" -> curveEff), interleave)(
+      (Nil, t.dvAt().map(t.relPath)))
   }
 
   /** Predicate-scoped OPTIMIZE — `OPTIMIZE t WHERE p [ZORDER BY (...)]`:
@@ -259,20 +246,7 @@ object Maintenance {
     val (matching, _) = t.pruneFilesByExpr(pred)
     if (matching.size < 2) // nothing to compact in scope — record the no-op
       return t.commit("OPTIMIZE", Nil, Nil, t.schemaAt(), params)
-    val totalBytes = matching.map(f => Files.size(Paths.get(f))).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
-    val df = t.readFiles(matching)
-    val clustered = clusterInto(df, zorderByEff, nFiles,
-      partitionCols = t.partitionColumns, curve = curveEff)
-    val added = t.writeData(clustered)
-    val (addedDv, removedDv) = compactDvs(t, matching)
-    t.commit("OPTIMIZE", added, matching.map(t.relPath), t.schemaAt(), params,
-      metrics = Map(
-        "numFilesRemoved" -> matching.size.toLong,
-        "numFilesAdded" -> added.size.toLong,
-        "bytesCompacted" -> totalBytes),
-      fileStats = t.harvestStats(added),
-      addedDv = addedDv, removedDv = removedDv)
+    rewrite(t, matching, zorderByEff, curveEff, target, params)(compactDvs(t, matching))
   }
 
   /** Incremental OPTIMIZE: compact only files below
@@ -294,18 +268,26 @@ object Maintenance {
     if (small.size < 2)
       return t.commit("OPTIMIZE", Nil, Nil, t.schemaAt(),
         Map("zOrderBy" -> zorderByEff.mkString(","), "incremental" -> "true"))
-    val totalBytes = small.map(f => Files.size(Paths.get(f))).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
-    val df = t.readFiles(small)
-    val clustered = clusterInto(df, zorderByEff, nFiles,
-      partitionCols = t.partitionColumns, curve = curveEff)
-    val added = t.writeData(clustered)
-    val (addedDv, removedDv) = compactDvs(t, small)
-    t.commit("OPTIMIZE", added, small.map(t.relPath), t.schemaAt(),
+    rewrite(t, small, zorderByEff, curveEff, target,
       Map("zOrderBy" -> zorderByEff.mkString(","), "incremental" -> "true",
-        "curve" -> curveEff),
+        "curve" -> curveEff))(compactDvs(t, small))
+  }
+
+  /** The tail every OPTIMIZE shares: the live `files` (absolute paths)
+    * read back, clustered into ceil(bytes / target) files and swapped for
+    * them in one commit. `dvs` — the (added, removed) deletion-vector
+    * files — is evaluated once the new files are written. */
+  private def rewrite(t: GraftTable, files: Seq[String], zorderBy: Seq[String],
+      curve: String, target: Long, params: Map[String, String],
+      interleave: Boolean = true)(dvs: => (Seq[String], Seq[String])): Commit = {
+    val totalBytes = files.map(f => Files.size(Paths.get(f))).sum
+    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / target).toInt)
+    val added = t.writeData(clusterInto(t.readFiles(files), zorderBy, nFiles, interleave,
+      t.partitionColumns, curve))
+    val (addedDv, removedDv) = dvs
+    t.commit("OPTIMIZE", added, files.map(t.relPath), t.schemaAt(), params,
       metrics = Map(
-        "numFilesRemoved" -> small.size.toLong,
+        "numFilesRemoved" -> files.size.toLong,
         "numFilesAdded" -> added.size.toLong,
         "bytesCompacted" -> totalBytes),
       fileStats = t.harvestStats(added),

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{LongType, StructType}
 import graft.{SparkTestBase, Tables}
 
 /** Commit-log caching + checkpointing: after warm-up, table operations do
-  * zero physical log reads and no `_log` listing; a cold start lists once
-  * and reads checkpoint + tail instead of every v*.json. The tip snapshot,
+  * zero physical log reads; a cold start finds the tip by probing version
+  * numbers, never listing `_log`, and reads checkpoint + tail instead of
+  * every v*.json. The tip snapshot,
   * extended commit by commit, and every checkpoint-plus-tail snapshot
   * equal a full replay at every version, for state checkpoints and for
   * the full-history checkpoints older logs hold. */
@@ -41,19 +42,49 @@ class CommitLogCacheSpec extends SparkTestBase {
     }
   }
 
-  /** A cold load: exactly one listing and the newest checkpoint plus its
-    * tail read. */
+  /** A cold load: exactly the newest checkpoint at or below the tip (none
+    * below v10) plus the commits after it read, and the tip it found is
+    * the tip (the next question reads nothing forward). */
   private def coldLoad(t: GraftTable, tag: String): GraftTable = {
     val tip = t.currentVersion
-    val ckpt = checkpoints(t).filter(_ <= tip).max
+    val want = checkpoints(t).filter(_ <= tip).maxOption.fold(tip + 1)(c => 1 + tip - c)
     GraftTable.clearLogCache(t.path)
-    val (reads, lists) = (GraftTable.logFileReads.get(), GraftTable.logListings.get())
+    val reads = GraftTable.logFileReads.get()
     val cold = GraftTable.load(spark, t.path)
-    assert(cold.currentVersion === tip, tag)
-    assert(GraftTable.logListings.get() - lists === 1, s"$tag: a cold load lists _log once")
-    assert(GraftTable.logFileReads.get() - reads === 1 + tip - ckpt,
+    assert(GraftTable.logFileReads.get() - reads === want,
       s"$tag: a cold load reads the newest checkpoint plus its tail")
+    assert(cold.currentVersion === tip, tag)
+    assert(GraftTable.logFileReads.get() - reads === want, s"$tag: the cold load found the tip")
     cold
+  }
+
+  /** A cold load of `t` (reading what [[coldLoad]] allows) holds the
+    * state the warm cache held: version, files with their stats, DV
+    * files, schema, properties. */
+  private def coldMatchesWarm(t: GraftTable, tag: String): GraftTable = {
+    val w = t.snapshot
+    val cold = coldLoad(t, tag)
+    val c = cold.snapshot
+    assert((c.version, c.timestampMs, c.schemaJson, c.properties, c.identityHighWatermark) ===
+      (w.version, w.timestampMs, w.schemaJson, w.properties, w.identityHighWatermark), tag)
+    assert(c.files.toSeq === w.files.toSeq && c.dvFiles.keys.toSeq === w.dvFiles.keys.toSeq, tag)
+    cold
+  }
+
+  /** A table of `n + 1` versions committed without data: each commit adds
+    * one file with stats, every third also removes the oldest live file. */
+  private def fileOnlyTable(name: String, n: Int): GraftTable = {
+    val schema = new StructType().add("k", LongType)
+    val t = GraftTable.create(spark, scratch(name), schema)
+    (1 to n).foreach(i => commitFile(t, i))
+    t
+  }
+
+  private def commitFile(t: GraftTable, i: Int): Unit = {
+    val f = s"data/c$i/part-0.parquet"
+    val removed = if (i % 3 == 0) t.snapshot.files.keys.headOption.toSeq else Nil
+    t.commit("WRITE", Seq(f), removed, t.schemaAt(),
+      fileStats = Map(f -> Map("k" -> (i.toString, (i + 1).toString))))
   }
 
   /** Live (data files, DV files) at `v` by the insertion-ordered set fold
@@ -206,27 +237,90 @@ class CommitLogCacheSpec extends SparkTestBase {
     assert(t2.commitAt(60).operation === "SET TBLPROPERTIES")
   }
 
-  test("warm tip questions neither list _log nor read a log file; a cold load lists once") {
+  test("warm tip questions read no log file; a cold load reads the newest checkpoint and its tail") {
     val region = Tables.t(spark, sf, "region")
     val t = GraftTable.createFrom(spark, scratch("nolist"), region)
     (1 to 25).foreach(i => t.setProperties(Map("k" -> i.toString)))
-    val (reads, lists) = (GraftTable.logFileReads.get(), GraftTable.logListings.get())
+    val reads = GraftTable.logFileReads.get()
     (1 to 12).foreach { i =>
       t.filesAt(); t.schemaAt(); t.properties; t.currentVersion; t.identityHighWatermark
       if (i % 2 == 0) t.setProperties(Map("k" -> s"warm$i"))
       else MergeOps.delete(t, "r_regionkey < 0") // a no-op DELETE commits a version
     }
-    assert(GraftTable.logListings.get() === lists, "warm tip questions must not list _log")
     assert(GraftTable.logFileReads.get() === reads, "warm tip questions must not read the log")
     assert(t.currentVersion === 38L && t.properties("k") === "warm12")
 
-    // a cold load: one listing, the newest checkpoint (v30) and the 8 commits after it
+    // a cold load: the newest checkpoint (v30) and the 8 commits after it
     GraftTable.clearAllCaches()
-    val (coldReads, coldLists) = (GraftTable.logFileReads.get(), GraftTable.logListings.get())
+    val coldReads = GraftTable.logFileReads.get()
     val cold = GraftTable.load(spark, t.path)
     assert(cold.filesAt() === t.filesAt() && cold.properties("k") === "warm12")
-    assert(GraftTable.logListings.get() - coldLists === 1)
     assert(GraftTable.logFileReads.get() - coldReads === 1 + 8)
+  }
+
+  test("a cold load finds every tip by probing: 0, 1, around checkpoints and powers of two") {
+    val tips = Seq(1, 9, 10, 11) ++ Seq(5, 6, 7).flatMap(k => Seq(-1, 0, 1).map(_ + (1 << k)))
+    val t = fileOnlyTable("probe", 0)
+    coldMatchesWarm(t, "tip 0")
+    (1 to tips.max).foreach { i =>
+      commitFile(t, i)
+      if (tips.contains(i)) coldMatchesWarm(t, s"tip $i")
+    }
+    // a `_log` without v0 is an empty log, as a missing one is
+    val empty = Paths.get(scratch("probe-empty"), "_log")
+    Files.createDirectories(empty)
+    Files.write(empty.resolve(f"v${1L}%020d.json"), Files.readAllBytes(
+      Paths.get(t.path, "_log", f"v${1L}%020d.json")))
+    intercept[IllegalArgumentException](GraftTable.load(spark, empty.getParent.toString))
+  }
+
+  test("a checkpoint lost to a crash: the cold load and time travel use the one below it") {
+    val t = fileOnlyTable("lostckpt", 25)
+    val lost = checkpointFile(t, 20)
+    assert(Files.exists(lost))
+    val at22 = t.snapshotAt(22)
+    Files.delete(lost)
+    val reads = GraftTable.logFileReads.get()
+    val cold = coldMatchesWarm(t, "lost checkpoint")
+    assert(GraftTable.logFileReads.get() - reads === 1 + 15, "checkpoint v10 plus v11..v25")
+    val travel = GraftTable.logFileReads.get()
+    val s = cold.snapshotAt(22)
+    assert(GraftTable.logFileReads.get() - travel === 1 + 12, "checkpoint v10 plus v11..v22")
+    assert(s.files.toSeq === at22.files.toSeq && s.properties === at22.properties)
+  }
+
+  test("stray commit temp files and the ingest ledger in _log change nothing") {
+    val t = fileOnlyTable("stray", 23)
+    val log = Paths.get(t.path, "_log")
+    Seq(".commit123.tmp", ".commit-9f1c.tmp", ".ckpt77.tmp", "copied_files.txt",
+        f"v${99L}%020d.json.tmp")
+      .foreach(n => Files.write(log.resolve(n), "{truncated".getBytes("UTF-8")))
+    val cold = coldMatchesWarm(t, "stray files")
+    commitFile(cold, 24)
+    assert(cold.currentVersion === 24L && t.currentVersion === 24L)
+  }
+
+  test("commitAt reads one log file; a view refresh reads only the commits it applies") {
+    val region = Tables.t(spark, sf, "region")
+    val t = fileOnlyTable("commitat", 37)
+    GraftTable.clearLogCache(t.path)
+    val cold = GraftTable.load(spark, t.path)
+    val reads = GraftTable.logFileReads.get()
+    assert(cold.commitAt(33).addedFiles === Seq("data/c33/part-0.parquet"))
+    assert(GraftTable.logFileReads.get() - reads === 1)
+    intercept[IllegalArgumentException](cold.commitAt(38))
+    intercept[IllegalArgumentException](cold.commitAt(-1))
+
+    val src = GraftTable.createFrom(spark, scratch("commitat-src"), region)
+    val view = IncrementalMv.create(spark, scratch("commitat-mv"), src,
+      Seq("r_regionkey"), Seq("r_regionkey"))
+    Seq(1, 3).foreach { k =>
+      (1 to k).foreach(_ => src.append(region))
+      val before = GraftTable.logFileReads.get()
+      assert(IncrementalMv.refresh(src, view, Seq("r_regionkey"), Seq("r_regionkey")).incremental)
+      assert(GraftTable.logFileReads.get() - before === k, s"refresh after $k appends")
+    }
+    assert(view.read().agg(sum("cnt")).head().getLong(0) === 5L * 5)
   }
 
   test("history after a cold load equals history before it") {
