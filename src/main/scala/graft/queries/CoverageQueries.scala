@@ -155,7 +155,7 @@ object CoverageQueries extends QueryBatch {
       val t = GraftTable.create(s, scratch("part"), o.schema,
         Map("graft.partitionBy" -> "o_orderstatus"))
       t.append(o)
-      t.readWhere("o_orderstatus = 'F'")
+      t.read().filter(col("o_orderstatus") === "F")
         .select("o_orderkey", "o_orderstatus").orderBy("o_orderkey")
     },
     Some("""SELECT o_orderkey, o_orderstatus FROM orders

@@ -100,21 +100,38 @@ object OptimizerQueries extends QueryBatch {
             GROUP BY tbl ORDER BY tbl""")
   )
 
-  /** Stats-based file skipping correctness: a point lookup through
-    * `readWhere` on a ZORDERed table returns exactly the unpruned filter
-    * result (pruning ratio is asserted in FileStatsSpec; `DP/Step 2`
-    * behavior). */
+  /** A table of `df` at scratch `tag`, clustered by `key` into files of
+    * 1/32 of its bytes clamped to [4 KB, 32 MB]: at small test scales
+    * that keeps ≥ 32 files, so a gate's pruning requirement never goes
+    * vacuous; at large scales the 32 MB CAP makes file COUNT (= sort
+    * partitions) grow with the data instead of file size — an uncapped
+    * bytes/32 rule grew per-task sort memory 10× per decade and the m100
+    * ScaleBench point spilled (SCALING.md round-17). Same lesson as
+    * production OPTIMIZE: targetFileSize is a constant, parallelism
+    * scales with the table. */
+  private def clustered(s: SparkSession, tag: String, df: DataFrame,
+      key: String): graft.tables.GraftTable = {
+    val t = graft.tables.GraftTable.createFrom(s, Scratch.dir(tag), df)
+    val totalBytes = t.filesAt()
+      .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).sum
+    t.setProperties(Map("graft.targetFileSize" ->
+      math.min(math.max(totalBytes / 32, 4L * 1024), 32L * 1024 * 1024).toString))
+    graft.tables.Maintenance.optimize(t, zorderBy = Seq(key))
+    t
+  }
+
+  /** Stats-based file skipping correctness: a range lookup through
+    * `read().filter` on a ZORDERed table returns exactly the unpruned
+    * filter result (`DP/Step 2` behavior). The gate REQUIRES that the
+    * probe prunes; the file size is derived from table bytes. */
   private val q121 = GQ(
     "q121_stats_skipping",
     (s, dir) => {
-      import java.nio.file.{Files, Paths}
-      import graft.tables.{GraftTable, Maintenance}
-      val p = Paths.get(Scratch.dir("skip"))
-      val li = Tables.t(s, dir, "lineitem")
-      val t = GraftTable.createFrom(s, p.toString, li)
-      t.setProperties(Map("graft.targetFileSize" -> (256 * 1024).toString))
-      Maintenance.optimize(t, zorderBy = Seq("l_orderkey"))
-      t.readWhere("l_orderkey <= 100")
+      import org.apache.spark.sql.functions.col
+      val t = clustered(s, "skip", Tables.t(s, dir, "lineitem"), "l_orderkey")
+      val (kept, total) = t.pruneFiles("l_orderkey <= 100")
+      require(kept.size < total, s"the probe must prune: ${kept.size}/$total")
+      t.read().filter(col("l_orderkey") <= 100)
         .select("l_orderkey", "l_linenumber", "l_quantity")
         .orderBy("l_orderkey", "l_linenumber")
     },
@@ -130,36 +147,18 @@ object OptimizerQueries extends QueryBatch {
     * probe prunes, and keeps exactly the files its >=/<= desugaring
     * keeps) and the oracle checks the returned rows against the
     * unpruned filter, so a pruning rule that skipped a matching file
-    * would hash-mismatch. File count is derived from table bytes so
-    * the pruning requirement holds at every test scale. */
+    * would hash-mismatch. */
   private val q285 = GQ(
     "q285_between_prune",
     (s, dir) => {
-      import graft.tables.{GraftTable, Maintenance}
-      val p = Scratch.dir("btwprobe")
-      val li = Tables.t(s, dir, "lineitem")
-      val t = GraftTable.createFrom(s, p, li)
-      // file-size target clamped to [4 KB, 32 MB]: at small test scales
-      // bytes/32 keeps ≥ 32 files so the pruning requirement never goes
-      // vacuous; at large scales the 32 MB CAP makes file COUNT (= sort
-      // partitions) grow with the data instead of file size — an
-      // uncapped bytes/32 rule grew per-task sort memory 10× per decade
-      // and the m100 ScaleBench point spilled (18×/15.7× for 10× rows
-      // under /8 and /32; linear once capped — SCALING.md round-17).
-      // Same lesson as production OPTIMIZE: targetFileSize is a
-      // constant, parallelism scales with the table.
-      val totalBytes = t.filesAt()
-        .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).sum
-      t.setProperties(Map("graft.targetFileSize" ->
-        math.min(math.max(totalBytes / 32, 4L * 1024), 32L * 1024 * 1024).toString))
-      Maintenance.optimize(t, zorderBy = Seq("l_orderkey"))
+      val t = clustered(s, "btwprobe", Tables.t(s, dir, "lineitem"), "l_orderkey")
       val probe = "l_orderkey BETWEEN 40 AND 60"
       val (kept, total) = t.pruneFiles(probe)
       require(kept.size < total, s"BETWEEN must prune: ${kept.size}/$total")
       require(kept.toSet ==
         t.pruneFiles("l_orderkey >= 40 AND l_orderkey <= 60")._1.toSet,
         "BETWEEN must keep exactly its desugaring's files")
-      t.readWhere(probe)
+      t.read().filter(probe)
         .select("l_orderkey", "l_linenumber", "l_quantity")
         .orderBy("l_orderkey", "l_linenumber")
     },
@@ -183,21 +182,13 @@ object OptimizerQueries extends QueryBatch {
     "q286_isnull_prune",
     (s, dir) => {
       import org.apache.spark.sql.functions._
-      import graft.tables.{GraftTable, Maintenance}
-      val p = Scratch.dir("nullprobe")
       val o = Tables.t(s, dir, "orders")
       val maxKey = o.agg(max("o_orderkey")).head().getLong(0)
       val cut = maxKey - 500 // the "current rows": high keys, end open
       val staged = o.select(col("o_orderkey"), col("o_custkey"),
         when(col("o_orderkey") > cut, lit(null).cast("timestamp"))
           .otherwise(col("o_orderdate")).as("o_end"))
-      val t = GraftTable.createFrom(s, p, staged)
-      // same clamp as q285: file COUNT grows with data, never file size
-      val totalBytes = t.filesAt()
-        .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).sum
-      t.setProperties(Map("graft.targetFileSize" ->
-        math.min(math.max(totalBytes / 32, 4L * 1024), 32L * 1024 * 1024).toString))
-      Maintenance.optimize(t, zorderBy = Seq("o_orderkey"))
+      val t = clustered(s, "nullprobe", staged, "o_orderkey")
       val (kept, total) = t.pruneFiles("o_end IS NULL")
       require(kept.size < total, s"IS NULL must prune: ${kept.size}/$total")
       // exactness: kept ≡ the files whose footer null count is > 0
@@ -208,7 +199,7 @@ object OptimizerQueries extends QueryBatch {
       }.toSet
       require(kept.toSet == withNulls,
         "IS NULL must keep exactly the null-bearing files")
-      t.readWhere("o_end IS NULL")
+      t.read().filter(col("o_end").isNull)
         .select("o_orderkey", "o_custkey").orderBy("o_orderkey")
     },
     Some("""SELECT o_orderkey, o_custkey FROM orders
@@ -326,7 +317,7 @@ object OptimizerQueries extends QueryBatch {
       // files under ANY layout; it must just not get materially worse
       require(after.zip(before).forall { case (a, b) => a <= b + 0.10 },
         s"applied strategy regressed a workload predicate: $before -> $after")
-      preds.map { case (label, pr) => (label, t.readWhere(pr).count()) }
+      preds.map { case (label, pr) => (label, t.read().filter(pr).count()) }
         .toDF("predicate", "n_rows").orderBy("predicate")
     },
     Some("""SELECT * FROM (

@@ -5,12 +5,15 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.column.statistics.{BinaryStatistics, Statistics}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BinaryComparison, EqualTo, Expression, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-file column min/max statistics for cross-file data skipping
   * (SURVEY.md §4 "file pruning / data skipping"; the reference's ZORDER
@@ -40,11 +43,6 @@ object FileStats {
     * fall back to "never prune" — safe. */
   val NullsPrefix = "__nulls_"
 
-  /** Read footer stats for `files` (absolute paths); returns per-file
-    * column → (min,max) for primitive columns that carry stats. */
-  def harvest(spark: SparkSession, files: Seq[String]): Map[String, Stats] =
-    harvestWithRows(spark, files).map { case (f, (_, s)) => f -> s }
-
   /** One file's footer: (rows, column → (min,max) ++ __nulls_ entries).
     * Pure function of (hadoop conf, path) so the distributed harvest can
     * run it on executors. Any failure degrades to "no stats" — pruning
@@ -58,6 +56,10 @@ object FileStats {
         val acc = scala.collection.mutable.Map[String, (String, String)]()
         val nulls = scala.collection.mutable.Map[String, Long]()
         val nullsUnknown = scala.collection.mutable.Set[String]()
+        // columns with a row group of values but no bounds: parquet-java
+        // drops min/max for a float chunk holding NaN and for a binary
+        // chunk over 4 KB, so no other row group can bound the file
+        val boundsUnknown = scala.collection.mutable.Set[String]()
         reader.getFooter.getBlocks.asScala.foreach { block =>
           rows += block.getRowCount
           block.getColumns.asScala.foreach { cc =>
@@ -67,35 +69,34 @@ object FileStats {
               // null counts: valid only when EVERY block reports one
               if (st == null || !st.isNumNullsSet) nullsUnknown += name
               else nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
-              if (st != null && st.hasNonNullValue) {
-                val (mn, mx) = (render(st.genericGetMin), render(st.genericGetMax))
-                if (mn != null && mx != null) {
-                  val merged = acc.get(name) match {
-                    case Some((a, b)) => (minOf(a, mn, st), maxOf(b, mx, st))
-                    case None => (mn, mx)
-                  }
-                  acc(name) = merged
-                }
+              val allNull = st != null && st.isNumNullsSet && st.getNumNulls >= block.getRowCount
+              val (mn, mx) =
+                if (st != null && st.hasNonNullValue) (render(st.genericGetMin), render(st.genericGetMax))
+                else (null, null)
+              if (mn != null && mx != null) acc(name) = acc.get(name) match {
+                case Some((a, b)) => (
+                  if (compareRendered(a, mn, st) <= 0) a else mn,
+                  if (compareRendered(b, mx, st) >= 0) b else mx)
+                case None => (mn, mx)
               }
+              else if (!allNull) boundsUnknown += name
             }
           }
         }
+        acc --= boundsUnknown
+        val columns = nulls.keySet ++ nullsUnknown
         (nulls.keySet -- nullsUnknown).foreach { name =>
           val key = NullsPrefix + name
-          // a REAL column named __nulls_<x> wins the key: its min/max
-          // must not be overwritten by x's null accounting, which would
-          // prune that column's reads incorrectly (review finding);
-          // mightMatch also refuses null-count pruning when the schema
-          // carries such a column
-          if (!acc.contains(key)) acc(key) = (nulls(name).toString, rows.toString)
+          // a REAL column named __nulls_<x> keeps the key (see nullCounts)
+          if (!columns.contains(key)) acc(key) = (nulls(name).toString, rows.toString)
         }
         (rows, acc.toMap)
       } finally reader.close()
     } catch { case NonFatal(_) => (0L, Map.empty[String, (String, String)]) }
 
-  /** As `harvest`, plus the footer row count per file — one footer read
-    * yields both, so writers can record output-row metrics without an
-    * extra count() pass over the data.
+  /** Footer stats for `files` (absolute paths) with each file's row
+    * count — one footer read yields both, so writers can record output-row
+    * metrics without an extra count() pass over the data.
     *
     * Below [[DistributedHarvestFiles]] files the footers are read on the
     * driver (16-thread pool — the per-commit O(new files) cost Delta pays
@@ -178,19 +179,46 @@ object FileStats {
   private def numeric(s: String): Option[BigDecimal] =
     try Some(BigDecimal(s)) catch { case NonFatal(_) => None }
 
-  private def minOf(a: String, b: String, st: Any): String =
-    (numeric(a), numeric(b)) match {
-      case (Some(x), Some(y)) => if (x <= y) a else b
-      case _ => if (a <= b) a else b
-    }
+  /** Spark's and parquet's string order: unsigned UTF-8 bytes, i.e. code
+    * points. `String.compareTo` orders UTF-16 units, which puts a
+    * supplementary-plane character before U+E000..U+FFFF. */
+  private def compareUtf8(a: String, b: String): Int =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
-  private def maxOf(a: String, b: String, st: Any): String =
-    (numeric(a), numeric(b)) match {
-      case (Some(x), Some(y)) => if (x >= y) a else b
-      case _ => if (a >= b) a else b
+  /** Order of two rendered footer values of one column: UTF-8 bytes for
+    * binary columns (digit strings are not numbers), numbers otherwise. */
+  private def compareRendered(a: String, b: String, st: Statistics[_]): Int =
+    st match {
+      case _: BinaryStatistics => compareUtf8(a, b)
+      case _ => (numeric(a), numeric(b)) match {
+        case (Some(x), Some(y)) => x.compare(y)
+        case _ => a.compareTo(b)
+      }
     }
 
   // ---- predicate evaluation against stats --------------------------------
+
+  /** Can the file at table-relative path `rel`, with footer `stats`, hold
+    * a row matching `predicate`? The one per-file test behind both
+    * `GraftTable.pruneFiles` and the scan's `LogFileIndex.listFiles`.
+    * `__part_k=v` / `k=v` path segments add exact stats for partition
+    * columns a legacy-layout file does not store; footer stats win where
+    * both exist. A file with no stats is always kept. */
+  def fileMightMatch(rel: String, stats: Stats, predicate: Expression,
+      schema: StructType): Boolean = {
+    val st = pathStats(rel) ++ stats
+    st.isEmpty || mightMatch(st, predicate, schema)
+  }
+
+  /** Partition values from `k=v` directory segments. Hive-style writers
+    * escape the value (`a:b` is stored as `a%3Ab`) and write a null as
+    * the default-partition marker, which carries no value. */
+  private def pathStats(rel: String): Stats =
+    rel.split("/").iterator.filter(_.contains("=")).map(_.split("=", 2))
+      .collect { case Array(k, v) if v != ExternalCatalogUtils.DEFAULT_PARTITION_NAME =>
+        val value = ExternalCatalogUtils.unescapePathName(v)
+        k.stripPrefix("__part_") -> ((value, value))
+      }.toMap
 
   /** Conjuncts of `col <op> literal` shape extracted from a predicate. */
   private def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -199,13 +227,13 @@ object FileStats {
   }
 
   /** Can a file with these stats possibly contain a matching row?
-    * Unknown shapes / missing stats ⇒ true (never prune incorrectly). */
+    * Takes parsed predicates (`pruneFiles`) and the optimizer's resolved
+    * filters (the scan's data filters) alike. Unknown shapes / missing
+    * stats ⇒ true (never prune incorrectly). */
   def mightMatch(stats: Stats, predicate: Expression, schema: StructType): Boolean =
     conjuncts(predicate).forall {
-      // `x BETWEEN lo AND hi`: Spark 4's parser keeps it as an
-      // UNRESOLVED between(x, lo, hi) function (no analyzer runs on a
-      // bare parseExpression), which used to fall through to the
-      // conservative keep — desugar to the two comparisons
+      // `x BETWEEN lo AND hi`: Spark 4's parser keeps it as an UNRESOLVED
+      // between(x, lo, hi) call (resolved filters arrive desugared)
       case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
           if f.nameParts.map(_.toLowerCase) == Seq("between") &&
             f.arguments.size == 3 =>
@@ -213,103 +241,82 @@ object FileStats {
           And(GreaterThanOrEqual(f.arguments(0), f.arguments(1)),
             LessThanOrEqual(f.arguments(0), f.arguments(2))), schema)
       // col IN (l1, l2, ...): prunable iff NO member can fall inside the
-      // file's [min, max] — the single-read probe shape (`cell IN (...)`)
-      // the ANN/index layers use instead of a union of per-cell reads
-      case In(attr, members)
-          if members.nonEmpty && members.forall(_.isInstanceOf[Literal]) =>
-        attr match {
-          case _: Attribute |
-               _: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            members.exists(m =>
-              mightMatch(stats, EqualTo(attr, m.asInstanceOf[Literal]), schema))
-          case _ => true
-        }
-      // disjunction: a file survives if EITHER branch might match
-      case Or(l, r) =>
-        mightMatch(stats, l, schema) || mightMatch(stats, r, schema)
+      // file's [min, max] — the ANN/index layers' one-read probe shape
+      case In(a, members) if members.forall(_.isInstanceOf[Literal]) =>
+        members.exists(m => mightMatch(stats, EqualTo(a, m), schema))
+      // the optimizer's form of an IN of more than 10 literals: a set of
+      // the column type's internal values
+      case InSet(a, values) =>
+        values.exists(v => mightMatch(stats, EqualTo(a, Literal(v, a.dataType)), schema))
+      case Or(l, r) => mightMatch(stats, l, schema) || mightMatch(stats, r, schema)
       // col IS NULL: prunable iff the file's null count is known zero —
       // the SCD2 current-row probe (`_end_timestamp IS NULL`) skips
-      // every fully-closed file this way. When the schema carries a REAL
-      // column named __nulls_<col>, the stats key is ambiguous (that
-      // column's min/max owns it) — refuse to prune (review finding).
-      case IsNull(a) =>
-        attrName(a).filterNot(n => schema.exists(_.name == NullsPrefix + n))
-          .flatMap(n => nullCounts(stats, n)) match {
-          case Some((numNulls, _)) => numNulls > 0
-          case None => true
-        }
+      // every fully-closed file this way
+      case IsNull(a) => attrName(a).flatMap(nullCounts(stats, _, schema)).forall(_._1 > 0)
       // col IS NOT NULL: prunable iff every row in the file is null
       case IsNotNull(a) =>
-        attrName(a).filterNot(n => schema.exists(_.name == NullsPrefix + n))
-          .flatMap(n => nullCounts(stats, n)) match {
-          case Some((numNulls, numRows)) => numNulls < numRows
-          case None => true
-        }
-      case cmp @ (_: EqualTo | _: LessThan | _: LessThanOrEqual |
-                  _: GreaterThan | _: GreaterThanOrEqual) =>
-        val (attrOpt, litOpt, flipped) = cmp.children match {
-          case Seq(a: Attribute, l: Literal) => (Some(a.name), Some(l), false)
-          case Seq(l: Literal, a: Attribute) => (Some(a.name), Some(l), true)
-          case Seq(u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute, l: Literal) =>
-            (Some(u.name), Some(l), false)
-          case Seq(l: Literal, u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute) =>
-            (Some(u.name), Some(l), true)
-          case _ => (None, None, false)
-        }
-        (attrOpt, litOpt) match {
-          case (Some(name), Some(lit)) =>
-            stats.get(name) match {
-              case Some((mn, mx)) =>
-                compareRange(mn, mx, lit, schema.find(_.name == name).map(_.dataType)) match {
-                  case None => true
-                  case Some((litVsMin, litVsMax)) =>
-                    cmp match {
-                      case _: EqualTo => litVsMin >= 0 && litVsMax <= 0
-                      case _: LessThan => // col < lit (or lit < col when flipped)
-                        if (!flipped) litVsMin > 0 else litVsMax < 0
-                      case _: LessThanOrEqual =>
-                        if (!flipped) litVsMin >= 0 else litVsMax <= 0
-                      case _: GreaterThan =>
-                        if (!flipped) litVsMax < 0 else litVsMin > 0
-                      case _: GreaterThanOrEqual =>
-                        if (!flipped) litVsMax <= 0 else litVsMin >= 0
-                      case _ => true
-                    }
-                }
-              case None => true
-            }
-          case _ => true
-        }
+        attrName(a).flatMap(nullCounts(stats, _, schema)).forall { case (n, rows) => n < rows }
+      case c: BinaryComparison if Flipped.contains(c.symbol) => (c.left, c.right) match {
+        case (a, l: Literal) => compareMightMatch(stats, a, c.symbol, l, schema)
+        case (l: Literal, a) => compareMightMatch(stats, a, Flipped(c.symbol), l, schema)
+        case _ => true
+      }
       case _ => true // non-comparison conjunct: cannot prune on it
     }
 
+  private val Flipped = Map("=" -> "=", "<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+
+  /** `a <op> lit` against the column's [min, max]. */
+  private def compareMightMatch(stats: Stats, a: Expression, op: String, lit: Literal,
+      schema: StructType): Boolean = attrName(a).forall { name =>
+    val dt = schema.find(_.name == name).map(_.dataType)
+    stats.get(name).forall { case (mn, mx) =>
+      compareRange(mn, mx, lit, dt).forall { case (vsMin, vsMax) =>
+        op match {
+          case "=" => vsMin >= 0 && vsMax <= 0
+          case "<" => vsMin > 0
+          case "<=" => vsMin >= 0
+          case ">" => vsMax < 0
+          case _ => vsMax <= 0
+        }
+      }
+    }
+  }
+
+  /** Column name of a resolved or parsed (unresolved) column reference. */
   private def attrName(e: Expression): Option[String] = e match {
     case a: Attribute => Some(a.name)
-    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => Some(u.name)
     case _ => None
   }
 
-  /** (numNulls, numRows) for `col` when the harvest recorded them. */
-  private def nullCounts(stats: Stats, col: String): Option[(Long, Long)] =
-    stats.get(NullsPrefix + col).flatMap { case (n, r) =>
+  /** (numNulls, numRows) for `col` when the harvest recorded them. None
+    * also when the schema carries a REAL column named __nulls_<col>: its
+    * min/max own the key. */
+  private def nullCounts(stats: Stats, col: String,
+      schema: StructType): Option[(Long, Long)] =
+    if (schema.exists(_.name == NullsPrefix + col)) None
+    else stats.get(NullsPrefix + col).flatMap { case (n, r) =>
       (for { nn <- n.toLongOption; rr <- r.toLongOption } yield (nn, rr))
     }
 
   /** (compare(lit,min), compare(lit,max)) or None when incomparable. */
   private def compareRange(mn: String, mx: String, lit: Literal,
-      dt: Option[DataType]): Option[(Int, Int)] = {
-    dt match {
-      case Some(_: NumericType) =>
-        for {
-          l <- numeric(String.valueOf(lit.value))
-          a <- numeric(mn); b <- numeric(mx)
-        } yield (l.compare(a), l.compare(b))
-      case Some(StringType) =>
-        val l = String.valueOf(
-          lit.value match { case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-                            case v => v })
-        Some((l.compareTo(mn), l.compareTo(mx)))
-      case _ => None
-    }
+      dt: Option[DataType]): Option[(Int, Int)] = lit.value match {
+    case null => None
+    case v =>
+      val l = v.toString // a UTF8String renders as its text
+      dt match {
+        // the footer holds a decimal's unscaled value when the file stores
+        // it as INT32/INT64 (precision <= 18), its bytes otherwise; the
+        // stats do not say which, so decimals never prune
+        case Some(_: DecimalType) => None
+        case Some(_: NumericType) =>
+          for { x <- numeric(l); a <- numeric(mn); b <- numeric(mx) }
+            yield (x.compare(a), x.compare(b))
+        // a string column against a number compares as numbers in Spark
+        case Some(StringType) if lit.dataType == StringType =>
+          Some((compareUtf8(l, mn), compareUtf8(l, mx)))
+        case _ => None
+      }
   }
 }

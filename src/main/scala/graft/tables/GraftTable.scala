@@ -117,9 +117,9 @@ private[tables] object Snapshot {
   *
   * Scale design: the log stores *file lists*, so a snapshot read plans
   * from the log alone — a [[LogFileIndex]] over the live files, with no
-  * storage listing and no Spark job — while parquet pruning/pushdown work
-  * unchanged, and DML rewrites only the files that contain matched rows
-  * (see MergeOps).
+  * storage listing and no Spark job, skipping files by their logged stats
+  * — while parquet pushdown works unchanged, and DML rewrites only the
+  * files that contain matched rows (see MergeOps).
   * Commits are atomic single-file renames; concurrent writers race on the
   * version filename and the loser retries (`Concurrency.retry`), matching
   * the reference's retry-merge helper (`HF/deltahelpers.py:132-172`).
@@ -324,7 +324,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * carry `_metadata.file_path`/`row_index` into the scan and drop them
     * after. */
   private def readSnapshot(files: Seq[String], readSchema: StructType,
-      liveDvs: => Seq[String], keepPos: Boolean): DataFrame = {
+      liveDvs: => Seq[String], keepPos: Boolean,
+      stats: Map[String, (String, FileStats.Stats)] = Map.empty): DataFrame = {
     val s = Option(readSchema).getOrElse(schemaAt())
     if (files.isEmpty) {
       val out = if (keepPos) StructType(s.fields ++ DvSchema.fields) else s
@@ -366,7 +367,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       if (parts.isEmpty) (Nil, files) else files.partition(legacyKeyIdx(_) >= 0)
     val modernDf: Option[DataFrame] =
       if (modern.isEmpty) None
-      else Some(withPos(LogFileIndex.read(spark, modern, s)))
+      else Some(withPos(LogFileIndex.read(spark, modern, s, stats)))
     val legacyDfs: Seq[DataFrame] = legacy.groupBy { abs =>
       // same normalization as legacyKeyIdx — the index is positional
       val p = Paths.get(abs).toAbsolutePath.normalize
@@ -383,12 +384,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     }
   }
 
-  /** Snapshot read (optionally `VERSION AS OF`). */
+  /** Snapshot read (optionally `VERSION AS OF`); its scan skips files by
+    * the snapshot's stats for any filter on it (see [[LogFileIndex]]). */
   def read(versionAsOf: Long = Long.MaxValue): DataFrame = {
     val snap = snapshotAt(versionAsOf)
     require(snap.version >= 0, s"$path has no commits <= $versionAsOf")
-    readSnapshot(snap.files.keysIterator.map(absPath).toVector, snap.schema,
-      snap.dvFiles.keysIterator.map(absPath).toVector, keepPos = false)
+    val files = snap.files.toVector.map { case (rel, st) => (absPath(rel), (rel, st)) }
+    readSnapshot(files.map(_._1), snap.schema,
+      snap.dvFiles.keysIterator.map(absPath).toVector, keepPos = false, files.toMap)
   }
 
   /** DESCRIBE HISTORY equivalent (`DP/Step 1:235-239`). */
@@ -437,44 +440,25 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   /** Per-file stats of the live files at a version (rel path → col →
     * (min,max), empty when none were recorded): the snapshot's file map,
-    * so at the tip a `readWhere` never re-folds the log. */
+    * so at the tip a pruned read never re-folds the log. */
   def statsAt(version: Long = Long.MaxValue): Map[String, FileStats.Stats] =
     snapshotAt(version).files
 
   /** Stats-pruned file list for a conjunctive predicate: only files whose
-    * min/max ranges can match. Falls back to all files on unknown shapes. */
-  def pruneFiles(predicateSql: String): (Seq[String], Int) = {
-    val pred =
-      try spark.sessionState.sqlParser.parseExpression(predicateSql)
-      catch { case NonFatal(_) => val all = filesAt(); return (all, all.size) }
-    pruneFilesByExpr(pred)
-  }
+    * min/max ranges can match, with the live file count. Keeps every file
+    * on shapes it cannot evaluate; a predicate that does not parse throws. */
+  def pruneFiles(predicateSql: String): (Seq[String], Int) =
+    pruneFilesByExpr(spark.sessionState.sqlParser.parseExpression(predicateSql))
 
   /** As `pruneFiles`, over an already-built predicate expression. */
   private[graft] def pruneFilesByExpr(
       pred: org.apache.spark.sql.catalyst.expressions.Expression): (Seq[String], Int) = {
     val live = snapshot.files
     val schema = schemaAt()
-    val kept = live.iterator.filter { case (rel, stats) =>
-      // __part_k=v path segments are exact per-file stats (partition
-      // pruning unified with footer-stats skipping)
-      val partStats: Map[String, (String, String)] = rel.split("/").toSeq
-        .filter(_.contains("=")).map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k.stripPrefix("__part_") -> (v, v)
-        }.toMap
-      val st = stats ++ partStats
-      if (st.isEmpty) true else FileStats.mightMatch(st, pred, schema)
-    }.map(e => absPath(e._1)).toVector
+    val kept = live.iterator
+      .filter { case (rel, stats) => FileStats.fileMightMatch(rel, stats, pred, schema) }
+      .map(e => absPath(e._1)).toVector
     (kept, live.size)
-  }
-
-  /** Snapshot read with stats-based file skipping: `readWhere("l_orderkey
-    * = 42")` on a ZORDERed table opens only the overlapping files
-    * (`DP/Step 2` pruning behavior). The predicate is still applied. */
-  def readWhere(predicateSql: String): DataFrame = {
-    val (files, _) = pruneFiles(predicateSql)
-    readFiles(files).filter(org.apache.spark.sql.functions.expr(predicateSql))
   }
 
   /** Write `df` as new immutable files; returns table-relative file paths.

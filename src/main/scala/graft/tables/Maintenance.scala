@@ -234,9 +234,8 @@ object Maintenance {
     val (zorderByEff, curveEff, target) = resolveLayout(t, zorderBy, curve)
     val params = Map("zOrderBy" -> zorderByEff.mkString(","),
       "curve" -> curveEff, "predicate" -> predicateSql)
-    // parse EAGERLY and fail loudly: pruneFiles' conservative
-    // parse-failure fallback returns ALL files, which here would turn a
-    // typo'd predicate into a silent full-table rewrite (review finding)
+    // parse EAGERLY and fail loudly, naming the predicate: a typo'd
+    // predicate must never become a full-table rewrite
     val pred =
       try t.spark.sessionState.sqlParser.parseExpression(predicateSql)
       catch {

@@ -12,11 +12,11 @@ import graft.tables.GraftTable
   * per query is a non-starter; a probe must open only its cells' files).
   *
   * Because the table partitions on `cell`, each probe is a
-  * `readWhere("cell = c")` that file-prunes to that cell's files through
-  * the ordinary stats-skipping path — the ANN index IS the table layout,
-  * no side-car index format. Centroids are metadata (nlist·d doubles)
-  * and ride `TBLPROPERTIES`, so reopening the table recovers the full
-  * index with zero reads of vector data.
+  * `read().filter(col("cell").isin(...))` whose scan file-prunes to
+  * those cells' files through the ordinary stats skipping — the ANN
+  * index IS the table layout, no side-car index format. Centroids are
+  * metadata (nlist·d doubles) and ride `TBLPROPERTIES`, so reopening the
+  * table recovers the full index with zero reads of vector data.
   */
 object AnnIndex {
 
@@ -72,8 +72,8 @@ object AnnIndex {
 
   /** Probe an index table reopened from storage: pick the `nprobe` cells
     * nearest the query from the PROPERTIES centroids (zero data reads),
-    * then exact-rerank inside those cells only — each cell arrives via
-    * its own file-pruned `readWhere`. nprobe = nlist is exact brute
+    * then exact-rerank inside those cells only — one read whose scan
+    * opens only the probed cells' files. nprobe = nlist is exact brute
     * force.
     *
     * Contract: `queryVec` must have non-zero norm (cosine similarity to a
@@ -83,7 +83,7 @@ object AnnIndex {
       idCol: String = "vec_id"): DataFrame = {
     val probe = probedCells(t, queryVec, nprobe)
     val q = graft.functions.VecLit.doubles(queryVec)
-    val cells = t.readWhere(s"cell IN (${probe.mkString(", ")})")
+    val cells = t.read().filter(col("cell").isin(probe: _*))
     val vn = VectorOps.normPre(col("v"))
     cells.select(col(idCol),
         // zero-norm data vectors rank last (sim -1) — an unguarded
@@ -108,7 +108,7 @@ object AnnIndex {
     require(minSim > -1.0, s"minSim must exceed the -1 zero-norm sentinel, got $minSim")
     val probe = probedCells(t, queryVec, nprobe)
     val q = graft.functions.VecLit.doubles(queryVec)
-    val cells = t.readWhere(s"cell IN (${probe.mkString(", ")})")
+    val cells = t.read().filter(col("cell").isin(probe: _*))
     val vn = VectorOps.normPre(col("v"))
     cells.select(col(idCol),
         round(when(vn > 0, VectorOps.dotPre(col("v"), q) /
@@ -182,7 +182,7 @@ object AnnIndex {
         .collect().map(_.getInt(0)).toSeq.sorted // bounded by nlist
       val existing =
         if (touched.isEmpty) return
-        else t.readWhere(s"cell IN (${touched.mkString(", ")})")
+        else t.read().filter(col("cell").isin(touched: _*))
           .select(col(idCol))
       val fresh = assigned.join(existing, Seq(idCol), "left_anti")
       t.append(fresh, "ANN INDEX APPEND")
@@ -231,7 +231,7 @@ object AnnIndex {
     // the HOF aggregate(zip_with) evaluates a lambda per element, ~7 s
     // per 200k 64-dim pairs (see functions/DotProduct.scala). Sequential
     // double sums in both forms: bit-identical results.
-    val idx = t.readWhere(s"cell IN (${probed.mkString(", ")})")
+    val idx = t.read().filter(col("cell").isin(probed: _*))
       .select(col(idCol).as("id2"), col("cell"), col("v"))
       .withColumn("__vn", VectorOps.normPre(col("v")))
     // register on BOTH sessions: inside foreachBatch the micro-batch

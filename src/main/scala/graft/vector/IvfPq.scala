@@ -74,7 +74,7 @@ object IvfPq {
       nprobe: Int, fetch: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val probe = AnnIndex.probedCells(t, queryVec, nprobe)
-    val cells = t.readWhere(s"cell IN (${probe.mkString(", ")})")
+    val cells = t.read().filter(col("cell").isin(probe: _*))
     val short = Pq.adcScore(cells, PqIndex.codebooks(t), queryVec, fetch, idCol)
       .select(col(idCol))
     VectorOps.cosineTopK(

@@ -66,21 +66,18 @@ class PlanAuditSpec extends SparkTestBase {
     // full scans would still return correct rows, so only a plan audit
     // catches it
     import graft.vector.AnnIndex
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val emb = Tables.t(spark, sf, "embeddings")
     val t = AnnIndex.buildIvf(emb, scratch("annplan"), nlist = 8, iters = 2)
     val qv = emb.filter(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).map(_.toDouble)
     val df = AnnIndex.topK(t, qv, 10, nprobe = 2)
-    val scanned = df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation match {
-        case f: HadoopFsRelation => f.location.inputFiles.toSeq
-        case _ => Nil
-      }
-    }.flatten.distinct
+    df.collect()
+    // the snapshot's index lists every live file; the scan's numFiles
+    // metric counts the files it kept and opened
+    val scanned = graft.tools.Prof.filesRead(df.queryExecution.executedPlan)
     val (kept, total) = AnnIndex.probeCost(t, AnnIndex.probedCells(t, qv, 2))
-    assert(scanned.size == kept,
-      s"probe must open exactly the probed cells' files: scanned ${scanned.size}, cells hold $kept")
+    assert(scanned == kept,
+      s"probe must open exactly the probed cells' files: scanned $scanned, cells hold $kept")
     assert(kept < total, s"probe must prune: $kept/$total files")
   }
 

@@ -395,14 +395,14 @@ class CommitLogCacheSpec extends SparkTestBase {
     val nation = Tables.t(spark, sf, "nation")
     val t1 = GraftTable.createFrom(spark, path, nation.filter(col("n_nationkey") < 10))
     // warm the stats cache through the pruning path
-    assert(t1.readWhere("n_nationkey = 5").count() === 1L)
+    assert(t1.read().filter("n_nationkey = 5").count() === 1L)
     GraftTable.deleteTree(java.nio.file.Paths.get(path))
     // same path, same commit sequence (=> same tip version), DISJOINT key
     // range: a stale cached stats map would prune key 12 away entirely and
     // claim files for key 5
     val t2 = GraftTable.createFrom(spark, path, nation.filter(col("n_nationkey") >= 10))
-    assert(t2.readWhere("n_nationkey = 5").count() === 0L)
-    assert(t2.readWhere("n_nationkey = 12").count() === 1L)
+    assert(t2.read().filter("n_nationkey = 5").count() === 0L)
+    assert(t2.read().filter("n_nationkey = 12").count() === 1L)
   }
 
   test("identity assignment stays dense across appends (footer-count path)") {

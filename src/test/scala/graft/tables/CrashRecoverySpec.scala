@@ -41,7 +41,7 @@ class CrashRecoverySpec extends SparkTestBase {
     assert(t.currentVersion === version)
     assert(t.history.count() === version + 1)
     // stats-pruned reads walk the same commit-log file list
-    assert(t.readWhere("c_custkey >= 0").count() === rows)
+    assert(t.read().filter("c_custkey >= 0").count() === rows)
 
     // a later writer is oblivious: appends commit right past the debris
     t.append(customer.limit(5))

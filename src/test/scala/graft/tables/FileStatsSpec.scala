@@ -21,7 +21,7 @@ class FileStatsSpec extends SparkTestBase {
       s"point lookup should prune most of $total files, kept ${kept.size}")
 
     // correctness: pruned read == unpruned filter
-    val a = t.readWhere("l_orderkey = 42").count()
+    val a = t.read().filter("l_orderkey = 42").count()
     val b = li.filter(col("l_orderkey") === 42).count()
     assert(a === b && a > 0)
   }
@@ -33,16 +33,16 @@ class FileStatsSpec extends SparkTestBase {
     Maintenance.optimize(t, zorderBy = Seq("l_quantity"))
     val (kept, all) = t.pruneFiles("l_quantity <= 3")
     assert(kept.size < all)
-    assert(t.readWhere("l_quantity <= 3").count() ===
+    assert(t.read().filter("l_quantity <= 3").count() ===
       li.filter(col("l_quantity") <= 3).count())
   }
 
-  test("repeated readWhere and a write never replay the log (100×-scale guard)") {
+  test("repeated read().filter and a write never replay the log") {
     val li = Tables.t(spark, sf, "lineitem")
     val t = GraftTable.createFrom(spark, scratch("statscache"), li)
     t.pruneFiles("l_orderkey = 1") // warm the log cache
     val before = Snapshot.replays.get()
-    (1 to 5).foreach(i => t.readWhere(s"l_orderkey = $i").count())
+    (1 to 5).foreach(i => t.read().filter(s"l_orderkey = $i").count())
     // a write extends the cached tip snapshot by its own files
     t.append(li.limit(10))
     t.pruneFiles("l_orderkey = 1")
@@ -65,7 +65,7 @@ class FileStatsSpec extends SparkTestBase {
     t.restoreTo(v)
     assert(t.pruneFiles("l_orderkey = 42") === ((keptAtV, allAtV)),
       "restored files must carry their stats back into the snapshot")
-    assert(t.readWhere("l_orderkey = 42").count() ===
+    assert(t.read().filter("l_orderkey = 42").count() ===
       li.filter(col("l_orderkey") === 42).count())
   }
 
@@ -92,7 +92,7 @@ class FileStatsSpec extends SparkTestBase {
     val viaCmp = t.pruneFiles("l_orderkey >= 40 AND l_orderkey <= 60")._1.toSet
     assert(viaBetween == viaCmp, "BETWEEN must prune like >= AND <=")
     assert(viaBetween.size < total, "the narrow range must actually prune")
-    val a = t.readWhere("l_orderkey BETWEEN 40 AND 60").count()
+    val a = t.read().filter("l_orderkey BETWEEN 40 AND 60").count()
     val b = li.filter(col("l_orderkey").between(40, 60)).count()
     assert(a === b && a > 0)
     // NOT BETWEEN stays conservative (unknown shape)
@@ -132,8 +132,8 @@ class FileStatsSpec extends SparkTestBase {
     assert(keptNotNull.toSet == (allFiles -- nullFiles),
       "IS NOT NULL must skip the all-null files")
     // correctness: pruned reads equal unpruned filters
-    assert(t.readWhere("o_end IS NULL").count() == 200)
-    assert(t.readWhere("o_end IS NOT NULL").count() == 200)
+    assert(t.read().filter("o_end IS NULL").count() == 200)
+    assert(t.read().filter("o_end IS NOT NULL").count() == 200)
   }
 
   test("a real column named __nulls_<x> keeps its min/max and disables x's null pruning") {
@@ -148,7 +148,7 @@ class FileStatsSpec extends SparkTestBase {
     // mightMatch: pruning on the REAL column works off its true range...
     val (kept, total) = t.pruneFiles("__nulls_x = 250")
     assert(kept.size === total, "the file containing 250 must be kept")
-    assert(t.readWhere("__nulls_x = 250").count() === 1)
+    assert(t.read().filter("__nulls_x = 250").count() === 1)
     // ...and IS NULL on x refuses to prune (ambiguous key — schema guard)
     val schema = StructType(Seq(StructField("x", LongType),
       StructField("__nulls_x", LongType)))
@@ -207,12 +207,51 @@ class FileStatsSpec extends SparkTestBase {
     assert(inKept.size < total, "IN over two keys must still prune")
     val orKept = t.pruneFiles("l_orderkey = 42 OR l_orderkey = 5000")._1.toSet
     assert(orKept == inKept, "OR of equalities must prune like the IN form")
-    // correctness through readWhere
-    val a = t.readWhere("l_orderkey IN (42, 5000)").count()
+    // correctness through the pruning scan
+    val a = t.read().filter("l_orderkey IN (42, 5000)").count()
     val b = li.filter(col("l_orderkey").isin(42, 5000)).count()
     assert(a === b && a > 0)
     // conservative on non-literal members
     val (kept3, all3) = t.pruneFiles("l_orderkey IN (l_partkey, 5)")
     assert(kept3.size === all3)
+  }
+
+  test("a malformed predicate throws from pruneFiles, and DELETE commits nothing") {
+    val t = GraftTable.createFrom(spark, scratch("badpred"), Tables.t(spark, sf, "nation"))
+    val v = t.currentVersion
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
+      t.pruneFiles("n_nationkey = = 5")
+    }
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
+      MergeOps.delete(t, "n_nationkey = = 5")
+    }
+    assert(t.currentVersion === v)
+  }
+
+  test("partition values that need path escaping prune by their value") {
+    import spark.implicits._
+    val df = Seq(("a:b", 1), ("c/d", 2), ("e%f", 3), (null, 4)).toDF("k", "v")
+    val t = GraftTable.create(spark, scratch("escprune"), df.schema,
+      Map("graft.partitionBy" -> "k"))
+    t.append(df)
+    assert(t.filesAt().exists(_.contains("__part_k=a%3Ab")), t.filesAt())
+    // the null partition's all-null k has no bounds, so every probe keeps it
+    val nullPart = t.filesAt().filter(_.contains("__HIVE_DEFAULT_PARTITION__")).toSet
+    assert(nullPart.size === 1)
+    for (k <- Seq("a:b", "c/d", "e%f")) {
+      assert((t.pruneFiles(s"k = '$k'")._1.toSet -- nullPart).size === 1, k)
+      assert(t.read().filter(col("k") === k).select("v").as[Int].collect().toSeq.size === 1, k)
+    }
+    assert(t.read().filter(col("k").isNull).count() === 1)
+  }
+
+  test("a string column compared with a number keeps files of numeric strings") {
+    import spark.implicits._
+    val t = GraftTable.createFrom(spark, scratch("strnum"),
+      Seq("05", "06").toDF("s").coalesce(1))
+    // Spark casts s to a number: "05" = 5
+    assert(t.pruneFiles("s = 5")._1.size === 1)
+    assert(t.read().filter("s = 5").count() === 1)
+    assert(t.pruneFiles("s = '5'")._1.isEmpty, "a string literal still prunes")
   }
 }

@@ -24,7 +24,7 @@ class PartitionEvolveSpec extends SparkTestBase {
     val (kept, all) = t.pruneFiles("o_orderstatus = 'F'")
     assert(kept.size < all)
     assert(kept.forall(_.contains("o_orderstatus=F")))
-    assert(t.readWhere("o_orderstatus = 'F'").count() ===
+    assert(t.read().filter("o_orderstatus = 'F'").count() ===
       o.filter(col("o_orderstatus") === "F").count())
   }
 

@@ -57,9 +57,9 @@ class ZorderSpec extends SparkTestBase {
     assert(zSum < rSum,
       s"z-order read $zSum files over ${preds.size} boxes, range-cluster $rSum")
     preds.foreach { p =>
-      assert(z.readWhere(p).count() ===
+      assert(z.read().filter(p).count() ===
         li.filter(org.apache.spark.sql.functions.expr(p)).count())
-      assert(r.readWhere(p).count() ===
+      assert(r.read().filter(p).count() ===
         li.filter(org.apache.spark.sql.functions.expr(p)).count())
     }
   }
