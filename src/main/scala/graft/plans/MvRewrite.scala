@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.types.DoubleType
 
-import graft.tables.GraftTable
+import graft.tables.{GraftTable, IncrementalMv}
 
 /** Automatic materialized-view rewrite — a Catalyst `Rule[LogicalPlan]`
   * that makes [[graft.tables.IncrementalMv]] views TRANSPARENT: a
@@ -39,10 +39,10 @@ import graft.tables.GraftTable
   *     result type. avg is NULL-exact: it divides by the view's
   *     per-column NON-NULL count (`cnt_<col>` — avg(c) skips NULLs,
   *     so sum/count(*) would silently under-report any group with a
-  *     NULL; review finding), and only fires when the view carries
-  *     that column and the original result type is DoubleType (a
-  *     decimal avg swapped for a double expression under the original
-  *     exprId would corrupt the output type for parent operators).
+  *     NULL), and only fires when the original result type is
+  *     DoubleType (a decimal avg swapped for a double expression under
+  *     the original exprId would corrupt the output type for parent
+  *     operators). [[register]] refuses a view without those columns.
   *
   * The replacement plan re-aggregates the view (`sum(cnt)`,
   * `sum(sum_c)`, `sum(cnt_c)`) and projects onto the ORIGINAL output
@@ -85,9 +85,11 @@ object MvRewrite {
     java.nio.file.Paths.get(s).toAbsolutePath.normalize.toString
   }
 
-  /** Register a source → view mapping (idempotent by source path). */
+  /** Register a source → view mapping (idempotent by source path). The
+    * view must carry every `cnt_<col>` of `sumCols`. */
   def register(source: GraftTable, view: GraftTable,
       keys: Seq[String], sumCols: Seq[String]): Unit = {
+    IncrementalMv.requireCounts(view, sumCols)
     val key = norm(source.path)
     snapshotCache.remove(key) // a re-register must not serve a predecessor's snapshot
     registry.put(key, MvEntry(source, view, keys, sumCols))
@@ -162,19 +164,12 @@ object MvRewrite {
       }
       if (groupNames.isEmpty || !groupNames.forall(e.keys.contains))
         return None
-      // roll the view up to the query's grouping; per-column non-null
-      // counts ride along when the view has them (views created before
-      // cnt_<col> landed lack the column — sum stays rewritable, avg
-      // refuses below)
-      val viewDf = e.view.read()
-      val viewCols = viewDf.columns.toSet
+      // roll the view up to the query's grouping, per-column non-null
+      // counts along
       val first = sum(col("cnt")).as("__cnt")
-      val rest = e.sumCols.flatMap { c =>
-        sum(col(s"sum_$c")).as(s"__sum_$c") ::
-          (if (viewCols.contains(s"cnt_$c"))
-            List(sum(col(s"cnt_$c")).as(s"__cnt_$c")) else Nil)
-      }
-      val rolled = viewDf
+      val rest = e.sumCols.flatMap(c =>
+        Seq(sum(col(s"sum_$c")).as(s"__sum_$c"), sum(col(s"cnt_$c")).as(s"__cnt_$c")))
+      val rolled = e.view.read()
         .groupBy(groupNames.map(col): _*)
         .agg(first, rest: _*)
       val rolledPlan = rolled.queryExecution.analyzed
@@ -189,28 +184,19 @@ object MvRewrite {
             // NON-NULL literal maps to the view's cnt (review finding)
             case Count(Seq(Literal(v, _))) if v != null => Some(byName("__cnt"))
             case Sum(a: AttributeReference, _) if e.sumCols.contains(a.name) =>
-              byName.get(s"__sum_${a.name}")
-                .filter(_.dataType == al.dataType)
-                .map { s =>
-                  // restore NULL for all-NULL groups: the MERGE fold
-                  // coalesces partial sums to 0, but sum(c) over zero
-                  // non-null values is NULL
-                  byName.get(s"__cnt_${a.name}") match {
-                    case Some(c) =>
-                      If(EqualTo(c, Literal(0L)), Literal(null, s.dataType), s)
-                    case None => s
-                  }
-                }
+              // restore NULL for all-NULL groups: the MERGE fold
+              // coalesces partial sums to 0, but sum(c) over zero
+              // non-null values is NULL
+              Some(byName(s"__sum_${a.name}")).filter(_.dataType == al.dataType)
+                .map(s => If(EqualTo(byName(s"__cnt_${a.name}"), Literal(0L)),
+                  Literal(null, s.dataType), s))
             case Average(a: AttributeReference, _)
                 if e.sumCols.contains(a.name) &&
                   al.dataType == DoubleType =>
-              // avg(c) divides by the NON-NULL count — without cnt_c in
-              // the view the rewrite must refuse, not approximate
-              for {
-                s <- byName.get(s"__sum_${a.name}")
-                c <- byName.get(s"__cnt_${a.name}")
-              } yield If(EqualTo(c, Literal(0L)), Literal(null, DoubleType),
-                Divide(Cast(s, DoubleType), Cast(c, DoubleType)))
+              // avg(c) divides by the NON-NULL count
+              val c = byName(s"__cnt_${a.name}")
+              Some(If(EqualTo(c, Literal(0L)), Literal(null, DoubleType),
+                Divide(Cast(byName(s"__sum_${a.name}"), DoubleType), Cast(c, DoubleType))))
             case _ => None
           }
           repl match {

@@ -39,8 +39,8 @@ object FileStats {
     * current-row scan (`_end_timestamp IS NULL`) hits this constantly.
     * Parquet footers carry null counts for free
     * (`Statistics.getNumNulls`), so the harvest cost is unchanged.
-    * Tables committed before this landed simply lack the entries and
-    * fall back to "never prune" — safe. */
+    * A column whose footer lacks a null count gets no entry, and its
+    * null probes never prune — safe. */
   val NullsPrefix = "__nulls_"
 
   /** One file's footer: (rows, column → (min,max) ++ __nulls_ entries).
@@ -201,23 +201,25 @@ object FileStats {
   /** Can the file at table-relative path `rel`, with footer `stats`, hold
     * a row matching `predicate`? The one per-file test behind both
     * `GraftTable.pruneFiles` and the scan's `LogFileIndex.listFiles`.
-    * `__part_k=v` / `k=v` path segments add exact stats for partition
-    * columns a legacy-layout file does not store; footer stats win where
-    * both exist. A file with no stats is always kept. */
+    * `__part_k=v` path segments add exact stats for partition columns;
+    * footer stats win where both exist. A file with no stats is always
+    * kept. */
   def fileMightMatch(rel: String, stats: Stats, predicate: Expression,
       schema: StructType): Boolean = {
     val st = pathStats(rel) ++ stats
     st.isEmpty || mightMatch(st, predicate, schema)
   }
 
-  /** Partition values from `k=v` directory segments. Hive-style writers
-    * escape the value (`a:b` is stored as `a%3Ab`) and write a null as
-    * the default-partition marker, which carries no value. */
+  /** Partition values from the `__part_k=v` directory segments
+    * `GraftTable.writeData` lays out. Spark escapes the value (`a:b` is
+    * stored as `a%3Ab`) and writes a null as the default-partition
+    * marker, which carries no value. */
   private def pathStats(rel: String): Stats =
-    rel.split("/").iterator.filter(_.contains("=")).map(_.split("=", 2))
+    rel.split("/").iterator.filter(_.startsWith("__part_"))
+      .map(_.stripPrefix("__part_").split("=", 2))
       .collect { case Array(k, v) if v != ExternalCatalogUtils.DEFAULT_PARTITION_NAME =>
         val value = ExternalCatalogUtils.unescapePathName(v)
-        k.stripPrefix("__part_") -> ((value, value))
+        k -> ((value, value))
       }.toMap
 
   /** Conjuncts of `col <op> literal` shape extracted from a predicate. */

@@ -32,17 +32,20 @@ final case class Commit(
     // deletion-vector sidecar files (merge-on-read deletes), same
     // add/remove delta semantics as data files
     addedDvFiles: Seq[String] = Nil,
-    removedDvFiles: Seq[String] = Nil)
+    removedDvFiles: Seq[String] = Nil,
+    // the log format the commit file records (see GraftTable.LogFormat)
+    format: Int = GraftTable.LogFormat)
 
 /** A table's state at one version: live data files (table-relative path
   * → footer stats, in the order they became live), live deletion-vector
-  * files, and the version's timestamp, schema, properties and identity
-  * watermark. `next` is the one fold of a commit into a state; a
+  * files, and the version's timestamp, log format, schema, properties and
+  * identity watermark. `next` is the one fold of a commit into a state; a
   * checkpoint is one rendered Snapshot. Stats cover live files only; a
-  * file committed without them (e.g. re-added by an older RESTORE) maps
-  * to an empty map, which pruning keeps. */
+  * file committed without them (its footer could not be read) maps to an
+  * empty map, which pruning keeps. */
 private[tables] final class Snapshot private (
     val version: Long,
+    val format: Int,
     val timestampMs: Long,
     val schemaJson: String,
     val properties: Map[String, String],
@@ -64,8 +67,8 @@ private[tables] final class Snapshot private (
     * file keeps both maps. */
   def next(c: Commit): Snapshot = {
     def at(fs: VectorMap[String, FileStats.Stats], dvs: VectorMap[String, Unit], dead: Int) =
-      new Snapshot(c.version, c.timestampMs, c.schemaJson, c.properties, c.identityHighWatermark,
-        fs, dvs, dead, if (c.schemaJson == schemaJson) parsedSchema else null)
+      new Snapshot(c.version, c.format, c.timestampMs, c.schemaJson, c.properties,
+        c.identityHighWatermark, fs, dvs, dead, if (c.schemaJson == schemaJson) parsedSchema else null)
     if (c.addedFiles.isEmpty && c.removedFiles.isEmpty &&
         c.addedDvFiles.isEmpty && c.removedDvFiles.isEmpty) return at(files, dvFiles, removals)
     val fs = (files -- c.removedFiles) ++
@@ -80,20 +83,19 @@ private[tables] final class Snapshot private (
 }
 
 private[tables] object Snapshot {
-  val empty = new Snapshot(-1L, 0L, null, Map.empty, 0L, VectorMap.empty, VectorMap.empty, 0, null)
+  val empty = new Snapshot(-1L, GraftTable.LogFormat, 0L, null, Map.empty, 0L,
+    VectorMap.empty, VectorMap.empty, 0, null)
 
   /** A state as a checkpoint records it. */
-  def apply(version: Long, timestampMs: Long, schemaJson: String,
+  def apply(version: Long, format: Int, timestampMs: Long, schemaJson: String,
       properties: Map[String, String], identityHighWatermark: Long,
       files: Seq[(String, FileStats.Stats)], dvFiles: Seq[String]): Snapshot =
-    new Snapshot(version, timestampMs, schemaJson, properties, identityHighWatermark,
+    new Snapshot(version, format, timestampMs, schemaJson, properties, identityHighWatermark,
       VectorMap.from(files), VectorMap.from(dvFiles.map(_ -> (()))), 0, null)
 
   /** Count of snapshots built below the tip (tests: tip questions build
     * none, a historical read builds one). */
   private[tables] val replays = new java.util.concurrent.atomic.AtomicLong()
-
-  def replay(commits: Seq[Commit]): Snapshot = commits.foldLeft(empty)(_ next _)
 }
 
 /** Versioned Parquet table ("tacklelog"): a data directory plus a JSON
@@ -112,8 +114,9 @@ private[tables] object Snapshot {
   * A checkpoint, written every `checkpointInterval` commits, is the
   * table's state at its version (live files with their stats, live DV
   * files, schema, properties, identity watermark), so its size follows
-  * the live data, not the history. Logs written before hold checkpoints
-  * of the whole commit history (a JSON array); they stay readable.
+  * the live data, not the history. Every commit and checkpoint records
+  * the log format, [[GraftTable.LogFormat]]; a log of any other format
+  * (one without the field is format 1) is refused when it is loaded.
   *
   * Scale design: the log stores *file lists*, so a snapshot read plans
   * from the log alone — a [[LogFileIndex]] over the live files, with no
@@ -152,13 +155,18 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * `v{tip}` (a log that shrank behind the session's back is reloaded)
     * and reads forward while `v{tip+1}` exists, folding only those
     * commits. A cold (or diverged) view finds the tip by probing version
-    * numbers and builds the state there as time travel does. */
+    * numbers and builds the state there as time travel does; a state of
+    * another log format throws before it is cached, so every read and
+    * write of such a table fails. */
   private def logState: LogState = {
     val cached = logCache.get(path)
     val st =
-      if (cached == null || (cached.tip.version >= 0 && !Files.exists(commitFile(cached.tip.version))))
-        new LogState(stateAt(probeTip()), None)
-      else {
+      if (cached == null || (cached.tip.version >= 0 && !Files.exists(commitFile(cached.tip.version)))) {
+        val tip = stateAt(probeTip())
+        if (tip.version >= 0 && tip.format != LogFormat) throw new IllegalStateException(
+          s"$path has log format ${tip.format}, but this engine reads only log format $LogFormat")
+        new LogState(tip, None)
+      } else {
         val tail = Iterator.iterate(cached.tip.version + 1)(_ + 1)
           .takeWhile(v => Files.exists(commitFile(v))).map(readCommit).toVector
         if (tail.isEmpty) return cached
@@ -209,7 +217,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   private def stateAt(version: Long): Snapshot = {
     val base = Iterator.iterate(version - version % checkpointInterval)(_ - checkpointInterval)
       .takeWhile(_ > 0).find(v => Files.exists(checkpointFile(v)))
-      .fold(Snapshot.empty)(readCheckpoint(_, version))
+      .fold(Snapshot.empty)(readCheckpoint)
     (base.version + 1 to version).foldLeft(base)((s, v) => s.next(readCommit(v)))
   }
 
@@ -233,8 +241,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   private def readCommit(version: Long): Commit = parseCommit(readLogFile(commitFile(version)))
 
-  private def readCheckpoint(version: Long, upTo: Long): Snapshot =
-    parseCheckpoint(readLogFile(checkpointFile(version)), upTo)
+  private def readCheckpoint(version: Long): Snapshot =
+    parseCheckpoint(readLogFile(checkpointFile(version)))
 
   def currentVersion: Long = logState.tip.version
 
@@ -332,53 +340,15 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out)
     }
     val dv = liveDvs
-    val posCols = if (keepPos || dv.nonEmpty) Seq(DvFileCol, DvPosCol) else Nil
-    def withPos(df: DataFrame): DataFrame =
-      if (posCols.isEmpty) df
-      else df
+    val scan = LogFileIndex.read(spark, files, s, stats)
+    val df =
+      if (!keepPos && dv.isEmpty) scan
+      else scan
         .withColumn(DvFileCol, col("_metadata.file_path"))
         .withColumn(DvPosCol, col("_metadata.row_index"))
-    // Legacy-layout detection: files written before the __part_ scheme use
-    // bare Hive `k=v` segments and do NOT store the partition column in
-    // the parquet data — they need per-write-root partition inference
-    // (inference across roots throws CONFLICTING_DIRECTORY_STRUCTURES,
-    // which is why the modern layout stores column copies instead).
-    val parts = partitionColumns
-    // Only inspect segments BELOW the table root: a `k=v` directory above
-    // the table (e.g. the table living at /mnt/date=2020/tbl with a
-    // partition column `date`) must not flip modern files to the legacy
-    // branch, which would root basePath inference outside the table.
-    val tableDepth = Paths.get(path).toAbsolutePath.normalize.getNameCount
-    def legacyKeyIdx(abs: String): Int = {
-      // normalize like tableDepth above: a '.'/'..' segment in the file
-      // path would otherwise shift name indices relative to the table
-      // root and misclassify files as legacy/modern
-      val p = Paths.get(abs).toAbsolutePath.normalize
-      (tableDepth until p.getNameCount).indexWhere { i =>
-        val seg = p.getName(i).toString
-        val j = seg.indexOf('=')
-        j > 0 && !seg.startsWith("__part_") && parts.contains(seg.substring(0, j))
-      } match {
-        case -1 => -1
-        case k  => k + tableDepth
-      }
-    }
-    val (legacy, modern) =
-      if (parts.isEmpty) (Nil, files) else files.partition(legacyKeyIdx(_) >= 0)
-    val modernDf: Option[DataFrame] =
-      if (modern.isEmpty) None
-      else Some(withPos(LogFileIndex.read(spark, modern, s, stats)))
-    val legacyDfs: Seq[DataFrame] = legacy.groupBy { abs =>
-      // same normalization as legacyKeyIdx — the index is positional
-      val p = Paths.get(abs).toAbsolutePath.normalize
-      p.getRoot.resolve(p.subpath(0, legacyKeyIdx(abs))).toString
-    }.toSeq.map { case (root, fs) =>
-      withPos(spark.read.schema(s).option("basePath", root).parquet(fs: _*))
-        .select((s.fieldNames.toSeq ++ posCols).map(col): _*)
-    }
-    val df = (modernDf.toSeq ++ legacyDfs).reduce(_ unionByName _)
     if (dv.isEmpty) df
     else {
+      val posCols = Seq(DvFileCol, DvPosCol)
       val live = df.join(LogFileIndex.read(spark, dv, DvSchema), posCols, "left_anti")
       if (keepPos) live else live.drop(posCols: _*)
     }
@@ -758,12 +728,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * rollback to older versions stop working; the SQL route requires an
     * explicit FORCE for it. */
   def vacuum(retainVersions: Int): Seq[String] = {
-    val keepFrom = math.max(0L, currentVersion - retainVersions)
-    // every retained version's live set, from one fold: what is live at
-    // keepFrom plus every file a later commit added
+    val tip = currentVersion
+    val keepFrom = math.max(0L, tip - retainVersions)
+    // every retained version's live set: what is live at keepFrom plus
+    // every file a later commit added, reading only those commits
     val kept = snapshotAt(keepFrom)
     val referenced = (kept.files.keys ++ kept.dvFiles.keys ++
-        commits.filter(_.version > keepFrom).flatMap(c => c.addedFiles ++ c.addedDvFiles))
+        (keepFrom + 1 to tip).map(readCommit).flatMap(c => c.addedFiles ++ c.addedDvFiles))
       .map(f => Paths.get(path, f).toAbsolutePath.normalize.toString).toSet
     val dvDir = Paths.get(path, "dv")
     val roots = Seq(dataDir, dvDir).filter(Files.isDirectory(_))
@@ -887,6 +858,9 @@ object GraftTable {
 
   private val M = new ObjectMapper()
 
+  /** The log format every commit and checkpoint records, and the only one
+    * this engine reads. A log without the field is format 1. */
+  val LogFormat = 2
 
   /** One table's cached log: the tip [[Snapshot]], and every commit once
     * the history has been asked for. Compared by reference. */
@@ -1013,6 +987,7 @@ object GraftTable {
   private[tables] def renderCommit(c: Commit): String = {
     val n = M.createObjectNode()
     n.put("version", c.version)
+    n.put("format", LogFormat)
     n.put("timestampMs", c.timestampMs)
     n.put("operation", c.operation)
     putStrings(n.putObject("operationParameters"), c.operationParameters)
@@ -1035,6 +1010,7 @@ object GraftTable {
   private[tables] def renderState(s: Snapshot): String = {
     val n = M.createObjectNode()
     n.put("version", s.version)
+    n.put("format", LogFormat)
     n.put("timestampMs", s.timestampMs)
     n.put("schemaJson", s.schemaJson)
     putStrings(n.putObject("properties"), s.properties)
@@ -1049,15 +1025,12 @@ object GraftTable {
     M.writeValueAsString(n)
   }
 
-  /** The state a checkpoint records. A checkpoint written before state
-    * checkpoints is a JSON array of every commit up to (at least) its
-    * version; it is folded up to `upTo`. */
-  private[tables] def parseCheckpoint(json: String, upTo: Long): Snapshot = {
+  /** The state a checkpoint records. */
+  private[tables] def parseCheckpoint(json: String): Snapshot = {
     val n = M.readTree(json)
-    if (n.isArray)
-      Snapshot.replay(n.elements().asScala.map(parseNode).takeWhile(_.version <= upTo).toSeq)
-    else Snapshot(
+    Snapshot(
       version = n.get("version").asLong(),
+      format = formatOf(n),
       timestampMs = n.get("timestampMs").asLong(),
       schemaJson = n.get("schemaJson").asText(),
       properties = strMap(n.get("properties")),
@@ -1068,6 +1041,8 @@ object GraftTable {
   }
 
   private[tables] def parseCommit(json: String): Commit = parseNode(M.readTree(json))
+
+  private def formatOf(n: JsonNode): Int = n.path("format").asInt(1)
 
   private def putStrings(o: ObjectNode, kv: Map[String, String]): Unit =
     kv.foreach { case (k, v) => o.put(k, v) }
@@ -1100,10 +1075,11 @@ object GraftTable {
       identityHighWatermark = n.get("identityHighWatermark").asLong(),
       metrics = n.get("metrics").fields().asScala
         .map(e => e.getKey -> e.getValue.asLong()).toMap,
-      fileStats = Option(n.get("fileStats")).map(_.fields().asScala
-        .map(e => e.getKey -> readStats(e.getValue)).toMap).getOrElse(Map.empty),
-      addedDvFiles = Option(n.get("addedDvFiles")).map(strings).getOrElse(Nil),
-      removedDvFiles = Option(n.get("removedDvFiles")).map(strings).getOrElse(Nil))
+      fileStats = n.get("fileStats").fields().asScala
+        .map(e => e.getKey -> readStats(e.getValue)).toMap,
+      addedDvFiles = strings(n.get("addedDvFiles")),
+      removedDvFiles = strings(n.get("removedDvFiles")),
+      format = formatOf(n))
 }
 
 /** Optimistic-concurrency retry with exponential backoff, mirroring

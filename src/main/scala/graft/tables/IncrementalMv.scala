@@ -44,22 +44,16 @@ object IncrementalMv {
     * between "apply" and "record" cannot split them. */
   def refresh(source: GraftTable, view: GraftTable,
       keys: Seq[String], sumCols: Seq[String]): Refresh = {
+    requireCounts(view, sumCols)
     val applied = view.properties.get("graft.mv.appliedVersion").map(_.toLong).getOrElse(-1L)
     val cur = source.currentVersion
     if (cur == applied) return Refresh(cur, incremental = true)
     val since = if (applied < 0) Nil else (applied + 1 to cur).map(source.commitAt)
     val appendOnly = applied >= 0 && since.forall(c =>
       c.removedFiles.isEmpty && c.addedDvFiles.isEmpty && c.removedDvFiles.isEmpty)
-    // A view created before cnt_<col> landed lacks those columns; the
-    // incremental MERGE's update map references them unconditionally and
-    // would fail analysis. Full recompute instead — the overwrite also
-    // UPGRADES the legacy view to the current schema, so the next
-    // refresh is incremental again (review finding).
-    val viewCols = view.schemaAt().fieldNames.toSet
-    val legacySchema = sumCols.exists(c => !viewCols.contains(s"cnt_$c"))
     val versionProp = Map("graft.mv.appliedVersion" -> cur.toString)
 
-    if (!appendOnly || legacySchema) {
+    if (!appendOnly) {
       view.overwrite(aggOf(source.read(cur), keys, sumCols), "REFRESH MV (full)",
         extraProps = versionProp)
       return Refresh(cur, incremental = false)
@@ -85,6 +79,16 @@ object IncrementalMv {
         extraProps = versionProp)
     } else view.setProperties(versionProp)
     Refresh(cur, incremental = true)
+  }
+
+  /** Refuses a view that lacks the `cnt_<col>` of a summed column: the
+    * incremental MERGE and the avg rewrite both need it, and every view
+    * [[create]] makes has it. */
+  private[graft] def requireCounts(view: GraftTable, sumCols: Seq[String]): Unit = {
+    val cols = view.schemaAt().fieldNames.toSet
+    val missing = sumCols.map(c => s"cnt_$c").filterNot(cols)
+    require(missing.isEmpty, s"${view.path} is not a view of these sum columns: " +
+      s"it lacks ${missing.mkString(", ")} (create it with IncrementalMv.create)")
   }
 
   /** Create the view table and run the first (full) refresh. */

@@ -1,7 +1,5 @@
 package graft.tables
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -243,43 +241,33 @@ object Scd {
   // `_scd1_tombstones_ptr` names the current generation, and the pointer
   // is replaced with an atomic single-file move — so a crash at ANY point
   // leaves either the old or the new generation current, never a missing
-  // ledger. (The previous write-tmp → deleteTree → move sequence had a
-  // window where a crash destroyed the ledger entirely, silently
-  // re-opening the delete-resurrect race the ledger exists to close —
-  // review finding.) Legacy `_scd1_tombstones/` dirs from older writers
-  // are still read; the first swap migrates them to the pointer scheme.
-  // Stale generations and tmp dirs are cleaned opportunistically AFTER a
-  // successful swap.
+  // ledger. With no pointer file there is no ledger. Stale generations
+  // and a leftover pointer tmp are cleaned AFTER a successful swap.
 
   private val LedgerPtr = "_scd1_tombstones_ptr"
-  private val LegacyLedger = "_scd1_tombstones"
+  private val LedgerGen = "_scd1_tombstones_g"
 
   /** The current ledger dir, or None when the table has no ledger. */
   private[tables] def currentLedgerDir(t: GraftTable): Option[java.nio.file.Path] = {
     val ptr = java.nio.file.Paths.get(t.path, LedgerPtr)
-    if (java.nio.file.Files.isRegularFile(ptr)) {
-      val name = new String(java.nio.file.Files.readAllBytes(ptr), "UTF-8").trim
-      val dir = java.nio.file.Paths.get(t.path, name)
-      // A pointer naming a MISSING generation is corruption, not "no
-      // ledger": returning None here would silently drop tombstone
-      // protection and re-open the delete-resurrect race the ledger
-      // exists to close. Fail loudly; fall back to legacy only when the
-      // pointer file itself is absent.
-      if (!java.nio.file.Files.isDirectory(dir))
-        throw new IllegalStateException(
-          s"SCD1 tombstone-ledger pointer ${ptr} names missing generation " +
-            s"'$name' — ledger storage is corrupt; restore the generation " +
-            "dir or remove the pointer to rebuild from scratch")
-      Some(dir)
-    } else {
-      val legacy = java.nio.file.Paths.get(t.path, LegacyLedger)
-      if (java.nio.file.Files.isDirectory(legacy)) Some(legacy) else None
-    }
+    if (!java.nio.file.Files.isRegularFile(ptr)) return None
+    val name = new String(java.nio.file.Files.readAllBytes(ptr), "UTF-8").trim
+    val dir = java.nio.file.Paths.get(t.path, name)
+    // A pointer naming a MISSING generation is corruption, not "no
+    // ledger": returning None here would silently drop tombstone
+    // protection and re-open the delete-resurrect race the ledger
+    // exists to close. Fail loudly.
+    if (!java.nio.file.Files.isDirectory(dir))
+      throw new IllegalStateException(
+        s"SCD1 tombstone-ledger pointer ${ptr} names missing generation " +
+          s"'$name' — ledger storage is corrupt; restore the generation " +
+          "dir or remove the pointer to rebuild from scratch")
+    Some(dir)
   }
 
   /** Write `m` as the new ledger generation and atomically repoint. */
   private def swapLedger(t: GraftTable, m: DataFrame): Unit = {
-    val gen = s"${LegacyLedger}_g${java.util.UUID.randomUUID.toString.take(8)}"
+    val gen = s"$LedgerGen${java.util.UUID.randomUUID.toString.take(8)}"
     m.write.mode("overwrite").parquet(
       java.nio.file.Paths.get(t.path, gen).toString)
     val ptr = java.nio.file.Paths.get(t.path, LedgerPtr)
@@ -288,18 +276,12 @@ object Scd {
     java.nio.file.Files.move(tmpPtr, ptr,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // post-swap cleanup: stale generations, tmp leftovers, legacy dir
-    val root = java.nio.file.Paths.get(t.path)
-    val s = java.nio.file.Files.list(root)
-    val stale =
-      try s.iterator()
-        .asScala.toList.filter { p =>
-          val n = p.getFileName.toString
-          (n.startsWith(s"${LegacyLedger}_g") && n != gen) ||
-            n.startsWith(s"${LegacyLedger}_tmp") || n == LegacyLedger ||
-            n == s"$LedgerPtr.tmp" // crash between ptr write and move
-        }
-      finally s.close()
+    // post-swap cleanup: stale generations and tmp leftovers
+    val stale = GraftTable.listDir(java.nio.file.Paths.get(t.path)).filter { p =>
+      val n = p.getFileName.toString
+      (n.startsWith(LedgerGen) && n != gen) ||
+        n == s"$LedgerPtr.tmp" // crash between ptr write and move
+    }
     stale.foreach(GraftTable.deleteTree)
   }
 

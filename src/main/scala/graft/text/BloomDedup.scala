@@ -135,54 +135,12 @@ object BloomDedup {
   // build-once / maintain-incrementally / compact-on-trigger lifecycle as
   // DedupIndex's ingest-loop compaction.
 
-  /** Incremental append: merge `docs`' fingerprints into the persisted
-    * shard filters. New partial filters are built executor-side with the
-    * index's ORIGINAL per-shard capacity + fpp — BloomFilter.create is
-    * deterministic in (expectedItems, fpp), so bit arrays stay
-    * OR-merge-compatible with the persisted ones. The merge itself is
-    * shard-cardinality work (≤ `shards` rows on each side — the same
-    * bounded working set [[load]] collects), then one overwrite commit. */
-  /** The per-shard capacity the persisted filters were sized for. For an
-    * index persisted before the capacity property existed, the capacity
-    * is RE-DERIVED from a stored filter, self-validating: binary-search
-    * the smallest n whose `create(n, fpp)` reaches the stored bit size
-    * (bitSize is monotone in n), then scan its neighborhood for a value
-    * whose fresh filter actually OR-merges with the stored one (the
-    * sizing internals changed across Spark's filter versions, so a
-    * formula inversion is fragile; an attempted merge is the ground
-    * truth). Defaulting a legacy index to capacity 1 would build
-    * append-time partials bit-incompatible with the stored filters and
-    * crash the merge (review finding). */
+  /** The per-shard capacity the persisted filters were sized for, which
+    * [[build]] and [[rebuildIfSaturated]] record. */
   private def capacityOf(t: GraftTable): Long =
-    t.properties.get(CapacityProp).map(_.toLong).getOrElse {
-      val fpp = t.properties(FppProp).toDouble
-      t.read().select("filter").limit(1).collect().headOption match {
-        case None => 1L // empty index: nothing persisted to be compatible with
-        case Some(row) =>
-          val bytes = row.getAs[Array[Byte]](0)
-          val bits = BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(bytes)).bitSize()
-          var lo = 1L
-          var hi = 1L
-          while (BloomFilter.create(hi, fpp).bitSize() < bits) hi *= 2
-          while (lo < hi) {
-            val mid = lo + (hi - lo) / 2
-            if (BloomFilter.create(mid, fpp).bitSize() >= bits) hi = mid
-            else lo = mid + 1
-          }
-          def compatible(n: Long): Boolean =
-            try {
-              BloomFilter.create(n, fpp).mergeInPlace(BloomFilter.readFrom(
-                new java.io.ByteArrayInputStream(bytes)))
-              true
-            } catch { case _: Exception => false }
-          (math.max(1L, lo - 8) to lo + 8).find(compatible).getOrElse(
-            throw new IllegalStateException(
-              s"cannot derive a merge-compatible capacity for legacy bloom " +
-                s"index ${t.path} (stored bitSize=$bits, fpp=$fpp); rebuild " +
-                "the index from the corpus (BloomDedup.build) to upgrade it"))
-      }
-    }
+    t.properties.getOrElse(CapacityProp, throw new IllegalArgumentException(
+      s"${t.path} is not a bloom index table: property $CapacityProp missing " +
+        "(build one with BloomDedup.build)")).toLong
 
   /** OR-merge (filter bytes, items) rows that share a shard id. Duplicate
     * shard rows are LEGAL: two appends racing on an EMPTY index both
@@ -207,6 +165,13 @@ object BloomDedup {
       }
     }
 
+  /** Incremental append: merge `docs`' fingerprints into the persisted
+    * shard filters. New partial filters are built executor-side with the
+    * index's ORIGINAL per-shard capacity + fpp — BloomFilter.create is
+    * deterministic in (expectedItems, fpp), so bit arrays stay
+    * OR-merge-compatible with the persisted ones. The merge itself is
+    * shard-cardinality work (≤ `shards` rows on each side — the same
+    * bounded working set [[load]] collects), then one overwrite commit. */
   def append(t: GraftTable, docs: DataFrame, textCol: String = "text"): Unit = {
     val s = docs.sparkSession
     val props = t.properties
@@ -255,13 +220,8 @@ object BloomDedup {
       }
     }
     import s.implicits._
-    // a legacy index's derived capacity rides the same commit, so the
-    // self-validating derivation runs once, not on every later call
-    val capProp =
-      if (props.contains(CapacityProp)) Map.empty[String, String]
-      else Map(CapacityProp -> capacity.toString)
     t.overwriteSnapshot(merged.toDF("shard", "filter", "items"),
-      snapshotFiles, "BLOOM INDEX APPEND", extraProps = capProp)
+      snapshotFiles, "BLOOM INDEX APPEND")
   }
 
   /** Saturation ratio: max over shards of items / sized-for capacity.

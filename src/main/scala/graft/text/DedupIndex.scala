@@ -32,11 +32,6 @@ import graft.tables.GraftTable
   * from the commit log's file list ([[graft.tables.LogFileIndex]]), with
   * no listing job over the index's files. Periodic
   * `Maintenance.optimize` compacts them.
-  *
-  * Indexes written with the earlier `__band`-partitioned layout keep
-  * working unchanged: an append null-fills their `__band` column through
-  * the table's schema evolution, and every reader selects
-  * `(doc_id, shingle)` only.
   */
 object DedupIndex {
 

@@ -179,4 +179,21 @@ class MvRewriteSpec extends SparkTestBase
     assert(p.contains("mv sp-view") && !p.contains("mv sp-src"), s"must scan the view:\n$p")
     assert(q.agg(sum("n")).head().getLong(0) == src.read().count())
   }
+
+  test("a view without cnt_<col> is refused at register, naming the missing columns") {
+    val o = graft.Tables.t(spark, sf, "orders")
+    val src = GraftTable.createFrom(spark, scratch("mv5-src"), o)
+    val view = GraftTable.createFrom(spark, scratch("mv5-view"), src.read()
+      .groupBy("o_orderstatus")
+      .agg(count(lit(1)).as("cnt"), sum("o_totalprice").as("sum_o_totalprice")))
+    val err = intercept[IllegalArgumentException] {
+      MvRewrite.register(src, view, Seq("o_orderstatus"), Seq("o_totalprice"))
+    }
+    assert(err.getMessage.contains(view.path) && err.getMessage.contains("cnt_o_totalprice"),
+      err.getMessage)
+    assert(MvRewrite.cachedSnapshotVersions.isEmpty)
+    MvRewrite.enable(spark)
+    val q = src.read().groupBy("o_orderstatus").agg(sum("o_totalprice").as("s"))
+    assert(!planOf(q).contains("mv5-view"), "a refused view is never registered")
+  }
 }

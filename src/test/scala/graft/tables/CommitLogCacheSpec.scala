@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -12,10 +14,9 @@ import graft.{SparkTestBase, Tables}
 /** Commit-log caching + checkpointing: after warm-up, table operations do
   * zero physical log reads; a cold start finds the tip by probing version
   * numbers, never listing `_log`, and reads checkpoint + tail instead of
-  * every v*.json. The tip snapshot,
-  * extended commit by commit, and every checkpoint-plus-tail snapshot
-  * equal a full replay at every version, for state checkpoints and for
-  * the full-history checkpoints older logs hold. */
+  * every v*.json. The tip snapshot, extended commit by commit, and every
+  * checkpoint-plus-tail snapshot equal a full replay at every version. A
+  * log of another format is refused by every entry point. */
 class CommitLogCacheSpec extends SparkTestBase {
 
   /** Versions of the checkpoint files in `t`'s log. */
@@ -29,18 +30,6 @@ class CommitLogCacheSpec extends SparkTestBase {
 
   private def checkpointJson(t: GraftTable, c: Long): String =
     new String(Files.readAllBytes(checkpointFile(t, c)), "UTF-8").trim
-
-  /** Rewrite every checkpoint of `t` in the full-history format logs
-    * written before state checkpoints hold: a JSON array of every commit
-    * up to its version. */
-  private def rewriteAsHistoryCheckpoints(t: GraftTable): Unit = {
-    val cs = t.commits
-    checkpoints(t).foreach { c =>
-      Files.write(checkpointFile(t, c),
-        cs.takeWhile(_.version <= c).map(GraftTable.renderCommit)
-          .mkString("[", ",\n", "]").getBytes("UTF-8"))
-    }
-  }
 
   /** A cold load: exactly the newest checkpoint at or below the tip (none
     * below v10) plus the commits after it read, and the tip it found is
@@ -129,7 +118,7 @@ class CommitLogCacheSpec extends SparkTestBase {
         assert(view.dvAt(v) === dvs.map(f => Paths.get(view.path, f).toString), s"$tag dvs@$v")
         val stats = files.map(f => f -> statsOf.getOrElse(f, Map.empty))
         assert(view.statsAt(v).toSeq === stats, s"$tag stats@$v")
-        val replayed = Snapshot.replay(view.commits.takeWhile(_.version <= v))
+        val replayed = view.commits.takeWhile(_.version <= v).foldLeft(Snapshot.empty)(_ next _)
         assert(replayed.files.toSeq === stats && replayed.dvFiles.keys.toSeq === dvs,
           s"$tag replay@$v")
       }
@@ -180,7 +169,7 @@ class CommitLogCacheSpec extends SparkTestBase {
       ckpts.foreach { c =>
         val json = checkpointJson(t, c)
         assert(!json.startsWith("["), s"seed $seed checkpoint $c is a state")
-        val s = GraftTable.parseCheckpoint(json, c)
+        val s = GraftTable.parseCheckpoint(json)
         assert(s.version === c && s.files.toSeq === t.snapshotAt(c).files.toSeq &&
           s.dvFiles.keys.toSeq === t.snapshotAt(c).dvFiles.keys.toSeq, s"seed $seed checkpoint $c")
       }
@@ -188,21 +177,6 @@ class CommitLogCacheSpec extends SparkTestBase {
       // cold load through the newest checkpoint plus its tail
       val cold = coldLoad(t, s"seed $seed")
       (0L to tip).foreach(v => expect(cold, v, s"seed $seed cold"))
-
-      // a log whose checkpoints hold the full history (the format written
-      // before state checkpoints) loads, time-travels and takes commits;
-      // the next checkpoint it writes is a state
-      rewriteAsHistoryCheckpoints(t)
-      val old = coldLoad(t, s"seed $seed history checkpoints")
-      (0L to tip).foreach(v => expect(old, v, s"seed $seed history checkpoints"))
-      while (old.currentVersion % 10 != 0 || checkpoints(old).max != old.currentVersion) {
-        val fs = Seq(newFile())
-        old.commit("WRITE", fs, Nil, schema, fileStats = statsFor(fs))
-      }
-      val formats = checkpoints(old).map(checkpointJson(old, _).head)
-      assert(formats.last === '{' && formats.init.forall(_ == '['), s"seed $seed formats")
-      val mixed = coldLoad(old, s"seed $seed mixed checkpoints")
-      (0L to mixed.currentVersion).foreach(v => expect(mixed, v, s"seed $seed mixed"))
     }
   }
 
@@ -415,5 +389,76 @@ class CommitLogCacheSpec extends SparkTestBase {
     val ids = t.read().select("c_custkey").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq === (1L to 200L))
     assert(t.identityHighWatermark === 200L)
+  }
+
+  test("vacuum(retain) reads the checkpoint below the horizon, its tail and the retained commits") {
+    val t = fileOnlyTable("vacuum", 59)
+    (1 to 59).foreach { i =>
+      val f = Paths.get(t.path, s"data/c$i/part-0.parquet")
+      Files.createDirectories(f.getParent)
+      Files.createFile(f)
+    }
+    // the reference: every file no version from the horizon on references,
+    // by the whole history
+    val keepFrom = t.currentVersion - 3
+    val referenced = (t.snapshotAt(keepFrom).files.keys ++
+      t.commits.filter(_.version > keepFrom).flatMap(_.addedFiles)).toSet
+    val expected = (1 to 59).map(i => s"data/c$i/part-0.parquet").filterNot(referenced)
+    assert(expected.nonEmpty)
+
+    GraftTable.clearLogCache(t.path)
+    val cold = GraftTable.load(spark, t.path)
+    val reads = GraftTable.logFileReads.get()
+    val deleted = cold.vacuum(3)
+    assert(GraftTable.logFileReads.get() - reads <= 1 + 9 + 3,
+      "one checkpoint, the commits after it up to the horizon, and the retained commits")
+    assert(deleted.map(cold.relPath).sorted === expected.sorted)
+  }
+
+  test("a log of another format is refused by every entry point, and nothing is written to it") {
+    import spark.implicits._
+    val path = scratch("format")
+    val t = GraftTable.createFrom(spark, path, Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    (1 to 10).foreach(i => t.setProperties(Map("k" -> i.toString)))
+    val tip = t.currentVersion
+    val log = Paths.get(path, "_log")
+    val mapper = new ObjectMapper()
+    def rewrite(file: java.nio.file.Path)(edit: ObjectNode => Unit): Unit = {
+      val n = mapper.readTree(Files.readAllBytes(file)).asInstanceOf[ObjectNode]
+      edit(n)
+      Files.write(file, mapper.writeValueAsBytes(n))
+    }
+    val logFiles = GraftTable.listDir(log)
+    assert(logFiles.exists(_.getFileName.toString.startsWith("checkpoint-v")))
+    logFiles.foreach(f => assert(mapper.readTree(Files.readAllBytes(f)).get("format").asInt() ===
+      GraftTable.LogFormat, s"$f records the log format"))
+    def tree(): Seq[String] = GraftTable.walkDir(Paths.get(path)).map(_.toString).sorted
+    def refused(format: Int)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      Seq(path, s"log format $format", s"log format ${GraftTable.LogFormat}")
+        .foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+    }
+
+    // a log without the field: format 1
+    logFiles.foreach(rewrite(_)(_.remove("format")))
+    GraftTable.clearAllCaches()
+    val before = tree()
+    refused(1)(GraftTable.load(spark, path))
+    refused(1)(t.read())
+    refused(1)(t.append(Seq((3L, "c")).toDF("id", "v")))
+    refused(1)(MergeOps.delete(t, "id = 1"))
+    refused(1)(GraftTable.load(spark, path)) // no refused state was cached
+    assert(tree() === before, "a refused table is not written")
+
+    // a log whose tip was written by a newer format
+    logFiles.foreach(rewrite(_)(_.put("format", GraftTable.LogFormat)))
+    rewrite(log.resolve(f"v$tip%020d.json"))(_.put("format", 3))
+    refused(3)(GraftTable.load(spark, path))
+    refused(3)(t.append(Seq((3L, "c")).toDF("id", "v")))
+    assert(tree() === before, "a refused table is not written")
+
+    GraftTable.deleteTree(Paths.get(path))
+    val fresh = GraftTable.createFrom(spark, path, Seq((9L, "z")).toDF("id", "v"))
+    assert(fresh.read().as[(Long, String)].collect().toSeq === Seq((9L, "z")))
   }
 }

@@ -53,35 +53,20 @@ class IncrementalMvSpec extends SparkTestBase {
     assert(c.properties("graft.mv.appliedVersion") === src.currentVersion.toString)
   }
 
-  test("legacy view without cnt_<col> falls back to full recompute and upgrades the schema") {
-    // a view created before cnt_<col> landed: keys ++ cnt ++ sum_<col>
-    // only — the incremental MERGE references cnt_<col> unconditionally
-    // and would fail analysis (review finding)
+  test("a view without cnt_<col> is refused, naming the missing columns") {
     val src = GraftTable.createFrom(spark, scratch("mvsrc4"),
       orders.filter(col("o_orderkey") % 2 === 0))
-    val legacyAgg = src.read().groupBy("o_orderstatus")
+    val noCounts = src.read().groupBy("o_orderstatus")
       .agg(count(lit(1)).as("cnt"), sum("o_totalprice").as("sum_o_totalprice"))
-    val view = GraftTable.createFrom(spark, scratch("mv4"), legacyAgg)
-    view.setProperties(Map("graft.mv.appliedVersion" -> src.currentVersion.toString))
-    assert(!view.schemaAt().fieldNames.contains("cnt_o_totalprice"))
-
-    src.append(orders.filter(col("o_orderkey") % 2 === 1))
-    val r = IncrementalMv.refresh(src, view, Seq("o_orderstatus"), Seq("o_totalprice"))
-    assert(!r.incremental, "a legacy schema must force the full path")
-    val (g, e) = (got(view), expect(src))
-    assert(g.keySet === e.keySet)
-    g.foreach { case (k, (c, s)) =>
-      assert(c === e(k)._1); assert(math.abs(s - e(k)._2) < 1e-6)
+    val view = GraftTable.createFrom(spark, scratch("mv4"), noCounts)
+    view.setProperties(Map("graft.mv.appliedVersion" -> "-1"))
+    val before = view.currentVersion
+    val err = intercept[IllegalArgumentException] {
+      IncrementalMv.refresh(src, view, Seq("o_orderstatus"), Seq("o_totalprice"))
     }
-    // the overwrite upgraded the schema, so the NEXT refresh is incremental
-    assert(view.schemaAt().fieldNames.contains("cnt_o_totalprice"))
-    src.append(orders.limit(300))
-    val r2 = IncrementalMv.refresh(src, view, Seq("o_orderstatus"), Seq("o_totalprice"))
-    assert(r2.incremental, "the upgraded view must take the incremental path")
-    val (g2, e2) = (got(view), expect(src))
-    g2.foreach { case (k, (c, s)) =>
-      assert(c === e2(k)._1); assert(math.abs(s - e2(k)._2) < 1e-6)
-    }
+    assert(err.getMessage.contains(view.path) && err.getMessage.contains("cnt_o_totalprice"),
+      err.getMessage)
+    assert(view.currentVersion === before, "a refused refresh commits nothing")
   }
 
   test("non-append history falls back to a full recompute") {

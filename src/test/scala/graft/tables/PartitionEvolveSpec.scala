@@ -1,5 +1,7 @@
 package graft.tables
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.functions._
 
 import graft.{SparkTestBase, Tables}
@@ -26,6 +28,24 @@ class PartitionEvolveSpec extends SparkTestBase {
     assert(kept.forall(_.contains("o_orderstatus=F")))
     assert(t.read().filter("o_orderstatus = 'F'").count() ===
       o.filter(col("o_orderstatus") === "F").count())
+  }
+
+  test("table rooted under a k=v directory keeps modern files modern") {
+    // a table living at .../k=2020/tbl, with `k` also a partition column:
+    // the directory above the table partitions none of its files
+    val root = Paths.get(scratch("part-root"), "k=2020", "tbl").toString
+    val df = Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "k", "v")
+    val t = GraftTable.create(spark, root, df.schema,
+      Map("graft.partitionBy" -> "k"))
+    t.append(df)
+    val got = t.read().select("id", "k", "v").as[(Long, String, Int)]
+      .collect().sortBy(_._1).toSeq
+    assert(got === Seq((1L, "a", 10), (2L, "b", 20)))
+    // pruning by partition value keeps exactly the b file
+    val bFiles = t.filesAt().filter(_.contains("/__part_k=b/"))
+    val (kept, total) = t.pruneFiles("k = 'b'")
+    assert(bFiles.size === 1 && total === t.filesAt().size && total > 1)
+    assert(kept === bFiles)
   }
 
   test("schema evolution: appended column becomes null for old rows") {

@@ -100,25 +100,19 @@ class BloomDedupSpec extends SparkTestBase {
     assert(BloomDedup.saturation(t) >= s0)
   }
 
-  test("append to a legacy index (no capacity property) derives a compatible size") {
-    // indexes persisted before the capacity property existed must append
-    // without an IncompatibleMergeException: capacity is re-derived from
-    // the stored filter's bit array + fpp (review finding: the old
-    // default of 1 built bit-incompatible partials)
-    val half = corpus.filter(col("doc_id") % 2 === 0)
-    val t0 = BloomDedup.build(half, scratch("bloomleg0"), shards = 4)
-    val legacyPath = scratch("bloomleg")
-    val legacy = GraftTable.create(spark, legacyPath,
-      t0.schemaAt(), Map("graft.bloom.fpp" -> "0.01", "graft.bloom.shards" -> "4"))
-    legacy.append(t0.read(), "BLOOM INDEX BUILD")
-    assert(!legacy.properties.contains("graft.bloom.capacity"))
-    val s0 = BloomDedup.saturation(legacy)
-    assert(s0 > 0 && s0 <= 2.0, s"derived capacity implausible: saturation $s0")
-    BloomDedup.append(legacy, corpus.filter(col("doc_id") % 2 =!= 0))
-    val idx = BloomDedup.load(legacy)
-    corpus.select(BloomDedup.fp(col("text")).as("f")).collect()
-      .foreach(r => assert(idx.mightContain(r.getLong(0)),
-        "legacy append lost a member"))
+  test("an index without its capacity property is refused, naming the table") {
+    val t0 = BloomDedup.build(corpus.limit(50), scratch("bloomnocap0"), shards = 4)
+    val path = scratch("bloomnocap")
+    val t = GraftTable.create(spark, path, t0.schemaAt(),
+      t0.properties - "graft.bloom.capacity")
+    t.append(t0.read(), "BLOOM INDEX BUILD")
+    val before = t.currentVersion
+    val err = intercept[IllegalArgumentException] {
+      BloomDedup.append(t, corpus.limit(10))
+    }
+    assert(err.getMessage.contains(path) && err.getMessage.contains("graft.bloom.capacity"),
+      err.getMessage)
+    assert(t.currentVersion === before)
   }
 
   test("saturated index rebuilds; probe results unchanged; fpp restored") {

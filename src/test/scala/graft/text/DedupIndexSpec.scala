@@ -15,8 +15,7 @@ import graft.tables.GraftTable
   * append that leaves the index's properties as built, one index version
   * per append with the superseded postings still readable one version
   * back, two index scans and two SQL executions per probe, one for a
-  * fresh-id append, indexes in the earlier band-partitioned layout, and
-  * the n-from-properties contract. */
+  * fresh-id append, and the n-from-properties contract. */
 class DedupIndexSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -233,45 +232,6 @@ class DedupIndexSpec extends SparkTestBase {
     assert(probe >= 1 && probe <= 2, s"a probe must be at most two actions, ran $probe SQL executions")
     val append = observe { DedupIndex.append(t, batch) }.sqlExecutions
     assert(append == 1, s"a fresh-id append must be the posting write alone, ran $append")
-  }
-
-  test("an index in the band-partitioned layout still appends, supersedes and probes") {
-    // the layout of indexes built before the posting table went
-    // unpartitioned, written by hand: `__band` column, its directory
-    // partitioning and the bands property
-    val path = scratch("dedupidx9")
-    val legacyProps = Map("graft.partitionBy" -> "__band",
-      "graft.dedup.n" -> "5", "graft.dedup.bands" -> "4")
-    val bandGrams = DedupOps.shingleTable(d, 5)
-      .withColumn("__band", pmod(col("shingle"), lit(4L)).cast("int"))
-    val t = GraftTable.create(spark, path, bandGrams.schema, legacyProps)
-    t.append(bandGrams.repartition(4, col("__band")), "DEDUP INDEX BUILD")
-    val first = batchOf(30, 500000, " tail y")
-    val (reingested, otherText) = d.orderBy("doc_id").limit(2)
-      .as[(Long, String)].collect() match { case Array(a, b) => (a._1, b._2) }
-    val before = t.filesAt().toSet
-    DedupIndex.append(t, first.coalesce(1))
-    val appended = t.filesAt().filterNot(before)
-    assert(appended.size == 1 && appended.head.contains("__part___band=__HIVE_DEFAULT_PARTITION__"),
-      s"expected one file in the null-band dir, got $appended")
-    // supersede: doc `reingested` now carries another doc's text
-    DedupIndex.append(t, Seq((reingested, otherText)).toDF("doc_id", "text"))
-    assert(legacyProps.toSet.subsetOf(t.properties.toSet), s"${t.properties}")
-    val probe = first.select((col("doc_id") + 200000).as("doc_id"),
-        concat(col("text"), lit(" z")).as("text"))
-      .unionByName(Seq((990000L, otherText)).toDF("doc_id", "text"))
-    val viaLegacy = DedupIndex.dedupBatch(GraftTable.load(spark, path), probe, 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    val corpusNow = d.filter(col("doc_id") =!= reingested).unionByName(first)
-      .unionByName(Seq((reingested, otherText)).toDF("doc_id", "text"))
-    val inSession = DedupOps.incrementalJaccardPairs(
-        DedupOps.shingleTable(corpusNow, 5), probe, n = 5, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(viaLegacy == inSession)
-    assert(viaLegacy.contains((reingested, 990000L, 1.0)),
-      s"the superseded doc must pair at 1.0 with a copy of its new text: $viaLegacy")
-    assert(viaLegacy.exists { case (d1, d2, _) => d1 >= 500000 && d1 < 700000 && d2 >= 700000 },
-      "appended postings must be probe-visible")
   }
 
   test("a non-index table is rejected with a clear error") {
